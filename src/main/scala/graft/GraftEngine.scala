@@ -857,12 +857,15 @@ final class GraftEngine(val spark: SparkSession, val dataDir: String) {
         round(col("overlap_est").cast("double") / col("distinct_a"), 4))
   }
 
-  /** Release session-pinned kernels and served indexes (the lifecycle
-    * hook Bench/Verify call after their sweeps).
+  /** Release every module memo: session-pinned kernels, served
+    * indexes, the trained ALS model and the incident table (the
+    * lifecycle hook Bench/Verify call after their sweeps).
     */
   def releaseCaches(): Unit = {
     graft.queries.TextOps.releaseCaches()
     graft.queries.VectorOps.releaseCaches()
+    graft.queries.EventOps.releaseCaches()
+    graft.queries.RecoOps.releaseCaches()
   }
 }
 

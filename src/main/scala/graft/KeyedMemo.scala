@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
   * the session-scoped caches (VectorOps' served indexes, TextOps'
   * trained-BPE memo) hold multi-second Spark fits, and a single global
   * `synchronized` around `getOrElseUpdate` serialized every build — a
-  * concurrent query thread blocked on an UNRELATED index's KMeans fit.
+  * concurrent query thread blocked on an UNRELATED index's build.
   *
   * Shape: ConcurrentHashMap installs a cheap lazy holder under its
   * per-bin lock (`computeIfAbsent`'s mapping function only constructs

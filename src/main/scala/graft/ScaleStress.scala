@@ -109,8 +109,9 @@ object ScaleStress {
       // the 10× corpus through the bigram LM; OOV builds its top-1024
       // vocab in-plan over 10× tokens; decay scans events (copied 1×)
       "q130_ccnet_buckets", "q131_vocab_oov", "q132_decay_weights",
-      // round-6 additions: IVF-PQ re-trains 9 KMeans on the 10× corpus
-      // (fit-bound, linear in rows); the BPE trainer's working set is
+      // round-6 additions: IVF-PQ trains on a sample capped at 256
+      // rows per centroid, so only its one encode pass grows with the
+      // 10× corpus; the BPE trainer's working set is
       // the distinct-word table, which replication leaves UNCHANGED —
       // only the one corpus scan grows; exact-substring rides 45×
       // more same-family pairs whose runs span whole docs

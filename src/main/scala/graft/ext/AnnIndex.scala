@@ -1,44 +1,43 @@
 package graft.ext
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.CosineSimilarity
 
-/** Trained IVF (inverted-file) ANN index: KMeans centroids partition
+/** Trained IVF (inverted-file) ANN index: k-means centroids partition
   * the corpus into cells; queries probe only their `nProbe` nearest
   * cells — the standard recall/cost dial of production vector search.
   *
-  * Scale posture: the centroid table is tiny (k rows) and broadcasts;
-  * cell assignment is one codegen'd pass over the corpus; a probe
-  * touches nProbe/k of the data. Persist `assigned` partitioned by
-  * `cell` and a probe prunes files, not just rows.
+  * Scale posture: the centroids train on the driver from a bounded,
+  * partition-independent sample (`Quantizer` — one Spark job); the
+  * centroid table is tiny (k rows) and broadcasts; cell assignment is
+  * one compiled map over the corpus; a probe touches nProbe/k of the
+  * data. Persist `assigned` partitioned by `cell` and a probe prunes
+  * files, not just rows.
   */
 object AnnIndex {
 
   final case class Index(centroids: DataFrame, assigned: DataFrame, k: Int)
 
-  /** Fit KMeans (seeded) on the embedding column and assign every
-    * vector to its cell. `embeddings`: (vec_id long, embedding
+  /** Train k seeded centroids on the embedding column and assign every
+    * vector to its nearest one (`Quantizer.nearest` against the stored
+    * float centroids). `embeddings`: (vec_id long, embedding
     * array<float>).
     */
   def build(spark: SparkSession, embeddings: DataFrame, k: Int = 16,
       seed: Long = 42): Index = {
     CosineSimilarity.ensureRegistered(spark)
-    val vecs = embeddings.withColumn("fv", array_to_vector(col("embedding")))
-    val model = new KMeans().setK(k).setSeed(seed).setFeaturesCol("fv")
-      .setPredictionCol("cell").fit(vecs)
-    val cents = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      (i, c.toArray.map(_.toFloat))
-    }
+    val points = Quantizer.trainingSet(
+      Quantizer.sample(embeddings, Quantizer.PointsPerCentroid * k, seed), k)
+    val cents = Quantizer.train(points, 0, points.headOption.fold(0)(_.length), k, seed)
+      .map(_.map(_.toFloat.toDouble))
     import spark.implicits._
-    val centroids = cents.toSeq.toDF("cell", "centroid")
-    val assigned = model.transform(vecs)
-      .select(col("vec_id"), col("embedding"), col("cell"))
-    Index(centroids, assigned, k)
+    val assigned = embeddings.select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])]
+      .map { case (id, v) => (id, v, Quantizer.nearest(v, 0, cents, 0, k)) }
+      .toDF("vec_id", "embedding", "cell")
+    Index(Quantizer.centroidTable(spark, cents), assigned, k)
   }
 
   /** Persist the index: `assigned` lands partitioned BY CELL, so a

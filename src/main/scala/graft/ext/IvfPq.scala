@@ -7,10 +7,10 @@ import graft.functions.CosineSimilarity
 
 /** Composed IVF-PQ index — the layout a production vector store
   * actually serves from at 100 TB (Jégou et al., "Product Quantization
-  * for Nearest Neighbor Search", IEEE TPAMI 2011, §V: IVFADC):
-  * KMeans cells (`AnnIndex`) bound WHICH vectors a query looks at,
-  * product-quantization codes (`PqIndex`) bound WHAT the scan reads
-  * per vector — 8 code bytes instead of 256 raw-float bytes.
+  * for Nearest Neighbor Search", IEEE TPAMI 2011, §V: IVFADC): k-means
+  * cells bound WHICH vectors a query looks at, product-quantization
+  * codes bound WHAT the scan reads per vector — 8 code bytes instead of
+  * 256 raw-float bytes.
   *
   * A search composes the two prunings multiplicatively, then repairs
   * the quantization loss exactly:
@@ -23,9 +23,18 @@ import graft.functions.CosineSimilarity
   *   3. exact re-rank: the per-query ADC shortlist (and nothing else)
   *      fetches raw embeddings and re-scores with exact cosine.
   *
-  * Scale posture: centroids (kCells rows) and codebooks (m·kCodes
-  * rows) broadcast; the code table persists PARTITIONED BY CELL so a
-  * probe prunes whole directories at file listing (IvfPqSpec proves
+  * Build posture: both quantizers train on the driver (`Quantizer`)
+  * from one bounded, partition-independent sample — one Spark job —
+  * and the whole corpus is then encoded by one compiled map that
+  * returns each vector's (cell, codes) from primitive loops over the
+  * quantizer arrays (`Quantizers.encode`), the same kernel `encode`
+  * runs for incremental ingest. A build's only Spark work is the
+  * sample collect and the persist of the serving table, whatever k
+  * (IvfPqSpec bounds it at 10 jobs; 4 at the fixture's 500 vectors).
+  *
+  * Serve posture: centroids (kCells rows) and codebooks (m·kCodes rows)
+  * broadcast; the code table persists PARTITIONED BY CELL so a probe
+  * prunes whole directories at file listing (IvfPqSpec proves
   * PartitionFilters + broadcast codebooks in one plan); the only
   * per-query joins are against broadcast sides sized by |queries|.
   * Codes quantize PER-CELL RESIDUALS (see `build`) — the full IVFADC
@@ -35,16 +44,37 @@ import graft.functions.CosineSimilarity
   */
 object IvfPq {
 
+  /** An index's quantizers on the driver: `cents(cell)` is a cell
+    * centroid (float values, as stored), `books(sub·k + code)` a
+    * codebook centroid. `encode` is the one (cell, codes) kernel of
+    * build, `encode` and streaming ingest.
+    */
+  final class Quantizers(val cents: Array[Array[Double]],
+      val books: Array[Array[Double]], val m: Int, val k: Int,
+      val residual: Boolean) extends Serializable {
+    def encode(v: Array[Float]): (Int, Array[Int]) = {
+      val cell = Quantizer.nearest(v, 0, cents, 0, cents.length)
+      val enc = if (residual) Quantizer.minus(v, cents(cell)) else v
+      (cell, Quantizer.codes(enc, books, m, k))
+    }
+  }
+
   /** `cells`: (vec_id long, cell int, codes array<int> of m) — the
     * serving table; `close()` releases its build-time cache. `pinned`
     * is the frame `build` actually persisted: `append` swaps `cells`
     * for a union that is NOT in the cache manager, so close must keep
     * unpersisting the original or every index generation would leak
-    * one MEMORY_AND_DISK table.
+    * one MEMORY_AND_DISK table. `quantizers` holds the centroid and
+    * codebook tables on the driver, read once at build or load.
     */
   final case class Index(centroids: DataFrame, codebooks: DataFrame,
-      cells: DataFrame, kCells: Int, m: Int, kCodes: Int, subDim: Int,
-      residual: Boolean, pinned: Option[DataFrame] = None) {
+      cells: DataFrame, quantizers: Quantizers,
+      pinned: Option[DataFrame] = None) {
+    def kCells: Int = quantizers.cents.length
+    def m: Int = quantizers.m
+    def kCodes: Int = quantizers.k
+    def subDim: Int = quantizers.books(0).length
+    def residual: Boolean = quantizers.residual
     def close(): Unit = pinned.getOrElse(cells).unpersist(blocking = false)
   }
 
@@ -58,7 +88,7 @@ object IvfPq {
     * cosine-metric IVF-PQ deployments). Cosine itself is scale
     * invariant, so probing and re-ranking are unchanged.
     */
-  private def unitize(vectors: DataFrame): DataFrame =
+  private[graft] def unitize(vectors: DataFrame): DataFrame =
     vectors
       .withColumn("_n", sqrt(aggregate(
         transform(col("embedding"), x => x.cast("double") * x.cast("double")),
@@ -71,45 +101,56 @@ object IvfPq {
 
   /** Element-wise float difference a - b (double intermediate, float
     * storage — the shared promotion rule). Used for the residual a
-    * vector keeps after its cell centroid is subtracted.
+    * query keeps after a probed cell's centroid is subtracted.
     */
   private def minus(a: Column, b: Column): Column =
     zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
 
+  /** (vec_id, cell, codes) of every unit vector in `unit`, one compiled
+    * map over the rows.
+    */
+  private def encodeUnit(q: Quantizers, unit: DataFrame): DataFrame = {
+    import unit.sparkSession.implicits._
+    unit.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .map { case (id, v) => val (cell, codes) = q.encode(v); (id, cell, codes) }
+      .toDF("vec_id", "cell", "codes")
+  }
+
   /** Train both quantizers on the UNIT-normalized corpus (seeded —
-    * deterministic) and join cell assignment with PQ codes into one
-    * serving table. PQ trains on PER-CELL RESIDUALS (v − centroid of
-    * v's cell) — the actual IVFADC layout: within a cell residual
-    * magnitudes are the within-cell spread, not the full corpus
-    * spread, so the same m×k codebook budget quantizes far tighter.
-    * Residual ADC still estimates the ORIGINAL distance — for q and
-    * candidate v in cell c, ‖q−v‖² = ‖(q−cᶜ)−(v−cᶜ)‖² — so scores
-    * stay comparable across probed cells. `embeddings`: (vec_id long,
-    * embedding array<float> of dim).
+    * deterministic, and independent of partitioning: see `Quantizer`)
+    * and encode every vector into one serving table. PQ trains on
+    * PER-CELL RESIDUALS (v − centroid of v's cell) — the actual IVFADC
+    * layout: within a cell residual magnitudes are the within-cell
+    * spread, not the full corpus spread, so the same m×k codebook
+    * budget quantizes far tighter. Residual ADC still estimates the
+    * ORIGINAL distance — for q and candidate v in cell c,
+    * ‖q−v‖² = ‖(q−cᶜ)−(v−cᶜ)‖² — so scores stay comparable across
+    * probed cells. One sample serves both quantizers: the cells train
+    * on its first 256·kCells rows, the codebooks on its first
+    * 256·kCodes. `embeddings`: (vec_id long, embedding array<float> of
+    * dim).
     */
   def build(spark: SparkSession, embeddings: DataFrame, dim: Int,
       kCells: Int = 16, m: Int = 8, kCodes: Int = 16,
       seed: Long = 42, residual: Boolean = true): Index = {
+    require(dim % m == 0, s"dim $dim not divisible by m $m")
     val unit = unitize(embeddings)
-    val ivf = AnnIndex.build(spark, unit, k = kCells, seed = seed)
-    val pqInput =
-      if (residual)
-        ivf.assigned
-          .join(broadcast(ivf.centroids), Seq("cell"))
-          .select(col("vec_id"), col("cell"),
-            minus(col("embedding"), col("centroid")).as("embedding"))
-      else ivf.assigned.select(col("vec_id"), col("cell"), col("embedding"))
-    val pq = PqIndex.build(spark,
-      pqInput.select(col("vec_id"), col("embedding")),
-      dim = dim, m = m, k = kCodes, seed = seed)
-    // one build-time shuffle on vec_id; the result is what persists
-    val cells = pqInput.select(col("vec_id"), col("cell"))
-      .join(pq.codes, Seq("vec_id"))
+    val sampled = Quantizer.sample(unit,
+      Quantizer.PointsPerCentroid * math.max(kCells, kCodes), seed)
+    // centroids are stored as float; encode against the stored values
+    val cents = Quantizer.train(Quantizer.trainingSet(sampled, kCells),
+      0, dim, kCells, seed).map(_.map(_.toFloat.toDouble))
+    val pqPoints = Quantizer.trainingSet(sampled, kCodes).map { v =>
+      if (residual) Quantizer.minus(v, cents(Quantizer.nearest(v, 0, cents, 0, kCells)))
+      else v
+    }
+    val q = new Quantizers(cents,
+      Quantizer.trainBooks(pqPoints, m, kCodes, dim / m, seed), m, kCodes, residual)
+    val cells = encodeUnit(q, unit)
     cells.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cells.count()
-    pq.close()
-    Index(ivf.centroids, pq.codebooks, cells, kCells, m, kCodes, dim / m,
-      residual, pinned = Some(cells))
+    Index(Quantizer.centroidTable(spark, cents),
+      Quantizer.codebookTable(spark, q.books, kCodes), cells, q, pinned = Some(cells))
   }
 
   /** Persist the index. `cells` lands partitioned BY CELL — the probe
@@ -128,70 +169,35 @@ object IvfPq {
       .parquet(s"$dir/cells.parquet")
   }
 
-  /** Reload a saved index (counts touch only the k-row sidecars). */
+  /** Reload a saved index: the two O(k)-row sidecars collect to the
+    * driver once, and every shape parameter follows from them.
+    */
   def load(spark: SparkSession, dir: String): Index = {
     val cent0 = spark.read.parquet(s"$dir/centroids.parquet")
-    val residual = cent0.select(col("residual")).head().getBoolean(0)
+    val centRows = cent0.orderBy(col("cell")).collect()
     val centroids = cent0.drop("residual")
     val codebooks = spark.read.parquet(s"$dir/codebooks.parquet")
+    val bookRows = codebooks.orderBy(col("sub"), col("code")).collect()
+    val books = bookRows.map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
+    val m = bookRows.last.getAs[Int]("sub") + 1
     val cells = spark.read.parquet(s"$dir/cells.parquet")
       .select(col("vec_id"), col("cell"), col("codes"))
-    val kCells = centroids.count().toInt
-    val m = codebooks.agg(max(col("sub"))).head().getInt(0) + 1
-    val kCodes = (codebooks.count() / m).toInt
-    val subDim = codebooks.select(size(col("centroid"))).head().getInt(0)
-    Index(centroids, codebooks, cells, kCells, m, kCodes, subDim, residual)
+    Index(centroids, codebooks, cells, new Quantizers(
+      centRows.map(_.getAs[scala.collection.Seq[Float]]("centroid").map(_.toDouble).toArray),
+      books, m, books.length / m, centRows.head.getAs[Boolean]("residual")))
   }
 
   /** Encode vectors through an EXISTING index's quantizers — the
-    * incremental-ingest path of a standing vector store: no refit,
-    * just nearest-cell assignment (squared-L2 argmin over the
-    * broadcast centroids, KMeans' own assignment rule) and
-    * per-subspace nearest-codebook-centroid codes, on the residual or
-    * raw vector per the index's mode. Both quantizer tables collect
-    * into ONE broadcast array row and every argmin is a per-row
-    * `array_min` over `struct(d2, id)` (lexicographic min = nearest,
-    * smallest-id tiebreak — identical to a (d2, id) sort order), so
-    * the whole encode is a codegen'd MAP over the new vectors: zero
-    * shuffles, no |new|·k intermediate ever materializes. A nightly
-    * billion-row increment costs one pass, the same shape KMeans'
-    * own transform uses — the previous form (crossJoin + per-vector
-    * row_number windows) shuffled and sorted the k-fold blow-up.
+    * incremental-ingest path of a standing vector store: no refit, just
+    * nearest-cell assignment and per-subspace nearest-codebook codes on
+    * the residual or raw vector per the index's mode, by the same
+    * compiled kernel `build` encoded the corpus with (so re-encoding a
+    * built vector reproduces its row exactly). The quantizers ride the
+    * task closure as primitive arrays: zero shuffles, no |new|·k
+    * intermediate ever materializes, one pass per increment.
     */
-  def encode(index: Index, vectors: DataFrame): DataFrame = {
-    val k = index.kCodes
-    // k-row / m·k-row sidecars → one array literal each, ordered by id
-    // so element_at(carr, cell+1) recovers a cell's centroid directly
-    val centArr = index.centroids
-      .agg(array_sort(collect_list(struct(col("cell"), col("centroid"))))
-        .as("carr"))
-    val bookArr = index.codebooks
-      .agg(array_sort(collect_list(
-        struct(col("sub"), col("code"), col("centroid")))).as("barr"))
-    val d2 = (a: Column, b: Column) => aggregate(
-      zip_with(a, b, (x, c) => (x.cast("double") - c.cast("double"))
-        * (x.cast("double") - c.cast("double"))),
-      lit(0.0), (acc, x) => acc + x)
-    unitize(vectors)
-      .crossJoin(broadcast(centArr))
-      .withColumn("cell", array_min(transform(col("carr"),
-        c => struct(d2(col("embedding"), c.getField("centroid")).as("d2"),
-          c.getField("cell").as("cell")))).getField("cell"))
-      .withColumn("enc",
-        if (index.residual)
-          minus(col("embedding"),
-            element_at(col("carr"), col("cell") + 1).getField("centroid"))
-        else col("embedding"))
-      .crossJoin(broadcast(bookArr))
-      .withColumn("codes",
-        transform(sequence(lit(0), lit(index.m - 1)), s =>
-          array_min(transform(slice(col("barr"), s * k + 1, lit(k)),
-            b => struct(
-              d2(slice(col("enc"), s * index.subDim + 1, lit(index.subDim)),
-                b.getField("centroid")).as("d2"),
-              b.getField("code").as("code")))).getField("code")))
-      .select(col("vec_id"), col("cell"), col("codes"))
-  }
+  def encode(index: Index, vectors: DataFrame): DataFrame =
+    encodeUnit(index.quantizers, unitize(vectors))
 
   /** A new Index whose serving table includes `newVectors`, encoded by
     * `encode` against the standing quantizers. On disk this is an

@@ -1,12 +1,8 @@
 package graft.ext
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import scala.collection.parallel.CollectionConverters._
 
 /** Product-quantization (PQ) index: split the d-dim embedding into `m`
   * contiguous subspaces, k-means each subspace independently (seeded),
@@ -16,17 +12,19 @@ import scala.collection.parallel.CollectionConverters._
   * m×k table of exact subspace distances, and a candidate's
   * approximate distance is just `m` table lookups summed.
   *
-  * Scale posture (the reason PQ exists at 100 TB): the codebooks are
-  * m·k rows and broadcast; encoding is m codegen'd passes over the
-  * corpus; the scan side of a search streams CODES (8 B/vector), not
-  * raw vectors (256 B/vector), so the memory-bandwidth bound drops
-  * 32×. Composed with the IVF cells of `AnnIndex` (encode residuals
-  * per cell) this is the standard IVF-PQ layout; here PQ is kept
+  * Scale posture (the reason PQ exists at 100 TB): the m codebooks
+  * train on the driver from one bounded, partition-independent sample
+  * (`Quantizer` — one Spark job), each holding exactly k centroids, and
+  * broadcast as m·k rows; encoding is one compiled map over the corpus;
+  * the scan side of a search streams CODES (8 B/vector), not raw
+  * vectors (256 B/vector), so the memory-bandwidth bound drops 32×.
+  * Composed with the IVF cells of `AnnIndex` (encode residuals per
+  * cell) this is the standard IVF-PQ layout (`IvfPq`); here PQ is kept
   * orthogonal so each mechanism is provable on its own.
   *
-  * Everything is DataFrame-native: the ADC lookup is a higher-order
-  * `transform`/`aggregate` over the broadcast distance table — no UDF,
-  * no collect of the corpus.
+  * The search side is DataFrame-native: the ADC lookup is a
+  * higher-order `transform`/`aggregate` over the broadcast distance
+  * table — no UDF, no collect of the corpus.
   */
 object PqIndex {
 
@@ -39,46 +37,27 @@ object PqIndex {
     def close(): Unit = codes.unpersist(blocking = false)
   }
 
-  /** Train one seeded KMeans per subspace and encode every vector.
-    * `embeddings`: (vec_id long, embedding array<float> of dim);
-    * dim must be divisible by m.
+  /** Train one seeded k-centroid codebook per subspace and encode every
+    * vector. `embeddings`: (vec_id long, embedding array<float> of
+    * dim); dim must be divisible by m.
     */
   def build(spark: SparkSession, embeddings: DataFrame, dim: Int,
       m: Int = 8, k: Int = 16, seed: Long = 42): Index = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subDim = dim / m
-    val withSubs = (0 until m).foldLeft(embeddings) { (df, s) =>
-      df.withColumn(s"fv_$s",
-        array_to_vector(slice(col("embedding"), s * subDim + 1, subDim)))
-    }.cache()
-    // The m subspace fits are independent Spark jobs over the SAME
-    // cached relation — launch them concurrently (the scheduler
-    // interleaves their stages across the cores) instead of serially
-    // paying m× the KMeans latency. Seeds are per-subspace, so the
-    // trained codebooks are identical to the sequential build.
-    val models = (0 until m).par.map { s =>
-      new KMeans().setK(k).setSeed(seed + s).setFeaturesCol(s"fv_$s")
-        .setPredictionCol(s"code_$s").fit(withSubs)
-    }.seq
-    val encoded = models.zipWithIndex.foldLeft(withSubs: DataFrame) {
-      case (df, (model, _)) => model.transform(df)
-    }
-    val codes = encoded.select(col("vec_id"),
-      array((0 until m).map(s => col(s"code_$s")): _*).as("codes"))
+    val books = Quantizer.trainBooks(Quantizer.trainingSet(
+      Quantizer.sample(embeddings, Quantizer.PointsPerCentroid * k, seed), k),
+      m, k, subDim, seed)
     import spark.implicits._
-    val books = models.zipWithIndex.flatMap { case (model, s) =>
-      model.clusterCenters.zipWithIndex.map { case (c, code) =>
-        (s, code, c.toArray)
-      }
-    }
-    // materialize codes (m small ints/vector) BEFORE dropping the sub-
-    // vector cache: otherwise every later action on Index.codes would
-    // re-slice the embeddings m times per pass. Persist-then-count pins
-    // the encoded table; callers release it via Index.close().
+    val codes = embeddings.select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])]
+      .map { case (id, v) => (id, Quantizer.codes(v, books, m, k)) }
+      .toDF("vec_id", "codes")
+    // persist-then-count pins the encoded table (m small ints/vector);
+    // callers release it via Index.close()
     codes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     codes.count()
-    withSubs.unpersist()
-    Index(books.toSeq.toDF("sub", "code", "centroid"), codes, m, k, subDim)
+    Index(Quantizer.codebookTable(spark, books, k), codes, m, k, subDim)
   }
 
   /** Per-key ADC lookup table: one ordered array per key group where

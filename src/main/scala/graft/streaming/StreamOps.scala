@@ -277,9 +277,10 @@ object StreamOps {
   /** Streaming ANN-index ingest — keeping a standing IVF-PQ index fresh
     * as new vectors arrive, the maintenance path of a production vector
     * store: each micro-batch pushes through `IvfPq.encode` against the
-    * STANDING quantizers (no refit — centroids/codebooks are broadcast
-    * 1-row array sides, so the whole encode is a stateless codegen'd
-    * map; re-train is a separate offline index-generation decision) and
+    * STANDING quantizers (no refit — the index holds centroids and
+    * codebooks on the driver and the encode is one stateless compiled
+    * map over the batch; re-train is a separate offline
+    * index-generation decision) and
     * appends under `batch_id=<id>/cell=<c>` — the same
     * batchId-keyed-overwrite idempotency as `manifestSink`, composed
     * with the cell partitioning `IvfPq.save` uses, so a replayed batch

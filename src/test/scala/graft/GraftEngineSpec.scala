@@ -21,6 +21,16 @@ class GraftEngineSpec extends SparkSpec {
     intercept[NoSuchElementException] { engine.query("no_such_query") }
   }
 
+  test("releaseCaches frees every module memo, ALS model and incidents included") {
+    val model = queries.RecoOps.alsModel(spark, sfDir)
+    val incidents = queries.EventOps.incidentIntervals(spark, sfDir)
+    assert(queries.RecoOps.alsModel(spark, sfDir) eq model)
+    engine.releaseCaches()
+    assert(queries.RecoOps.alsModel(spark, sfDir) ne model)
+    assert(queries.EventOps.incidentIntervals(spark, sfDir) ne incidents)
+    engine.releaseCaches()
+  }
+
   test("native functions are registered through the facade") {
     val r = engine.table("embeddings").limit(5)
       .select(expr("cosine_sim(embedding, embedding)").as("c")).collect()

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ext.IvfPq
+import graft.ext.{IvfPq, Quantizer}
 
 /** Composed IVF-PQ (IVFADC): exactness at full probe, recall of the
   * registered pruned config, and the one-plan scale proof — a probe
@@ -165,5 +166,152 @@ class IvfPqSpec extends SparkSpec {
     val escaped = got.join(qc, Seq("q_id", "cell"), "left")
       .filter(col("probed").isNull)
     assert(escaped.count() === 0)
+  }
+
+  /** The exact cosine top-5 of vec_id < 10 within `corpus` — q50's
+    * ranking rule (6-decimal cosine, vec_id tiebreak, self excluded).
+    */
+  private def exactTop5(corpus: DataFrame): Map[(Long, Int), Long] =
+    corpus.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+      .crossJoin(corpus)
+      .filter(col("q_id") =!= col("vec_id"))
+      .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
+          .orderBy(col("cos_r").desc, col("vec_id"))))
+      .filter(col("rn") <= 5)
+      .select(col("q_id"), col("rn"), col("vec_id"))
+      .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
+
+  private def fullProbe(idx: IvfPq.Index, corpus: DataFrame): Map[(Long, Int), Long] = {
+    val q = corpus.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    IvfPq.search(idx, corpus, q, topK = 5, nProbe = idx.kCells,
+        shortlist = corpus.count().toInt)
+      .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
+  }
+
+  private def rowsOf(idx: IvfPq.Index) = (
+    idx.centroids.collect().map(r => (r.getInt(0),
+      r.getAs[scala.collection.Seq[Float]](1).toList)).sortBy(_._1).toList,
+    idx.codebooks.collect().map(r => (r.getInt(0), r.getInt(1),
+      r.getAs[scala.collection.Seq[Double]](2).toList)).sortBy(r => (r._1, r._2)).toList,
+    encoded(idx.cells))
+
+  private def encoded(df: DataFrame): Map[Long, (Int, List[Int])] =
+    df.select(col("vec_id"), col("cell"), col("codes")).collect()
+      .map(r => r.getLong(0) -> (r.getInt(1),
+        r.getAs[scala.collection.Seq[Int]](2).toList)).toMap
+
+  /** The higher-order-function encode the compiled kernel replaced,
+    * kept as its reference: argmins as `array_min` over struct(d2, id)
+    * on broadcast 1-row arrays of the stored centroids and codebooks.
+    */
+  private def referenceEncode(index: IvfPq.Index, vectors: DataFrame): DataFrame = {
+    val k = index.kCodes
+    val centArr = index.centroids
+      .agg(array_sort(collect_list(struct(col("cell"), col("centroid"))))
+        .as("carr"))
+    val bookArr = index.codebooks
+      .agg(array_sort(collect_list(
+        struct(col("sub"), col("code"), col("centroid")))).as("barr"))
+    val d2 = (a: Column, b: Column) => aggregate(
+      zip_with(a, b, (x, c) => (x.cast("double") - c.cast("double"))
+        * (x.cast("double") - c.cast("double"))),
+      lit(0.0), (acc, x) => acc + x)
+    IvfPq.unitize(vectors)
+      .crossJoin(broadcast(centArr))
+      .withColumn("cell", array_min(transform(col("carr"),
+        c => struct(d2(col("embedding"), c.getField("centroid")).as("d2"),
+          c.getField("cell").as("cell")))).getField("cell"))
+      .withColumn("enc",
+        if (index.residual)
+          zip_with(col("embedding"),
+            element_at(col("carr"), col("cell") + 1).getField("centroid"),
+            (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
+        else col("embedding"))
+      .crossJoin(broadcast(bookArr))
+      .withColumn("codes",
+        transform(sequence(lit(0), lit(index.m - 1)), s =>
+          array_min(transform(slice(col("barr"), s * k + 1, lit(k)),
+            b => struct(
+              d2(slice(col("enc"), s * index.subDim + 1, lit(index.subDim)),
+                b.getField("centroid")).as("d2"),
+              b.getField("code").as("code")))).getField("code")))
+      .select(col("vec_id"), col("cell"), col("codes"))
+  }
+
+  test("compiled encode == the higher-order reference (residual and flat)") {
+    val flat = IvfPq.build(spark, emb, dim = 64, kCells = 16, kCodes = 64,
+      residual = false)
+    try Seq(index, flat).foreach { idx =>
+      val ref = encoded(referenceEncode(idx, emb))
+      assert(encoded(IvfPq.encode(idx, emb)) === ref)
+      assert(encoded(idx.cells) === ref)
+    } finally flat.close()
+  }
+
+  test("build is independent of partitioning") {
+    val again = IvfPq.build(spark, emb.repartition(7), dim = 64, kCells = 8)
+    try assert(rowsOf(again) === rowsOf(index))
+    finally again.close()
+  }
+
+  test("sampled training (256 rows per centroid) keeps full probe exact") {
+    // kCells = kCodes = 1 caps the sample at 256 of the 500 vectors
+    assert(emb.count() === 500)
+    assert(Quantizer.sample(emb, Quantizer.PointsPerCentroid, 42).length === 256)
+    val tiny = IvfPq.build(spark, emb, dim = 64, kCells = 1, kCodes = 1)
+    try {
+      val exact = Registry.byName("q50_cosine_topk").fn(spark, sfDir)
+        .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
+      assert(fullProbe(tiny, emb) === exact)
+    } finally tiny.close()
+  }
+
+  test("k above the distinct points still yields k codes per subspace") {
+    // 40 vectors cannot fill kCodes = 64 distinct centroids; the surplus
+    // codes duplicate trained ones, so the sub·k + code ADC slots hold
+    val slice = emb.filter(col("vec_id") < 40)
+    val small = IvfPq.build(spark, slice, dim = 64, kCells = 8, kCodes = 64)
+    try {
+      assert(small.codebooks.count() === small.m.toLong * 64)
+      assert(small.centroids.count() === 8)
+      assert(fullProbe(small, slice) === exactTop5(slice))
+    } finally small.close()
+  }
+
+  test("a served-size build runs at most 10 Spark jobs") {
+    // jobs carry this thread's job group; a marker job run afterwards
+    // proves every earlier start event has reached the listener (the
+    // listener bus delivers in order)
+    val sc = spark.sparkContext
+    val group = s"ivfpq-build-${java.util.UUID.randomUUID}"
+    val groups = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted build")
+      val built = IvfPq.build(spark, emb, dim = 64, kCells = 16, kCodes = 64)
+      sc.setJobGroup(group + "-marker", "marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains(group + "-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(group + "-marker"), "marker job never observed")
+      val jobs = groups.toArray.count(_ == group)
+      assert(jobs >= 1 && jobs <= 10, s"IvfPq.build ran $jobs Spark jobs")
+      built.close()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

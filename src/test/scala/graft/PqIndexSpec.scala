@@ -13,10 +13,10 @@ class PqIndexSpec extends SparkSpec {
     .select(col("vec_id"), col("embedding"))
   private lazy val index = PqIndex.build(spark, emb, dim = 64)
 
-  private def exactL2Top5 = {
-    val queries = emb.filter(col("vec_id") < 10)
+  private def exactL2Top5(corpus: org.apache.spark.sql.DataFrame) = {
+    val queries = corpus.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    queries.crossJoin(emb)
+    queries.crossJoin(corpus)
       .filter(col("q_id") =!= col("vec_id"))
       .withColumn("d2", aggregate(
         zip_with(col("q_emb"), col("embedding"),
@@ -66,12 +66,31 @@ class PqIndexSpec extends SparkSpec {
   test("registered q109_pq_topk: top-5 per query with useful L2 recall") {
     val rows = Registry.byName("q109_pq_topk").fn(spark, sfDir).collect()
     assert(rows.length === 50) // 10 queries x top-5
-    val exact = exactL2Top5.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = exactL2Top5(emb).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val approx = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & approx).size.toDouble / exact.size
     // m=8/k=16 codebooks on near-isotropic random vectors — the PQ
     // worst case (no cluster structure to exploit), so this is a
     // recall FLOOR; clustered real embeddings quantize far tighter.
     assert(recall >= 0.4, s"recall=$recall")
+  }
+
+  test("k above the distinct points still yields k codes per subspace") {
+    // 40 vectors cannot fill k = 64 distinct centroids; the surplus
+    // codes duplicate trained ones, so the m·k slot layout of the ADC
+    // table holds and a whole-corpus shortlist re-ranks to exact L2
+    val slice = emb.filter(col("vec_id") < 40)
+    val small = PqIndex.build(spark, slice, dim = 64, k = 64)
+    try {
+      assert(small.codebooks.count() === small.m.toLong * 64)
+      val queries = slice.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+      val got = PqIndex.searchReRanked(small, slice, queries, topK = 5,
+          shortlist = 40)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val exact = exactL2Top5(slice).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got === exact)
+    } finally small.close()
   }
 }
