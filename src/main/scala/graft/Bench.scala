@@ -90,13 +90,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sweeps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SWEEPS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.requiredConf._1, Tables.requiredConf._2)
-      .getOrCreate()
+    val spark = GraftEngine.localBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm up the JVM/codegen/shuffle paths once so the first timed
@@ -145,10 +139,7 @@ object Bench {
       if (sweep > 1) {
         // drop memoized kernels/indexes/vocab so the build rows of this
         // sweep measure a real rebuild, not a memo hit
-        graft.queries.TextOps.releaseCaches()
-        graft.queries.VectorOps.releaseCaches()
-        graft.queries.EventOps.releaseCaches()
-        graft.queries.RecoOps.releaseCaches()
+        GraftEngine.releaseCaches()
       }
       canaries += canaryOnce()
       buildSteps.foreach { case (name, run) =>
@@ -163,10 +154,7 @@ object Bench {
       canaries += canaryOnce()
       sweepSecs += (System.nanoTime() - s0) / 1e9
     }
-    graft.queries.TextOps.releaseCaches()
-    graft.queries.VectorOps.releaseCaches()
-    graft.queries.EventOps.releaseCaches()
-    graft.queries.RecoOps.releaseCaches()
+    GraftEngine.releaseCaches()
 
     val builds = buildSteps.map { case (n, _) => n -> buildMins(n) }
     val results = queryList.map { case (n, _) => n -> queryMins(n) }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query timing harness for plan iteration: times the named
   * registered queries (args) with the same noop-forcing protocol as
   * `Bench`, without paying for the other ~110. `build:<name>` args
@@ -15,22 +13,10 @@ object BenchOne {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.requiredConf._1, Tables.requiredConf._2)
-      .getOrCreate()
+    val spark = GraftEngine.localBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("id % 7 as k").groupBy("k").count()
       .write.format("noop").mode("overwrite").save()
-    def releaseAll(): Unit = {
-      graft.queries.TextOps.releaseCaches()
-      graft.queries.VectorOps.releaseCaches()
-      graft.queries.EventOps.releaseCaches()
-      graft.queries.RecoOps.releaseCaches()
-    }
     args.foreach { name =>
       // (pre, work): pre runs OUTSIDE the timer — for build steps the
       // cache release must not be billed to the build being measured
@@ -41,7 +27,7 @@ object BenchOne {
           val step = name.stripPrefix("build:")
           val fn = Bench.buildSteps.toMap.getOrElse(step,
             throw new NoSuchElementException(s"unknown build step: $step"))
-          (() => releaseAll(), () => fn(spark, sfDir))
+          (() => GraftEngine.releaseCaches(), () => fn(spark, sfDir))
         } else {
           val fn = SparkEntry.queries(name)
           // SPARK_GRAFT_RELEASE_QUERIES=1: drop session memos before
@@ -50,7 +36,7 @@ object BenchOne {
           // measure a memo hit from run 2 on, and cold single-JVM
           // samples are steal-noise-dominated on this box
           (if (sys.env.contains("SPARK_GRAFT_RELEASE_QUERIES"))
-            (() => releaseAll()) else (() => ()),
+            (() => GraftEngine.releaseCaches()) else (() => ()),
             () => fn(spark, sfDir).write.format("noop").mode("overwrite").save())
         }
       (1 to runs).foreach { i =>
@@ -60,10 +46,7 @@ object BenchOne {
         println(f"[benchone] $name run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
     }
-    graft.queries.TextOps.releaseCaches()
-    graft.queries.VectorOps.releaseCaches()
-    graft.queries.EventOps.releaseCaches()
-    graft.queries.RecoOps.releaseCaches()
+    GraftEngine.releaseCaches()
     spark.stop()
   }
 }

@@ -857,9 +857,27 @@ final class GraftEngine(val spark: SparkSession, val dataDir: String) {
         round(col("overlap_est").cast("double") / col("distinct_a"), 4))
   }
 
+  /** Release every module memo (see `GraftEngine.releaseCaches`). */
+  def releaseCaches(): Unit = GraftEngine.releaseCaches()
+}
+
+object GraftEngine {
+  /** The local session every main and the test suite start from:
+    * `local[cores]` with as many shuffle partitions, UTC, no UI, and
+    * `Tables.requiredConf`. Callers add their own extras (app name,
+    * warehouse dir) before `getOrCreate()`.
+    */
+  def localBuilder(cores: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(Tables.requiredConf._1, Tables.requiredConf._2)
+
   /** Release every module memo: session-pinned kernels, served
     * indexes, the trained ALS model and the incident table (the
-    * lifecycle hook Bench/Verify call after their sweeps).
+    * lifecycle hook the mains and test suites call between runs).
     */
   def releaseCaches(): Unit = {
     graft.queries.TextOps.releaseCaches()

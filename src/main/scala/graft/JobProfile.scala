@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main for optimization work: run named registered queries
   * (or `build:<step>`s) once or more under a job listener and print,
@@ -18,13 +17,7 @@ object JobProfile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.requiredConf._1, Tables.requiredConf._2)
-      .getOrCreate()
+    val spark = GraftEngine.localBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("id % 7 as k").groupBy("k").count()
       .write.format("noop").mode("overwrite").save()
@@ -47,13 +40,6 @@ object JobProfile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    def releaseAll(): Unit = {
-      graft.queries.TextOps.releaseCaches()
-      graft.queries.VectorOps.releaseCaches()
-      graft.queries.EventOps.releaseCaches()
-      graft.queries.RecoOps.releaseCaches()
-    }
-
     args.foreach { name =>
       val (pre, run): (() => Unit, () => Unit) =
         if (name.startsWith("build:")) {
@@ -64,7 +50,7 @@ object JobProfile {
           // steps — measures a step's IN-SWEEP marginal cost (the
           // Bench accounting) instead of its full dependency chain
           (if (sys.env.contains("SPARK_GRAFT_NORELEASE")) (() => ())
-           else (() => releaseAll()),
+           else (() => GraftEngine.releaseCaches()),
             () => fn(spark, sfDir))
         } else {
           val fn = SparkEntry.queries(name)
@@ -72,7 +58,7 @@ object JobProfile {
           // run so warm repeats of memo-backed rows profile real work
           // (the BenchOne flag, same rationale)
           (if (sys.env.contains("SPARK_GRAFT_RELEASE_QUERIES"))
-            (() => releaseAll()) else (() => ()),
+            (() => GraftEngine.releaseCaches()) else (() => ()),
             () => fn(spark, sfDir).write.format("noop").mode("overwrite").save())
         }
       (1 to runs).foreach { i =>
@@ -101,7 +87,7 @@ object JobProfile {
         }
       }
     }
-    releaseAll()
+    GraftEngine.releaseCaches()
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness: replicates the sf0.1 fact tables 10× (with
@@ -24,12 +23,7 @@ object ScaleStress {
     val out = posArgs.headOption.getOrElse("/tmp/graft_sfx")
     val only = posArgs.drop(1).toSet
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.requiredConf._1, Tables.requiredConf._2)
+    val spark = GraftEngine.localBuilder("32")
       .config("spark.sql.warehouse.dir", s"$out/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,13 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.requiredConf._1, Tables.requiredConf._2)
-      .getOrCreate()
+    val spark = GraftEngine.localBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // a misspelled tail name would otherwise dump nothing and exit 0
@@ -44,10 +37,7 @@ object Verify {
             .forEach(p => Files.deleteIfExists(p))
       }
     }
-    graft.queries.TextOps.releaseCaches()
-    graft.queries.VectorOps.releaseCaches()
-    graft.queries.EventOps.releaseCaches()
-    graft.queries.RecoOps.releaseCaches()
+    GraftEngine.releaseCaches()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Observed
 
 /** Minimal lakehouse-style snapshot log: versioned manifests over
   * immutable parquet segments with per-segment zone-map stats — the
@@ -1341,142 +1342,44 @@ object SnapshotLog {
 
   /** `writeSegWithStats` that also returns the observed row count —
     * for callers (restore) that branch on an empty rewrite without
-    * paying a separate count job.
-    *
-    * Deliberately NOT the `Observation` helper: Observation initializes
-    * the session's `observationManager` lazy field, whose value is not
-    * java-serializable — and Spark ML models keep their training
-    * summary's SparkSession reference inside the scoring UDF closure,
-    * so one Observation anywhere in the session made every LATER
-    * ML-model transform die with Task not serializable (found by the
-    * full-sweep verify: q173 poisoned q138). The string-named
-    * `observe` overload plants the same CollectMetrics node without
-    * ever touching the manager; metrics come back through a scoped
-    * QueryExecutionListener keyed on a per-write unique name. Listener
-    * delivery is async on the shared bus — if the row has not arrived
-    * within the bound (never observed; belt-and-braces for a dropped
-    * event), the stat aggregate falls back to the pre-round-17
-    * two-pass re-read, which is slower but value-identical.
+    * paying a separate count job. A missed metrics row (see
+    * `graft.Observed`) falls back to aggregating the written segment,
+    * the two-pass shape every commit paid before the fold.
     */
-  /** Times the observe-fold's two-pass fallback fired (a missed/late
-    * listener event forced a full re-read of a just-written segment).
-    * Round-17 verdict: at 100 TB a silently-firing fallback is a
-    * silent 2× write-path cost — this counter plus the WARN below make
-    * it visible; Round18OptSpec forces the path and pins value
-    * identity.
-    */
-  private[graft] val statFoldFallbacks =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** TEST HOOK: when true the scoped listener ignores its metrics row,
-    * deterministically forcing the two-pass fallback (the async-miss
-    * path cannot be triggered on demand otherwise).
-    */
-  @volatile private[graft] var statFoldSuppressObserved = false
-
   private def writeSegWithStatsN(df: DataFrame, dir: String,
       segPath: String, statsCol: Column): (Long, Long, Long) = {
     val spark = df.sparkSession
     val plan = segStatPlan(spark, dir, df, statsCol)
-    val obsName =
-      s"__graft_segstats_${java.util.UUID.randomUUID().toString.take(12)}"
-    @volatile var metric: Option[org.apache.spark.sql.Row] = None
-    val latch = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit =
-        qe.observedMetrics.get(obsName).foreach { r =>
-          if (!statFoldSuppressObserved) {
-            metric = Some(r)
-            latch.countDown()
-          }
-        }
-      override def onFailure(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
+    val (_, observed) = Observed("segstats", df, plan.aggs: _*) {
+      _.write.mode("overwrite").parquet(segPath)
     }
-    spark.listenerManager.register(listener)
-    val observed =
-      try {
-        df.observe(obsName, plan.aggs.head, plan.aggs.tail: _*)
-          .write.mode("overwrite").parquet(segPath)
-        if (latch.await(60, java.util.concurrent.TimeUnit.SECONDS)) metric
-        else None
-      } finally spark.listenerManager.unregister(listener)
-    observed match {
-      case Some(r) =>
-        val at = (n: String) => r.get(r.fieldIndex(n))
-        val (mn, mx) = segStatFinish(dir, segPath, df.columns.toSeq, plan, at)
-        (mn, mx, Option(at("__cnt"))
-          .map(_.asInstanceOf[Number].longValue()).getOrElse(0L))
+    val (r, cols, p) = observed match {
+      case Some(r) => (r, df.columns.toSeq, plan)
       case None =>
-        // two-pass fallback: aggregate the written segment (the shape
-        // every commit paid before round 17). Never silent: the counter
-        // and WARN exist so a deployment where the listener bus drops
-        // events shows up as a visible 2x-write-cost signal instead of
-        // an unexplained slowdown (round-17 verdict item 2).
-        statFoldFallbacks.incrementAndGet()
-        System.err.println(s"[SnapshotLog] WARN observe-fold metrics for " +
-          s"$segPath missed (listener event not delivered in 60s) — " +
-          "falling back to the two-pass segment re-read " +
-          s"(fallback #${statFoldFallbacks.get()})")
         val rdf = spark.read.parquet(segPath)
         val plan2 = segStatPlan(spark, dir, rdf, statsCol)
-        val r = rdf.agg(plan2.aggs.head, plan2.aggs.tail: _*).head()
-        val at = (n: String) => r.get(r.fieldIndex(n))
-        val (mn, mx) =
-          segStatFinish(dir, segPath, rdf.columns.toSeq, plan2, at)
-        (mn, mx, Option(at("__cnt"))
-          .map(_.asInstanceOf[Number].longValue()).getOrElse(0L))
+        (rdf.agg(plan2.aggs.head, plan2.aggs.tail: _*).head(),
+          rdf.columns.toSeq, plan2)
     }
+    val at = (n: String) => r.get(r.fieldIndex(n))
+    val (mn, mx) = segStatFinish(dir, segPath, cols, p, at)
+    (mn, mx, Option(at("__cnt"))
+      .map(_.asInstanceOf[Number].longValue()).getOrElse(0L))
   }
 
   /** Write `df` as parquet and return the row count OBSERVED on the
-    * same pass (a CollectMetrics node riding the write) — the
-    * writeSegWithStatsN economics applied to delete-vector/tombstone
-    * segments, which need only a count: every MoR delete/merge wrote
-    * its DV and then RE-READ the whole file just to learn whether any
-    * row matched (round-18; guide §1.2 — the same second-scan shape
-    * round 17 removed from stat sidecars). A missed listener event
-    * falls back to the re-read count, value-identically, and is
-    * counted/WARNed like the stat fold's fallback.
+    * same pass — the writeSegWithStatsN economics applied to
+    * delete-vector/tombstone segments, which need only a count: every
+    * MoR delete/merge used to write its DV and then RE-READ the whole
+    * file just to learn whether any row matched. A missed metrics row
+    * falls back to that re-read count.
     */
   private def writeCountObserved(df: DataFrame, path: String): Long = {
-    val spark = df.sparkSession
-    val obsName =
-      s"__graft_dvcount_${java.util.UUID.randomUUID().toString.take(12)}"
-    @volatile var metric: Option[Long] = None
-    val latch = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit =
-        qe.observedMetrics.get(obsName).foreach { r =>
-          if (!statFoldSuppressObserved) {
-            metric = Option(r.get(0)).map(_.asInstanceOf[Number].longValue())
-            latch.countDown()
-          }
-        }
-      override def onFailure(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
+    val (_, observed) = Observed("dvcount", df, count(lit(1))) {
+      _.write.mode("overwrite").parquet(path)
     }
-    spark.listenerManager.register(listener)
-    val observed =
-      try {
-        df.observe(obsName, count(lit(1)).as("__cnt"))
-          .write.mode("overwrite").parquet(path)
-        if (latch.await(60, java.util.concurrent.TimeUnit.SECONDS)) metric
-        else None
-      } finally spark.listenerManager.unregister(listener)
-    observed.getOrElse {
-      statFoldFallbacks.incrementAndGet()
-      System.err.println(s"[SnapshotLog] WARN observed count for $path " +
-        "missed (listener event not delivered in 60s) — falling back to " +
-        s"the re-read count (fallback #${statFoldFallbacks.get()})")
-      spark.read.parquet(path).count()
-    }
+    observed.map(_.getLong(0))
+      .getOrElse(df.sparkSession.read.parquet(path).count())
   }
 
   /** The Bloom sidecars of a segment — empty when none were recorded

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Observed, Tables}
 import graft.Fns._
 
 /** LLM-training-data text pipeline: deduplication (exact, fingerprint,
@@ -3944,56 +3944,6 @@ object TextOps {
   private val unigramMemo = new graft.KeyedMemo[(SparkSession, String, Int),
     (Seq[(String, Long, Long)], Seq[Long], DataFrame, DataFrame)]
 
-  /** Run `action` on a frame derived from `df` while aggregating `agg`
-    * over df's rows in the SAME pass: `observe` plants a
-    * CollectMetrics node at df's plan position, so every df row flows
-    * through it regardless of downstream explode/filter/groupBy.
-    * String-named observe + a scoped QueryExecutionListener, NEVER the
-    * `Observation` helper — its lazily-initialized observationManager
-    * is not java-serializable and poisons later ML-model task closures
-    * (the SnapshotLog writeSegWithStatsN finding). Returns the action
-    * result plus the observed long, None when the async listener event
-    * was missed (caller re-aggregates separately, value-identically).
-    */
-  private def observedAction[A](df: DataFrame, agg: Column)(
-      action: DataFrame => A): (A, Option[Long]) = {
-    val s = df.sparkSession
-    val obsName =
-      s"__graft_obs_${java.util.UUID.randomUUID().toString.take(12)}"
-    @volatile var metric: Option[Long] = None
-    val latch = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit =
-        qe.observedMetrics.get(obsName).foreach { r =>
-          metric = Option(r.get(0)).map(_.asInstanceOf[Number].longValue())
-          latch.countDown()
-        }
-      override def onFailure(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    s.listenerManager.register(listener)
-    try {
-      val res = action(df.observe(obsName, agg))
-      // 5 s, not 60: the onSuccess event lands within milliseconds of
-      // the action returning on a healthy bus, and the caller's
-      // fallback re-aggregate is CHEAP here (one more pass over a
-      // vocabulary-sized frame) — a dropped event under listener-bus
-      // overflow must not stall the EM loop a full minute per round
-      // (round-17 advice). NOTE local-mode assumption: observed
-      // metrics are accumulator-backed, so on a cluster a re-executed
-      // stage (shuffle-fetch failure) or speculative task could
-      // double-count into the observed sum; this harness runs
-      // local[N] where stages never re-execute. A clustered
-      // deployment should bound-check the observed value against the
-      // fallback aggregate before trusting it.
-      if (latch.await(5, java.util.concurrent.TimeUnit.SECONDS)) (res, metric)
-      else (res, None)
-    } finally s.listenerManager.unregister(listener)
-  }
-
   private[graft] def unigramLoop(s: SparkSession, d: String, rounds: Int)
       : (Seq[(String, Long, Long)], Seq[Long], DataFrame) = {
     val (pieces, losses, seg, _) =
@@ -4077,14 +4027,15 @@ object TextOps {
       // table a second time per EM round. Same expression, same rows,
       // so the recorded loss is value-identical; a missed listener
       // event falls back to the former two-pass shape.
-      val (usageRows, obsLoss) = observedAction(seg,
+      val (usageRows, obsLoss) = Observed("em_loss", seg,
           sum(col("freq") * col("wcost"))) { o =>
         o.select(col("freq"), explode(col("ps")).as("p"))
           .groupBy(col("p")).agg(sum(col("freq")).as("c"))
           .collect()
       }
-      val roundLoss = obsLoss.getOrElse(
-        seg.agg(sum(col("freq") * col("wcost"))).first().getLong(0))
+      val roundLoss = obsLoss.flatMap(r => Option(r.getAs[java.lang.Long](0)))
+        .map(_.longValue)
+        .getOrElse(seg.agg(sum(col("freq") * col("wcost"))).first().getLong(0))
       losses += roundLoss
       val usage =
         usageRows.map(r => (r.getString(0), r.getLong(1))).toMap
@@ -4736,11 +4687,12 @@ object TextOps {
           col("lbl") === col("pv"))
         .select(col("v"), least(col("lbl"), col("plbl")).as("lbl"),
           col("__prev"))
-      val (next, obsChanged) = observedAction(nextPlan,
+      val (next, obsChanged) = Observed("label_prop", nextPlan,
         sum(when(col("lbl") =!= col("__prev"), 1L).otherwise(0L))) { o =>
         o.select(col("v"), col("lbl")).localCheckpoint()
       }
-      changed = obsChanged.getOrElse(
+      changed = obsChanged.flatMap(r => Option(r.getAs[java.lang.Long](0)))
+        .map(_.longValue).getOrElse(
         next.select(col("v").as("v2"), col("lbl").as("l2"))
           .join(labels.select(col("v").as("v3"), col("lbl").as("l3")),
             col("v2") === col("v3"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.ext.SnapshotLog
 import graft.queries.{TextOps, VectorOps}
 
 /** Round-18 optimization invariants: every structural change this
@@ -14,10 +15,10 @@ import graft.queries.{TextOps, VectorOps}
   *  - Graph-ANN calibration: the (2,4)/(4,8) grid points now co-walk
   *    in ONE grouped job chain (`graphWalkGrid`) — pinned per point
   *    against the single-point kernel (`graphWalkGrouped`).
-  *  - SnapshotLog observe-fold: the two-pass fallback is no longer
-  *    silent (counter + WARN) — forced here via the test hook, and the
-  *    fallback's sidecar/manifest output pinned identical to the
-  *    observed path's.
+  *  - Observed folds (segment stats, delete-vector counts, EM loss,
+  *    label-propagation convergence): each site's fallback is forced
+  *    through `Observed.suppress`, must bump that site's counter once
+  *    per observed action, and must give the folded path's output.
   */
 class Round18OptSpec extends SparkSpec {
 
@@ -130,10 +131,32 @@ class Round18OptSpec extends SparkSpec {
     } finally VectorOps.releaseCaches()
   }
 
-  // == SnapshotLog observe-fold fallback: forced, visible, identical ==
+  // == Observed fallbacks: forced at every site, counted, identical ==
+
+  /** Runs `body` with every observed metrics row suppressed and checks
+    * that `site`'s fallback counter rose by exactly `calls` — one per
+    * observed action the body runs. The hook returns at once, so no
+    * case waits out `Observed.TimeoutSeconds`.
+    */
+  private def forced[A](site: String, calls: Long)(body: => A): A = {
+    val before = Observed.fallbacks(site)
+    val out = Observed.suppress(body)
+    assert(Observed.fallbacks(site) === before + calls,
+      s"forced miss at $site did not bump its fallback counter by $calls")
+    out
+  }
+
+  private def tempDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-foldback-$tag").toString
+
+  private def orders = Tables.load(spark, sfDir, "orders")
+    .select(col("o_orderkey"), col("o_totalprice"))
+
+  private def tableRows(dir: String): Seq[String] =
+    SnapshotLog.readAsOf(spark, dir, SnapshotLog.version(dir))
+      .collect().map(_.toString).sorted.toSeq
 
   test("forced observe-fold fallback re-reads, counts, and matches the folded stats") {
-    import graft.ext.SnapshotLog
     def zoneStats(dir: String): Seq[String] = {
       val root = java.nio.file.Paths.get(dir)
       val found = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -144,29 +167,62 @@ class Round18OptSpec extends SparkSpec {
       }
       found.toSeq.sorted
     }
-    val df = Tables.load(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"))
-    val dirA = java.nio.file.Files
-      .createTempDirectory("graft-foldback-a").toString
-    val dirB = java.nio.file.Files
-      .createTempDirectory("graft-foldback-b").toString
+    val (dirA, dirB) = (tempDir("a"), tempDir("b"))
     SnapshotLog.reset(dirA, checkpointInterval = 3)
     SnapshotLog.reset(dirB, checkpointInterval = 3)
-    SnapshotLog.append(df, dirA, col("o_orderkey"))
-    val before = SnapshotLog.statFoldFallbacks.get()
-    SnapshotLog.statFoldSuppressObserved = true
-    try SnapshotLog.append(df, dirB, col("o_orderkey"))
-    finally SnapshotLog.statFoldSuppressObserved = false
-    assert(SnapshotLog.statFoldFallbacks.get() === before + 1,
-      "forced listener miss did not increment the fallback counter")
+    SnapshotLog.append(orders, dirA, col("o_orderkey"))
+    forced("segstats", 1)(SnapshotLog.append(orders, dirB, col("o_orderkey")))
     // the fallback's recorded stats are byte-identical to the folded
     // path's (same aggregate over the same persisted rows)
     assert(zoneStats(dirB) === zoneStats(dirA))
     // and the committed table reads identically
-    val a = SnapshotLog.readAsOf(spark, dirA, SnapshotLog.version(dirA))
-      .collect().map(_.toString).sorted.toSeq
-    val b = SnapshotLog.readAsOf(spark, dirB, SnapshotLog.version(dirB))
-      .collect().map(_.toString).sorted.toSeq
-    assert(a === b)
+    assert(tableRows(dirB) === tableRows(dirA))
+  }
+
+  test("forced delete-vector count fallback commits the same MoR deletes") {
+    def dvSegs(dir: String): Long = java.nio.file.Files.list(
+      java.nio.file.Paths.get(dir))
+      .filter(_.getFileName.toString.contains("-dv-")).count()
+    val (dirA, dirB) = (tempDir("dva"), tempDir("dvb"))
+    Seq(dirA, dirB).foreach { d =>
+      SnapshotLog.reset(d)
+      SnapshotLog.append(orders, d, col("o_orderkey"))
+    }
+    // one delete that matches rows (commits a DV) and one that matches
+    // none (commits nothing and leaves no DV segment)
+    def deletes(dir: String): Seq[Int] = Seq(
+      SnapshotLog.deleteMor(spark, dir, pmod(col("o_orderkey"), lit(7L)) === 3L),
+      SnapshotLog.deleteMor(spark, dir, col("o_orderkey") < 0L))
+    val folded = deletes(dirA)
+    assert(folded(1) === folded(0), "an empty delete must not commit")
+    assert(forced("dvcount", 2)(deletes(dirB)) === folded)
+    assert(dvSegs(dirA) === 1L)
+    assert(dvSegs(dirB) === dvSegs(dirA))
+    assert(tableRows(dirB) === tableRows(dirA))
+  }
+
+  test("forced EM-loss fallback reproduces the unigram trainer exactly") {
+    TextOps.releaseCaches()
+    try {
+      val (pieces, losses, _) = TextOps.unigramLoop(spark, sfDir, rounds = 2)
+      TextOps.releaseCaches()
+      val (pieces2, losses2, _) =
+        forced("em_loss", 2)(TextOps.unigramLoop(spark, sfDir, rounds = 2))
+      assert(losses2 === losses)
+      assert(pieces2 === pieces)
+    } finally TextOps.releaseCaches()
+  }
+
+  test("forced label-propagation fallback converges to the same labels") {
+    import spark.implicits._
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L)).toDF("src", "dst")
+    val edges = und.unionAll(und.select(col("dst").as("src"), col("src").as("dst")))
+    def labels(): Map[Long, Long] = TextOps.connectedLabels(edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val folded = labels()
+    assert(folded === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    // round 1 moves every label to its component minimum, round 2
+    // observes no change: two observed actions
+    assert(forced("label_prop", 2)(labels()) === folded)
   }
 }

@@ -25,8 +25,7 @@ trait SparkSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try body finally {
       spark.conf.set("spark.sql.adaptive.enabled", prev)
-      graft.queries.TextOps.releaseCaches()
-      graft.queries.VectorOps.releaseCaches()
+      GraftEngine.releaseCaches()
     }
   }
 }
@@ -52,13 +51,8 @@ object SparkSpec {
   }
 
   private def build(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftEngine.localBuilder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.requiredConf._1, Tables.requiredConf._2)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
