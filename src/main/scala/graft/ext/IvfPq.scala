@@ -1,8 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.CosineSimilarity
 
 /** Composed IVF-PQ index — the layout a production vector store
@@ -14,11 +16,11 @@ import graft.functions.CosineSimilarity
   *
   * A search composes the two prunings multiplicatively, then repairs
   * the quantization loss exactly:
-  *   1. probe: rank the kCells broadcast centroids per query, keep the
-  *      nProbe nearest cells — the scan now touches ~nProbe/kCells of
-  *      the corpus;
+  *   1. probe: rank the kCells centroids per query, keep the nProbe
+  *      nearest cells — the scan now touches ~nProbe/kCells of the
+  *      corpus;
   *   2. ADC scan: score ONLY the probed cells' PQ codes against the
-  *      query's broadcast m×k lookup table — pure array math per
+  *      query's m×k lookup table for that cell — pure array math per
   *      candidate, no raw vectors touched;
   *   3. exact re-rank: the per-query ADC shortlist (and nothing else)
   *      fetches raw embeddings and re-scores with exact cosine.
@@ -32,11 +34,17 @@ import graft.functions.CosineSimilarity
   * sample collect and the persist of the serving table, whatever k
   * (IvfPqSpec bounds it at 10 jobs; 4 at the fixture's 500 vectors).
   *
-  * Serve posture: centroids (kCells rows) and codebooks (m·kCodes rows)
-  * broadcast; the code table persists PARTITIONED BY CELL so a probe
-  * prunes whole directories at file listing (IvfPqSpec proves
-  * PartitionFilters + broadcast codebooks in one plan); the only
-  * per-query joins are against broadcast sides sized by |queries|.
+  * Serve posture: query-scale state goes to the driver, corpus-scale
+  * state never does. The quantizers already live there, so the probe
+  * ranking, each query's residual per probed cell and that cell's ADC
+  * table are plain loops over the collected query batch, and the
+  * tables reach the executors as one broadcast variable. The code
+  * table persists PARTITIONED BY CELL, so the one pass over it reads
+  * only the probed cells' files (a static PartitionFilter, which
+  * IvfPqSpec proves); each partition returns only a bounded shortlist
+  * per query, and only the shortlisted ids' raw vectors come back for
+  * the re-rank. A search is at most three Spark jobs for any grid of
+  * nProbe values.
   * Codes quantize PER-CELL RESIDUALS (see `build`) — the full IVFADC
   * layout, not the flat variant — which costs nothing at search time
   * beyond building the small ADC table per (query, probed cell)
@@ -98,13 +106,6 @@ object IvfPq {
           .otherwise(transform(col("embedding"),
             x => (x.cast("double") / col("_n")).cast("float"))))
       .drop("_n")
-
-  /** Element-wise float difference a - b (double intermediate, float
-    * storage — the shared promotion rule). Used for the residual a
-    * query keeps after a probed cell's centroid is subtracted.
-    */
-  private def minus(a: Column, b: Column): Column =
-    zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
 
   /** (vec_id, cell, codes) of every unit vector in `unit`, one compiled
     * map over the rows.
@@ -208,12 +209,73 @@ object IvfPq {
   def append(index: Index, newVectors: DataFrame): Index =
     index.copy(cells = index.cells.unionByName(encode(index, newVectors)))
 
-  /** IVFADC search: probe → ADC over probed cells → exact cosine
-    * re-rank of the shortlist. `vectors` is the raw-embedding relation
-    * the index was built from (only shortlist·|queries| rows of it are
-    * ever fetched); `queries`: (q_id long, q_emb array<float>).
-    * Returns (q_id, vec_id, cos_r, rn) — q50's serving schema, so the
-    * approximate path is drop-in for the exact one.
+  /** The first `nProbe` cells of the unit query `q`: centroids ranked
+    * by `cosine_sim` as `Descending` orders them.
+    */
+  private[graft] def probe(index: Index, q: Array[Float], nProbe: Int): Array[Int] =
+    index.quantizers.cents.zipWithIndex
+      .map { case (c, cell) => (CosineSimilarity.cosine(q, c.map(_.toFloat)), cell.toLong) }
+      .sorted(Descending).take(nProbe).map(_._2.toInt)
+
+  /** The code rows of `cells` — a search's one pass over the code
+    * table. On a saved index the predicate is a static PartitionFilter,
+    * so only the listed cells' files are read.
+    */
+  private[graft] def candidates(index: Index, cells: Seq[Int]): DataFrame =
+    index.cells.filter(col("cell").isin(cells: _*))
+      .select(col("vec_id"), col("cell"), col("codes"))
+
+  /** (score, id) pairs by score in Spark's sort order (NaN above every
+    * number, −0.0 = 0.0; `sign` −1 for descending), ties to the lower
+    * id.
+    */
+  private def byScore(sign: Int): Ordering[(Double, Long)] = (a, b) => {
+    val c = sign * SQLOrderingUtil.compareDoubles(a._1, b._1)
+    if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+  }
+
+  /** The shortlist cut's `orderBy(adc, vec_id)`. */
+  private val Ascending = byScore(1)
+
+  /** The probe's `orderBy(c_sim.desc, cell)` and the re-rank's
+    * `orderBy(cos_r.desc, vec_id)`.
+    */
+  private val Descending = byScore(-1)
+
+  /** The `cap` least (adc, vec_id) pairs offered, by `Ascending` — the
+    * rows `row_number() <= cap` over `orderBy(adc, vec_id)` keeps.
+    */
+  private final class Shortlist(cap: Int) {
+    private val heap = new java.util.PriorityQueue[(Double, Long)](Ascending.reverse)
+    def offer(h: (Double, Long)): Unit =
+      if (heap.size < cap) heap.add(h)
+      else if (cap > 0 && Ascending.lt(h, heap.peek)) { heap.poll(); heap.add(h) }
+    def hits: Iterator[(Double, Long)] = heap.iterator.asScala
+  }
+
+  /** The query-side state of a search, built on the driver: per query,
+    * its id, every cell's probe rank (1-based, 0 = not probed) and
+    * every probed cell's ADC table (`null` elsewhere).
+    */
+  private final class Probes(val qIds: Array[Long], val rank: Array[Array[Int]],
+      val tables: Array[Array[Array[Double]]]) extends Serializable
+
+  /** IVFADC search at every nProbe of `probeGrid`: probe → ADC shortlist
+    * over the probed cells → exact cosine re-rank. `vectors` is the
+    * raw-embedding relation the index was built from; `queries`: (q_id
+    * long, q_emb array<float>), one row per q_id. Returns (p, q_id,
+    * vec_id, cos_r, rn) in (p, q_id, rn) order — per p, q50's serving
+    * schema, so the approximate path is drop-in for the exact one.
+    *
+    * Scale contract: query-scale state goes to the driver, corpus-scale
+    * state never does (see the serve posture above). A search is at
+    * most three Spark jobs: the query collect (none for a local
+    * frame), the one pass over the probed cells' codes, which returns
+    * at most partitions·|queries|·|grid|·shortlist (adc, vec_id) pairs,
+    * and the fetch of the merged shortlists' raw vectors. Roundings and
+    * tie-breaks are Spark's (`round`, `SQLOrderingUtil.compareDoubles`,
+    * vec_id last), so the rows equal those of the windowed plan this
+    * replaced, which IvfPqSpec keeps as the reference.
     *
     * `excludeSelf` (default true) drops vec_id == q_id candidates —
     * the self-search semantics of the registered queries, where query
@@ -221,116 +283,92 @@ object IvfPq {
     * different id space: a numeric collision would otherwise silently
     * drop a true neighbor (see AnnIndex.search).
     */
-  /** `search` evaluated at EVERY nProbe of `probeGrid` in one job
-    * chain — the calibration sweep's shape (round-17 optimization,
-    * guide §2.4: the per-grid-point sequential searches re-paid the
-    * probe ranking, the ADC scan and three window passes six times
-    * over for one measurement each). The probe ranking runs once to
-    * the grid's max, every candidate's ADC score computes once, and a
-    * 6-way explode on the grid column replays the per-point shortlist
-    * cut as one windowed pass partitioned by (q_id, p). For each p the
-    * candidate set (cells with crn <= p), the ADC rounding, the
-    * shortlist tiebreak and the exact re-rank are expression-identical
-    * to `search(nProbe = p)`, so the returned rows per p are
-    * bit-identical to the sequential sweep's. Returns
-    * (p, q_id, vec_id, cos_r, rn).
-    */
   def searchGrid(index: Index, vectors: DataFrame, queries: DataFrame,
       topK: Int, probeGrid: Seq[Int], shortlist: Int,
       excludeSelf: Boolean = true): DataFrame = {
-    CosineSimilarity.ensureRegistered(queries.sparkSession)
-    val k = index.kCodes
-    val maxProbe = probeGrid.max
-    val qUnit = unitize(queries
-      .withColumnRenamed("q_emb", "embedding"))
-      .withColumnRenamed("embedding", "q_emb")
-    val qCells = qUnit
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("c_sim", expr("cosine_sim(q_emb, centroid)"))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("c_sim").desc, col("cell"))))
-      .filter(col("crn") <= maxProbe)
-      .select(col("q_id"), col("cell"), col("crn"),
-        (if (index.residual) minus(col("q_emb"), col("centroid"))
-         else col("q_emb")).as("q_res"))
-    val probes = PqIndex.distanceTable(index.codebooks, qCells, k,
-      index.subDim, keys = Seq("q_id", "cell", "crn"), vecCol = "q_res")
-    val short = index.cells.join(broadcast(probes), Seq("cell"))
-      .filter(if (excludeSelf) col("q_id") =!= col("vec_id") else lit(true))
-      .withColumn("adc", round(aggregate(
-        zip_with(col("codes"), sequence(lit(0), lit(index.m - 1)),
-          (c, s) => element_at(col("dt"), s * k + c + 1)),
-        lit(0.0), (acc, x) => acc + x), 9))
-      .withColumn("p", explode(array(probeGrid.map(lit): _*)))
-      .filter(col("crn") <= col("p"))
-      .withColumn("srn", row_number().over(
-        Window.partitionBy(col("q_id"), col("p"))
-          .orderBy(col("adc"), col("vec_id"))))
-      .filter(col("srn") <= shortlist)
-      .select(col("p"), col("q_id"), col("vec_id"))
-    short.join(vectors, Seq("vec_id"))
-      .join(broadcast(queries), Seq("q_id"))
-      .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("q_id"), col("p"))
-          .orderBy(col("cos_r").desc, col("vec_id"))))
-      .filter(col("rn") <= topK)
-      .select(col("p"), col("q_id"), col("vec_id"), col("cos_r"), col("rn"))
+    val spark = queries.sparkSession
+    val grid = probeGrid.distinct.sorted.toArray
+    val maxProbe = grid.max
+    val qs = queries.select(col("q_id"), col("q_emb")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val q = index.quantizers
+    // 1. driver: queries normalize like the index did (see unitize), so
+    //    the ADC tables measure L2 in the geometry the codes were
+    //    trained in; the re-rank scores the raw query
+    val rank = Array.fill(qs.length)(new Array[Int](index.kCells))
+    val tables = Array.fill(qs.length)(new Array[Array[Double]](index.kCells))
+    qs.indices.foreach { i =>
+      val u = Quantizer.unit(qs(i)._2)
+      probe(index, u, maxProbe).zipWithIndex.foreach { case (cell, r) =>
+        rank(i)(cell) = r + 1
+        tables(i)(cell) = Quantizer.adcTable(
+          if (q.residual) Quantizer.minus(u, q.cents(cell)) else u, q.books, q.m, q.k)
+      }
+    }
+    val probed = (0 until index.kCells).filter(c => rank.exists(_(c) > 0))
+    // 2. executors: one pass over the probed cells' codes
+    val short: Map[Int, Array[(Double, Long)]] =
+      if (probed.isEmpty) Map.empty
+      else {
+        import spark.implicits._
+        val bc = spark.sparkContext.broadcast(new Probes(qs.map(_._1), rank, tables))
+        val k = q.k
+        val g = grid.length
+        try candidates(index, probed).as[(Long, Int, Array[Int])].rdd
+          .mapPartitions { rows =>
+            val pr = bc.value
+            val lists = Array.fill(pr.qIds.length * g)(new Shortlist(shortlist))
+            rows.foreach { case (id, cell, codes) =>
+              var i = 0
+              while (i < pr.qIds.length) {
+                val r = pr.rank(i)(cell)
+                if (r > 0 && !(excludeSelf && pr.qIds(i) == id)) {
+                  val hit = (Quantizer.adc(pr.tables(i)(cell), codes, k), id)
+                  var j = 0
+                  while (j < g) { if (r <= grid(j)) lists(i * g + j).offer(hit); j += 1 }
+                }
+                i += 1
+              }
+            }
+            lists.iterator.zipWithIndex.flatMap { case (l, at) => l.hits.map((at, _)) }
+          }.collect()
+          .groupBy(_._1)
+          .map { case (at, hs) => at -> hs.map(_._2).sorted(Ascending).take(shortlist) }
+        finally bc.destroy()
+      }
+    // 3. exact re-rank of the shortlists on the driver
+    val ids = short.valuesIterator.flatMap(_.iterator.map(_._2)).toSet
+    val raw: Map[Long, Array[Array[Float]]] =
+      if (ids.isEmpty) Map.empty
+      else vectors.select(col("vec_id"), col("embedding"))
+        .filter(col("vec_id").isin(ids.toSeq: _*)).collect()
+        .groupBy(_.getLong(0))
+        .map { case (id, rs) => id -> rs.map(_.getSeq[Float](1).toArray) }
+    val byQuery = qs.indices.sortBy(qs(_)._1)
+    val rows = for {
+      j <- grid.indices
+      i <- byQuery
+      ((cos, id), r) <- short.getOrElse(i * grid.length + j, Array.empty[(Double, Long)])
+        .flatMap { case (_, id) => raw.getOrElse(id, Array.empty[Array[Float]])
+          .map(v => (Quantizer.round(CosineSimilarity.cosine(qs(i)._2, v), 6), id)) }
+        .sorted(Descending).take(topK).zipWithIndex
+    } yield Row(grid(j), qs(i)._1, id, cos, r + 1)
+    spark.createDataFrame(rows.asJava, GridSchema)
   }
 
+  private val GridSchema = StructType(Seq(
+    StructField("p", IntegerType, nullable = false),
+    StructField("q_id", LongType, nullable = false),
+    StructField("vec_id", LongType, nullable = false),
+    StructField("cos_r", DoubleType, nullable = false),
+    StructField("rn", IntegerType, nullable = false)))
+
+  /** `searchGrid` at the one grid point `nProbe`: (q_id, vec_id, cos_r,
+    * rn) in (q_id, rn) order.
+    */
   def search(index: Index, vectors: DataFrame, queries: DataFrame,
       topK: Int = 5, nProbe: Int = 8, shortlist: Int = 25,
-      excludeSelf: Boolean = true): DataFrame = {
-    CosineSimilarity.ensureRegistered(queries.sparkSession)
-    val k = index.kCodes
-    // queries normalize like the index did (see unitize): the ADC
-    // table must measure L2 in the same unit-sphere geometry the codes
-    // were trained in. Probe and re-rank metrics are cosine — scale
-    // invariant — so they could take either form; they use the same
-    // normalized queries to keep one lineage.
-    val qUnit = unitize(queries
-      .withColumnRenamed("q_emb", "embedding"))
-      .withColumnRenamed("embedding", "q_emb")
-    // 1. probe: nProbe nearest cells per query, ranked on the broadcast
-    //    centroid table — |queries|·kCells rows, never corpus-sized.
-    //    Each probe row keeps the query's RESIDUAL against that cell's
-    //    centroid: codes quantize residuals, so the ADC table must be
-    //    built per (query, probed cell) in the same residual frame.
-    val qCells = qUnit
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("c_sim", expr("cosine_sim(q_emb, centroid)"))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("c_sim").desc, col("cell"))))
-      .filter(col("crn") <= nProbe)
-      .select(col("q_id"), col("cell"),
-        (if (index.residual) minus(col("q_emb"), col("centroid"))
-         else col("q_emb")).as("q_res"))
-    // 2. ADC scan restricted to probed cells: the broadcast probe set
-    //    carries one residual distance table per (query, cell) —
-    //    |queries|·nProbe·m·k subspace distances against the broadcast
-    //    codebooks (PqIndex.distanceTable, keyed (q_id, cell) over the
-    //    residual), still query-scale — so the code scan is one join on
-    //    `cell` (partition-pruned when the index is on disk) plus
-    //    per-row array lookups
-    val probes = PqIndex.distanceTable(index.codebooks, qCells, k,
-      index.subDim, keys = Seq("q_id", "cell"), vecCol = "q_res")
-    val short = index.cells.join(broadcast(probes), Seq("cell"))
-      .filter(if (excludeSelf) col("q_id") =!= col("vec_id") else lit(true))
-      .withColumn("adc", round(aggregate(
-        zip_with(col("codes"), sequence(lit(0), lit(index.m - 1)),
-          (c, s) => element_at(col("dt"), s * k + c + 1)),
-        lit(0.0), (acc, x) => acc + x), 9))
-      .withColumn("srn", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("adc"), col("vec_id"))))
-      .filter(col("srn") <= shortlist)
-      .select(col("q_id"), col("vec_id"))
-    // 3. exact re-rank: only the shortlist fetches raw vectors
-    short.join(vectors, Seq("vec_id"))
-      .join(broadcast(queries), Seq("q_id"))
-      .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cos_r").desc, col("vec_id"))))
-      .filter(col("rn") <= topK)
-      .select(col("q_id"), col("vec_id"), col("cos_r"), col("rn"))
-  }
+      excludeSelf: Boolean = true): DataFrame =
+    searchGrid(index, vectors, queries, topK, Seq(nProbe), shortlist, excludeSelf)
+      .drop("p")
 }

@@ -60,33 +60,30 @@ object PqIndex {
     Index(Quantizer.codebookTable(spark, books, k), codes, m, k, subDim)
   }
 
-  /** Per-key ADC lookup table: one ordered array per key group where
-    * dt[sub·k + code] = exact squared L2 between the key's `vecCol`
+  /** Per-query ADC lookup table: one ordered array per q_id where
+    * dt[sub·k + code] = exact squared L2 between the query's q_emb
     * sub-slice and that codebook centroid. Built by joining the
     * m·k-row BROADCAST codebook against the (small) query set and
     * collecting the slots back into one array column — the
-    * "asymmetric" half of ADC. Shared by the flat PQ scan below
-    * (keys = q_id over q_emb) and the IVF-composed scan in `IvfPq`
-    * (keys = (q_id, cell) over the per-cell query residual).
+    * "asymmetric" half of ADC. (`IvfPq` builds the same slots on the
+    * driver: `Quantizer.adcTable`.)
     */
-  private[ext] def distanceTable(codebooks: DataFrame, queries: DataFrame,
-      k: Int, subDim: Int, keys: Seq[String] = Seq("q_id"),
-      vecCol: String = "q_emb"): DataFrame = {
+  private def distanceTable(codebooks: DataFrame, queries: DataFrame,
+      k: Int, subDim: Int): DataFrame = {
     val subDist = queries
       .crossJoin(broadcast(codebooks))
-      .withColumn("qsub", slice(col(vecCol), col("sub") * subDim + 1,
+      .withColumn("qsub", slice(col("q_emb"), col("sub") * subDim + 1,
         lit(subDim)))
       .withColumn("d2",
         aggregate(zip_with(col("qsub"), col("centroid"),
           (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
           lit(0.0), (acc, x) => acc + x))
-      .select(keys.map(col) :+ (col("sub") * k + col("code")).as("slot")
-        :+ col("d2"): _*)
-    // one ordered array per key: dt[slot] = d2  (slot is 0-based)
+      .select(col("q_id"), (col("sub") * k + col("code")).as("slot"), col("d2"))
+    // one ordered array per query: dt[slot] = d2  (slot is 0-based)
     subDist
-      .groupBy(keys.map(col): _*)
+      .groupBy(col("q_id"))
       .agg(array_sort(collect_list(struct(col("slot"), col("d2")))).as("pairs"))
-      .select(keys.map(col) :+ transform(col("pairs"), p => p("d2")).as("dt"): _*)
+      .select(col("q_id"), transform(col("pairs"), p => p("d2")).as("dt"))
   }
 
   /** Approximate top-k by ADC. `queries`: (q_id long, q_emb

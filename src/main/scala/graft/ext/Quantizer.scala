@@ -189,6 +189,46 @@ object Quantizer {
       .map { case (c, i) => (i / k, i % k, c) }.toDF("sub", "code", "centroid")
   }
 
+  /** `v` scaled to unit L2 norm: the norm is the double sum of squares,
+    * each element `(x / n).toFloat`, and a zero vector (n = 0) is left
+    * as it is — `IvfPq.unitize`'s rules for one driver-side vector.
+    */
+  def unit(v: Array[Float]): Array[Float] = {
+    var ss = 0.0
+    var i = 0
+    while (i < v.length) { ss += v(i).toDouble * v(i).toDouble; i += 1 }
+    val n = math.sqrt(ss)
+    if (n == 0.0) v else v.map(x => (x.toDouble / n).toFloat)
+  }
+
+  /** The m·k ADC table of `v` in `sub·k + code` slot order: slot
+    * `s·k + c` is the squared L2 between `v`'s subspace s and codebook
+    * row `s·k + c`, accumulated in double.
+    */
+  def adcTable(v: Array[Float], books: Array[Array[Double]], m: Int,
+      k: Int): Array[Double] = {
+    val subDim = books(0).length
+    Array.tabulate(m * k)(slot => dist(v, (slot / k) * subDim, books(slot)))
+  }
+
+  /** A code row's asymmetric distance: the m table slots its codes
+    * name, summed from 0.0 in subspace order, rounded to 9 places.
+    */
+  def adc(table: Array[Double], codes: Array[Int], k: Int): Double = {
+    var sum = 0.0
+    var s = 0
+    while (s < codes.length) { sum += table(s * k + codes(s)); s += 1 }
+    round(sum, 9)
+  }
+
+  /** Spark's `round(x, scale)` on a double: HALF_UP on the decimal
+    * form, NaN and ±Inf unchanged.
+    */
+  def round(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue
+
   /** The m product-quantization codes of `v`: per subspace, the nearest
     * row of that subspace's codebook.
     */

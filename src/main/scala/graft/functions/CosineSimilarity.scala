@@ -32,19 +32,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val xi = x.getFloat(i).toDouble
-      val yi = y.getFloat(i).toDouble
-      dot += xi * yi; na += xi * xi; nb += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(a.asInstanceOf[ArrayData].toFloatArray,
+      b.asInstanceOf[ArrayData].toFloatArray)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -74,6 +64,22 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object CosineSimilarity {
   val name = "cosine_sim"
+
+  /** The cosine loop on plain arrays: the interpreted `eval`, and
+    * driver-side scoring that must rank exactly as `cosine_sim` does.
+    * `doGenCode` emits the same loop.
+    */
+  def cosine(x: Array[Float], y: Array[Float]): Double = {
+    val n = math.min(x.length, y.length)
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val xi = x(i).toDouble
+      val yi = y(i).toDouble
+      dot += xi * yi; na += xi * xi; nb += yi * yi
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 
   val info = new ExpressionInfo(classOf[CosineSimilarity].getName, name)
 

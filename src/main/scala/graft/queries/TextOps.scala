@@ -210,9 +210,9 @@ object TextOps {
     * deployment builds its inverted-index statistics ONCE and serves
     * every query from them (the servedIndexes posture on the dense
     * side); recomputing the corpus tokenization per hybridTopK call
-    * priced the stats build into every serving row. Pinned via `pin`
-    * (released by releaseCaches); `n_docs` stays a lazy 1-row
-    * aggregate — broadcast into plans, never a driver action.
+    * priced the stats build into every serving row. All three are
+    * pinned via `pin` (released by releaseCaches) — the 1-row `n_docs`
+    * too, or every serve would re-scan the documents table to count it.
     */
   private val lexMemo =
     new graft.KeyedMemo[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
@@ -225,7 +225,7 @@ object TextOps {
         .distinct())
       val dfT = pin(dtok.groupBy(col("tok"))
         .agg(count(lit(1)).cast("double").as("df")))
-      val nDocs = docs.agg(count(lit(1)).cast("double").as("n_docs"))
+      val nDocs = pin(docs.agg(count(lit(1)).cast("double").as("n_docs")))
       (dtok, dfT, nDocs)
     }
 
@@ -234,9 +234,8 @@ object TextOps {
     * serving-only and the build is its own accounted line.
     */
   def warmLexStats(s: SparkSession, d: String): Unit = {
-    val (dtok, dfT, _) = lexStats(s, d)
-    dtok.write.format("noop").mode("overwrite").save()
-    dfT.write.format("noop").mode("overwrite").save()
+    val (dtok, dfT, nDocs) = lexStats(s, d)
+    Seq(dtok, dfT, nDocs).foreach(_.write.format("noop").mode("overwrite").save())
   }
 
   /** UniMax waterfill kernel shared by q172 and
@@ -340,10 +339,15 @@ object TextOps {
   /** Reciprocal-rank fusion (k=60) of a lexical and a dense top-k list
     * (q_id, doc_id, lex_rn / dense_rn) — the q156 fusion, shared with
     * the facade. A doc missing from one arm reports rank 0 there and
-    * contributes 0 to the fused score.
+    * contributes 0 to the fused score. Each list holds a (q_id, doc_id)
+    * pair at most once, so grouping the union of the two lists fuses
+    * them as a full outer join would, with one shuffle for both lists
+    * instead of one per side.
     */
   def rrfFuse(lexTop: DataFrame, denTop: DataFrame): DataFrame =
-    lexTop.join(denTop, Seq("q_id", "doc_id"), "full_outer")
+    lexTop.unionByName(denTop, allowMissingColumns = true)
+      .groupBy(col("q_id"), col("doc_id"))
+      .agg(max(col("lex_rn")).as("lex_rn"), max(col("dense_rn")).as("dense_rn"))
       .select(col("q_id"), col("doc_id"),
         coalesce(col("lex_rn"), lit(0)).as("lex_rn"),
         coalesce(col("dense_rn"), lit(0)).as("dense_rn"),
@@ -1854,7 +1858,7 @@ object TextOps {
 
     GraftQuery(
       "q156_hybrid_rrf",
-      "Hybrid retrieval fusion — reciprocal-rank fusion (RRF, Cormack et al. 2009, the k=60 constant every production hybrid search uses) of a LEXICAL ranking and a DENSE ranking for the same query set, the modern two-tower retrieval shape: query docs (doc_id < 5; doc_id = vec_id links the modalities, the q123 convention) rank the corpus (a) lexically by summed Lucene idf over shared distinct tokens (the q141 statistics on set-semantics tokens) and (b) densely by embedding cosine (the q50 kernel), each arm keeping its top-10 (self excluded, rounded scores, doc_id tiebreak); fusion full-outer-joins the two lists per query and scores 1/(60+rank) per arm (0 for an arm that missed the doc — reported as rank 0, so the output also audits ARM DISAGREEMENT, which on this fixture is total: embeddings are independent of text, exactly what q123 exposes). Determinism: idf terms round at 6dp before summing, cosines at 6dp, RRF scores at 6dp from exact integer ranks. Scale: the lexical arm is token-key shuffles with the 5-doc query side joined through a broadcast df table; the dense arm broadcasts 5 query vectors over one corpus pass; fusion joins two <=10-row-per-query lists — linear everywhere, the corpus is never pairwise.",
+      "Hybrid retrieval fusion — reciprocal-rank fusion (RRF, Cormack et al. 2009, the k=60 constant every production hybrid search uses) of a LEXICAL ranking and a DENSE ranking for the same query set, the modern two-tower retrieval shape: query docs (doc_id < 5; doc_id = vec_id links the modalities, the q123 convention) rank the corpus (a) lexically by summed Lucene idf over shared distinct tokens (the q141 statistics on set-semantics tokens) and (b) densely by embedding cosine (the q50 kernel), each arm keeping its top-10 (self excluded, rounded scores, doc_id tiebreak); fusion outer-merges the two lists per (query, doc) and scores 1/(60+rank) per arm (0 for an arm that missed the doc — reported as rank 0, so the output also audits ARM DISAGREEMENT, which on this fixture is total: embeddings are independent of text, exactly what q123 exposes). Determinism: idf terms round at 6dp before summing, cosines at 6dp, RRF scores at 6dp from exact integer ranks. Scale: the lexical arm is token-key shuffles with the 5-doc query side joined through a broadcast df table; the dense arm broadcasts 5 query vectors over one corpus pass; fusion merges two <=10-row-per-query lists — linear everywhere, the corpus is never pairwise.",
       (s, d) => {
         graft.functions.CosineSimilarity.ensureRegistered(s)
         // lexical arm through the MEMOIZED corpus stats + the shared

@@ -118,7 +118,8 @@ object VectorOps {
   /** GraftEngine's ANN serving entry: arbitrary caller queries against
     * the session's shared IVF-PQ index over the embeddings fixture.
     * Same index the registered q133/q139 serve from (one build per
-    * session); `queries`: (q_id long, q_emb array<float>).
+    * session); `queries`: (q_id long, q_emb array<float>). The result
+    * is a local frame already in (q_id, rn) order (`IvfPq.search`).
     */
   def annTopK(s: SparkSession, d: String, queries: DataFrame, topK: Int,
       nProbe: Int, shortlist: Int,
@@ -129,7 +130,6 @@ object VectorOps {
     }
     graft.ext.IvfPq.search(index, e, queries, topK, nProbe, shortlist,
       excludeSelf)
-      .orderBy(col("q_id"), col("rn"))
   }
 
   /** == Recall-targeted ANN auto-tuning (round-16 item 5) ==
@@ -189,12 +189,9 @@ object VectorOps {
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       // the exact answer set is the shared memo (round-17 item 4) —
-      // the calibration now prices ONLY the probe-grid sweep, and the
-      // whole grid runs as ONE job chain (IvfPq.searchGrid) instead of
-      // six sequential searches that each re-paid the probe ranking,
-      // the ADC scan and three windows for one measurement (round-17
-      // optimization, guide §2.4); per-p results are bit-identical to
-      // the sequential form's by expression identity
+      // the calibration prices ONLY the probe-grid sweep, and the whole
+      // grid is ONE search (IvfPq.searchGrid: one code pass scores every
+      // grid point) whose per-p rows equal six sequential searches
       val exactSet = exactAnnTop5(s, d, regime)
         .map { case (qid, vid, _) => (qid, vid) }.toSet
       val gotAll = graft.ext.IvfPq.searchGrid(index, e, q, topK = 5,
@@ -1667,7 +1664,7 @@ object VectorOps {
 
     GraftQuery(
       "q133_ivfpq_topk",
-      "Composed IVF-PQ production-ANN serving query (ext.IvfPq — the full IVFADC layout of Jégou et al. 2011, per-cell RESIDUAL codes): q79's cell pruning AND q109's code compression in ONE search over L2-NORMALIZED vectors (unit sphere ⇒ ADC's L2 order is monotone with the cosine serving metric — the normalize-before-PQ rule; skipping it cost 12 recall points on this fixture). Each query probes its nProbe=12 of 16 nearest cells (broadcast centroid rank), scores ONLY those cells' PQ codes by asymmetric distance against a per-(query,cell) residual lookup table built from the broadcast m=8×k=64 codebooks (8 code bytes per candidate, never raw vectors), and exact-cosine re-ranks the 96-deep ADC shortlist. Persisted cell-partitioned, a probe prunes index FILES (IvfPqSpec pins dynamic PartitionFilters + broadcast codebooks in one plan, recall>=0.9 vs the q50 exact baseline — observed 0.94 at sf0.001 and 0.92 at sf0.01, and 0.90 / 0.92 for the flat non-residual mode on this deliberately isotropic fixture where residuals have no cluster structure to exploit — and exact-equivalence at full probe in BOTH modes). Both quantizers train on the driver from one bounded sample and one compiled map encodes the corpus, so the build is a handful of Spark jobs. No SQL oracle — k-means boundaries aren't SQL-expressible — so the driver records rows-only.",
+      "Composed IVF-PQ production-ANN serving query (ext.IvfPq — the full IVFADC layout of Jégou et al. 2011, per-cell RESIDUAL codes): q79's cell pruning AND q109's code compression in ONE search over L2-NORMALIZED vectors (unit sphere ⇒ ADC's L2 order is monotone with the cosine serving metric — the normalize-before-PQ rule; skipping it cost 12 recall points on this fixture). Each query probes its nProbe=12 of 16 nearest cells (centroid rank on the driver), scores ONLY those cells' PQ codes in one pass by asymmetric distance against a per-(query,cell) residual lookup table built on the driver from the m=8×k=64 codebooks and broadcast (8 code bytes per candidate, never raw vectors), and exact-cosine re-ranks the 96-deep ADC shortlist — at most 3 Spark jobs per search. Persisted cell-partitioned, a probe prunes index FILES (IvfPqSpec pins the static cell PartitionFilter and that only the probed cells' files are read, recall>=0.9 vs the q50 exact baseline — observed 0.94 at sf0.001 and 0.92 at sf0.01, and 0.90 / 0.92 for the flat non-residual mode on this deliberately isotropic fixture where residuals have no cluster structure to exploit — and exact-equivalence at full probe in BOTH modes). Both quantizers train on the driver from one bounded sample and one compiled map encodes the corpus, so the build is a handful of Spark jobs. No SQL oracle — k-means boundaries aren't SQL-expressible — so the driver records rows-only.",
       (s, d) => {
         // the shared serving entry (memoized index, reused by q139 and
         // GraftEngine.annTopK) at the registered serving configuration
@@ -1692,10 +1689,8 @@ object VectorOps {
         // bound, so Int.MaxValue covers any corpus without the eager
         // count() job (and without the Long→Int overflow past 2^31
         // rows) the previous corpus-count approach paid per call
-        graft.ext.IvfPq
-          .search(index, e, q, topK = 5, nProbe = index.kCells,
-            shortlist = Int.MaxValue)
-          .orderBy(col("q_id"), col("rn"))
+        graft.ext.IvfPq.search(index, e, q, topK = 5,
+          nProbe = index.kCells, shortlist = Int.MaxValue)
       },
       Some(exactTopkSql)),
 

@@ -99,6 +99,64 @@ class GraftEngineSpec extends SparkSpec {
     } finally engine.releaseCaches()
   }
 
+  /** Root paths of every file scan in the plans `body` executes. The
+    * cached relations' own source scans are not children of their
+    * InMemoryTableScan, so a scan listed here read its files. A marker
+    * query run afterwards proves every earlier plan reached the
+    * listener (the listener bus delivers in order).
+    */
+  private def scansDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object plans extends AdaptiveSparkPlanHelper
+    val marker = s"scan-marker-${java.util.UUID.randomUUID}"
+    val paths = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.toString.contains(marker)) paths.add(marker)
+        else plans.collectWithSubqueries(qe.executedPlan) {
+          case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+        }.flatten.foreach(paths.add)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(marker)).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!paths.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(paths.contains(marker), "marker query never observed")
+      paths.toArray(new Array[String](0)).toSeq.filter(_ != marker)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("warmLexStats pins n_docs: a warm hybrid serve scans no documents") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    try {
+      queries.TextOps.warmLexStats(spark, sfDir)
+      val (_, _, nDocs) = queries.TextOps.lexStats(spark, sfDir)
+      assert(nDocs.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r.cacheBuilder.isCachedColumnBuffersLoaded
+      } === Some(true), "the memoized n_docs frame is not a materialized cache")
+      // a local query batch, so the batch itself reads no table
+      val q0 = engine.table("documents").filter(col("doc_id") < 5)
+        .select(col("doc_id").as("q_id"), col("text").as("q_text"))
+        .join(engine.table("embeddings").filter(col("vec_id") < 5)
+          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
+          Seq("q_id"))
+      val q = spark.createDataFrame(java.util.Arrays.asList(q0.collect(): _*), q0.schema)
+      val first = engine.hybridTopK(q).collect() // builds the served index
+      var second: Array[org.apache.spark.sql.Row] = null
+      val scanned = scansDuring { second = engine.hybridTopK(q).collect() }
+      assert(second.toSeq === first.toSeq)
+      // the dense re-rank still fetches its shortlist from embeddings
+      assert(scanned.exists(_.contains("embeddings")), s"scans seen: $scanned")
+      assert(!scanned.exists(_.contains("documents")),
+        s"a warm hybrid serve re-read documents: $scanned")
+    } finally engine.releaseCaches()
+  }
+
   test("engine construction pins the session timezone to UTC") {
     // the events loader's TimestampNTZ branch casts through the
     // SESSION zone; an externally-built non-UTC session would read

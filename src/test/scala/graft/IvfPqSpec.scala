@@ -5,14 +5,19 @@ import org.apache.spark.sql.functions._
 import graft.ext.{IvfPq, Quantizer}
 
 /** Composed IVF-PQ (IVFADC): exactness at full probe, recall of the
-  * registered pruned config, and the one-plan scale proof — a probe
-  * over the saved index must show cell PartitionFilters AND broadcast
-  * codebooks in the SAME physical plan.
+  * registered pruned config, the driver-side search kernel row-identical
+  * to the windowed expression search it replaced (kept below as the
+  * reference), and the scale proofs — a probe over the saved index reads
+  * only the probed cells' files, and a served-size search is at most
+  * three Spark jobs.
   */
 class IvfPqSpec extends SparkSpec {
 
-  private lazy val emb = Tables.load(spark, sfDir, "embeddings")
-    .select(col("vec_id"), col("embedding"))
+  // the reference plans below score with the `cosine_sim` expression
+  private lazy val emb = {
+    graft.functions.CosineSimilarity.ensureRegistered(spark)
+    Tables.load(spark, sfDir, "embeddings").select(col("vec_id"), col("embedding"))
+  }
   private lazy val index = IvfPq.build(spark, emb, dim = 64, kCells = 8)
 
   private def queries = emb.filter(col("vec_id") < 10)
@@ -54,7 +59,7 @@ class IvfPqSpec extends SparkSpec {
     assert(recall >= 0.9, s"recall=$recall")
   }
 
-  test("saved index: probe plan prunes cell partitions AND broadcasts codebooks") {
+  test("saved index: the candidate scan prunes cell partitions statically") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
     IvfPq.save(index, dir)
     val loaded = IvfPq.load(spark, dir)
@@ -66,23 +71,27 @@ class IvfPqSpec extends SparkSpec {
     val fromDisk = IvfPq.search(loaded, emb, queries, nProbe = 8, shortlist = 50)
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
     assert(fromDisk === fromMem)
-    // THE one-plan scale claim: in a single search plan over the disk
-    // index, (a) the cell-partitioned code scan is pruned by the probe
-    // join — dynamic partition pruning at file listing, not a row
-    // filter — and (b) the PQ codebooks reach the ADC stage through a
-    // BroadcastExchange. staticPlan disables AQE so the shape is
-    // inspectable pre-execution.
-    staticPlan {
-      val plan = IvfPq.search(loaded, emb, queries, nProbe = 3, shortlist = 25)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-      val pf = plan.linesIterator.filter(_.trim.startsWith("PartitionFilters:"))
-        .mkString("\n")
-      assert(pf.contains("dynamicpruning") && pf.contains("cell"),
-        s"no dynamic cell pruning on the code scan:\n$pf")
-      assert(plan.contains("BroadcastExchange"),
-        "codebook/probe sides are not broadcast")
-    }
+    // the scale claim: the search's one pass over the disk index is
+    // pruned at file listing by a static `cell` PartitionFilter, not a
+    // row filter, and reads exactly the probed cells' files. One query
+    // at nProbe = 3 of 8 probes a strict subset of the cells.
+    val q0 = queries.filter(col("q_id") === 0).collect()
+      .map(_.getSeq[Float](1).toArray).head
+    val cells = IvfPq.probe(loaded, Quantizer.unit(q0), 3).toSeq.sorted
+    assert(cells.length === 3)
+    val scan = IvfPq.candidates(loaded, cells).queryExecution.sparkPlan
+      .collectFirst { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+      .getOrElse(fail("no file scan under the candidate pass"))
+    assert(scan.partitionFilters.exists(_.references.exists(_.name == "cell")),
+      s"no cell PartitionFilter: ${scan.partitionFilters}")
+    val read = scan.selectedPartitions.toPartitionArray
+      .map(_.filePath.toPath.toUri.getPath).toSet
+    val probedFiles = cells.flatMap { c =>
+      val cellDir = new java.io.File(s"$dir/cells.parquet/cell=$c")
+      cellDir.listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(_.getAbsolutePath)
+    }.toSet
+    assert(probedFiles.nonEmpty && read === probedFiles)
   }
 
   test("encode through the standing quantizers reproduces the built codes") {
@@ -282,12 +291,13 @@ class IvfPqSpec extends SparkSpec {
     } finally small.close()
   }
 
-  test("a served-size build runs at most 10 Spark jobs") {
-    // jobs carry this thread's job group; a marker job run afterwards
-    // proves every earlier start event has reached the listener (the
-    // listener bus delivers in order)
+  /** The Spark jobs `body` runs: jobs carry this thread's job group; a
+    * marker job run afterwards proves every earlier start event has
+    * reached the listener (the listener bus delivers in order).
+    */
+  private def jobsOf[A](body: => A): (A, Int) = {
     val sc = spark.sparkContext
-    val group = s"ivfpq-build-${java.util.UUID.randomUUID}"
+    val group = s"ivfpq-jobs-${java.util.UUID.randomUUID}"
     val groups = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -298,20 +308,152 @@ class IvfPqSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "counted build")
-      val built = IvfPq.build(spark, emb, dim = 64, kCells = 16, kCodes = 64)
+      sc.setJobGroup(group, "counted")
+      val out = body
       sc.setJobGroup(group + "-marker", "marker")
       spark.range(1).count()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (!groups.contains(group + "-marker") && System.nanoTime() < deadline)
         Thread.sleep(10)
       assert(groups.contains(group + "-marker"), "marker job never observed")
-      val jobs = groups.toArray.count(_ == group)
-      assert(jobs >= 1 && jobs <= 10, s"IvfPq.build ran $jobs Spark jobs")
-      built.close()
+      (out, groups.toArray.count(_ == group))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("a served-size build runs at most 10 Spark jobs") {
+    val (built, jobs) = jobsOf(
+      IvfPq.build(spark, emb, dim = 64, kCells = 16, kCodes = 64))
+    try assert(jobs >= 1 && jobs <= 10, s"IvfPq.build ran $jobs Spark jobs")
+    finally built.close()
+  }
+
+  /** The windowed expression search the driver-side kernel replaced,
+    * kept as its reference: probe ranking by a crossJoin with the
+    * broadcast centroids and a window, one ADC table per (query, probed
+    * cell) collected from a crossJoin with the codebooks, the code scan
+    * as a join on `cell` with `zip_with` lookups, and two windows for
+    * the shortlist cut and the exact re-rank.
+    */
+  private def referenceSearch(index: IvfPq.Index, vectors: DataFrame,
+      queries: DataFrame, topK: Int, nProbe: Int, shortlist: Int,
+      excludeSelf: Boolean): DataFrame = {
+    val k = index.kCodes
+    val subDim = index.subDim
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
+    val qUnit = IvfPq.unitize(queries.withColumnRenamed("q_emb", "embedding"))
+      .withColumnRenamed("embedding", "q_emb")
+    val qCells = qUnit
+      .crossJoin(broadcast(index.centroids))
+      .withColumn("c_sim", expr("cosine_sim(q_emb, centroid)"))
+      .withColumn("crn", row_number().over(w.orderBy(col("c_sim").desc, col("cell"))))
+      .filter(col("crn") <= nProbe)
+      .select(col("q_id"), col("cell"),
+        (if (index.residual) zip_with(col("q_emb"), col("centroid"),
+          (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
+         else col("q_emb")).as("q_res"))
+    val probes = qCells
+      .crossJoin(broadcast(index.codebooks))
+      .withColumn("qsub", slice(col("q_res"), col("sub") * subDim + 1, lit(subDim)))
+      .withColumn("d2", aggregate(zip_with(col("qsub"), col("centroid"),
+          (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
+        lit(0.0), (acc, x) => acc + x))
+      .select(col("q_id"), col("cell"), (col("sub") * k + col("code")).as("slot"), col("d2"))
+      .groupBy(col("q_id"), col("cell"))
+      .agg(array_sort(collect_list(struct(col("slot"), col("d2")))).as("pairs"))
+      .select(col("q_id"), col("cell"), transform(col("pairs"), p => p("d2")).as("dt"))
+    val short = index.cells.join(broadcast(probes), Seq("cell"))
+      .filter(if (excludeSelf) col("q_id") =!= col("vec_id") else lit(true))
+      .withColumn("adc", round(aggregate(
+        zip_with(col("codes"), sequence(lit(0), lit(index.m - 1)),
+          (c, s) => element_at(col("dt"), s * k + c + 1)),
+        lit(0.0), (acc, x) => acc + x), 9))
+      .withColumn("srn", row_number().over(w.orderBy(col("adc"), col("vec_id"))))
+      .filter(col("srn") <= shortlist)
+      .select(col("q_id"), col("vec_id"))
+    short.join(vectors, Seq("vec_id"))
+      .join(broadcast(queries), Seq("q_id"))
+      .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
+      .withColumn("rn", row_number().over(w.orderBy(col("cos_r").desc, col("vec_id"))))
+      .filter(col("rn") <= topK)
+      .select(col("q_id"), col("vec_id"), col("cos_r"), col("rn"))
+  }
+
+  /** (q_id, vec_id, cos_r bits, rn) rows: NaN-safe, −0.0-strict. */
+  private def bits(rows: Array[org.apache.spark.sql.Row], off: Int = 0) =
+    rows.map(r => (r.getLong(off), r.getLong(off + 1),
+      java.lang.Double.doubleToLongBits(r.getDouble(off + 2)), r.getInt(off + 3)))
+      .sorted.toSeq
+
+  /** The kernel's `search` (in (q_id, rn) order) and `searchGrid` rows
+    * equal the reference's at every grid point, for every topK ≤ 5.
+    */
+  private def assertMatches(idx: IvfPq.Index, corpus: DataFrame, q: DataFrame,
+      grid: Seq[Int], shortlist: Int, excludeSelf: Boolean,
+      topKs: Seq[Int] = Seq(1, 5)): Unit = {
+    val ref = grid.map(p => p -> referenceSearch(idx, corpus, q, 5, p, shortlist,
+      excludeSelf).collect()).toMap
+    topKs.foreach { topK =>
+      val gridRows = IvfPq.searchGrid(idx, corpus, q, topK, grid, shortlist,
+        excludeSelf).collect()
+      grid.foreach { p =>
+        val want = bits(ref(p).filter(_.getInt(3) <= topK))
+        val got = IvfPq.search(idx, corpus, q, topK, p, shortlist, excludeSelf).collect()
+        val ctx = s"p=$p shortlist=$shortlist topK=$topK excludeSelf=$excludeSelf"
+        assert(got.map(r => (r.getLong(0), r.getInt(3))).toSeq ===
+          got.map(r => (r.getLong(0), r.getInt(3))).sorted.toSeq, s"order $ctx")
+        assert(bits(got) === want, ctx)
+        assert(bits(gridRows.filter(_.getInt(0) == p), 1) === want, s"grid $ctx")
+      }
+    }
+  }
+
+  test("kernel search == the windowed reference (residual and flat, full grid)") {
+    val n = emb.count().toInt
+    val flat = IvfPq.build(spark, emb, dim = 64, kCells = 8, residual = false)
+    try Seq(index, flat).foreach { idx =>
+      for (shortlist <- Seq(1, 25, n); excludeSelf <- Seq(true, false))
+        assertMatches(idx, emb, queries, Seq(1, 3, idx.kCells), shortlist, excludeSelf)
+    } finally flat.close()
+  }
+
+  test("kernel == reference on a tie-heavy corpus and a zero query") {
+    // three copies of 60 vectors: every ADC score and cosine ties three
+    // ways, so only the vec_id tie-break separates the rows
+    val base = emb.filter(col("vec_id") < 60)
+    val corpus = base.unionByName(
+        base.select((col("vec_id") + 1000).as("vec_id"), col("embedding")))
+      .unionByName(base.select((col("vec_id") + 2000).as("vec_id"), col("embedding")))
+    val idx = IvfPq.build(spark, corpus, dim = 64, kCells = 4, kCodes = 8)
+    // the zero query unitizes to itself and scores NaN against everything
+    val zero = spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row(999999L, Array.fill(64)(0f).toSeq)),
+        queries.schema)
+    val q = queries.unionByName(zero)
+    try for (shortlist <- Seq(1, 4, 180); excludeSelf <- Seq(true, false))
+      assertMatches(idx, corpus, q, Seq(1, 2, idx.kCells), shortlist, excludeSelf,
+        topKs = Seq(5))
+    finally idx.close()
+  }
+
+  test("kernel answers are independent of the code table's partitioning") {
+    val re = index.copy(cells = index.cells.repartition(7))
+    val a = IvfPq.searchGrid(index, emb, queries, 5, Seq(1, 3, 8), 25).collect()
+    val b = IvfPq.searchGrid(re, emb, queries, 5, Seq(1, 3, 8), 25).collect()
+    assert(b.toSeq === a.toSeq)
+  }
+
+  test("a served-size search runs at most 3 Spark jobs") {
+    val served = IvfPq.build(spark, emb, dim = 64, kCells = 16, kCodes = 64)
+    try {
+      val q8 = emb.filter(col("vec_id") < 8)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+      val (rows, jobs) = jobsOf(IvfPq.search(served, emb, q8, topK = 5,
+        nProbe = 12, shortlist = 96).collect())
+      assert(rows.length === 40)
+      assert(jobs >= 1 && jobs <= 3, s"IvfPq.search ran $jobs Spark jobs")
+    } finally served.close()
   }
 }
