@@ -180,6 +180,10 @@ object SnapshotLog {
     try f(s.iterator().asScala) finally s.close()
   }
 
+  /** Deletes `p` and everything under it, innermost first. */
+  private def dropDir(p: Path): Unit =
+    walked(p)(_.toSeq).reverse.foreach(Files.deleteIfExists)
+
   /** Latest committed version, or -1 when the log is empty.
     *
     * This is every read/write path's visibility choke point, so it is
@@ -741,9 +745,9 @@ object SnapshotLog {
     // null-fill it, so a non-null contract would be a lie on read
     // __graft_dv_* are the read path's reserved (file, row-index) key
     // names: a user column by that name would be silently overwritten
-    // by applyDvs, corrupting the anti-join keys and touched-file
+    // by liveRows, corrupting the anti-join keys and touched-file
     // discovery — refuse it loudly at the schema gate every data-
-    // landing op (append/merge/mergeMor, retry variants) passes through
+    // landing op (append/merge/mergeMor) passes through
     merged.fields.foreach { f =>
       require(!f.name.startsWith("__graft_dv_"),
         s"column '${f.name}' collides with the snapshot log's reserved " +
@@ -763,10 +767,21 @@ object SnapshotLog {
     * footer read only on the legacy path; logs written by this code
     * always hit the manifest line.
     */
-  private def gateSchema(spark: SparkSession, dir: String,
-      prev: Int): Option[org.apache.spark.sql.types.StructType] =
-    if (prev < 0) None
-    else schemaOf(dir, prev).orElse(Some(readAsOf(spark, dir, prev).schema))
+  private def gateSchema(spark: SparkSession,
+      h: Head): Option[org.apache.spark.sql.types.StructType] =
+    if (h.prev < 0) None
+    else h.schema.orElse(Some(readAsOf(spark, h.dir, h.prev).schema))
+
+  /** The `#schema` line of a commit landing `df` over `h`, through the
+    * add-only gate — every data-landing op runs it BEFORE any data
+    * lands, so a refused commit leaves no orphan segment behind.
+    */
+  private def gateLine(h: Head, df: DataFrame): String = {
+    val spark = df.sparkSession
+    val sc = evolvedSchema(gateSchema(spark, h), df.schema,
+      spark.sessionState.analyzer.resolver)
+    s"#schema\t${sc.json}"
+  }
 
   /** == Stable column ids (round-17 — Delta's column-mapping `name`
     * mode, the ARCHITECTURE.md design note built) ==
@@ -968,11 +983,11 @@ object SnapshotLog {
     */
   def renameColumn(spark: SparkSession, dir: String, oldName: String,
       newName: String): Int = {
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to rename in $dir — commit first")
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to rename in $dir — commit first")
     require(oldName != newName, "rename to the identical name is a no-op")
     val resolver = spark.sessionState.analyzer.resolver
-    val sc = schemaOf(dir, prev).getOrElse(
+    val sc = h.schema.getOrElse(
       throw new IllegalArgumentException(
         s"$dir predates schema logging — commit once under the current " +
           "engine before renaming (rename needs the logged schema)"))
@@ -986,7 +1001,7 @@ object SnapshotLog {
         "deletion-vector key namespace (__graft_dv_*)")
     require(!newName.contains('\t') && !newName.contains('\n'),
       "column names must be tab/newline-free")
-    val ids = colidsOf(dir, prev).getOrElse(
+    val ids = colidsOf(dir, h.prev).getOrElse(
       colIdsFor(None, sc.fields.toSeq.map(_.name)))
     val newIds = ids.map(c =>
       if (ciEq(c.cur, oldName)) c.copy(history = c.history :+ newName)
@@ -1017,12 +1032,9 @@ object SnapshotLog {
               case _ => l
             }
           })
-      val v = prev + 1
-      val segs = segments(dir, prev)
-      publish(dir, v, commitLines(dir, v, segs, segs,
-        meta(dir, prev).carried.copy(opType = Some("rename")),
-        Some(s"#schema\t${newSchema.json}"),
-        colidsOverride = Some(newIds)))
+      val v = commit(h.stage(h.segs,
+        h.meta.carried.copy(opType = Some("rename")),
+        Some(s"#schema\t${newSchema.json}"), colids = Some(newIds)))
       rewritten.foreach { lines =>
         val tmp = logDir(dir).resolve(s".config.tmp-${writerToken()}")
         Files.write(tmp,
@@ -1058,19 +1070,51 @@ object SnapshotLog {
     * compaction that rewrote their segments away. Empty log → empty
     * set.
     */
-  def committedBatches(dir: String): Set[Long] = {
-    val v = version(dir)
-    if (v < 0) Set.empty
-    else segments(dir, v).flatMap(_.tag).toSet ++ meta(dir, v).batches
+  def committedBatches(dir: String): Set[Long] = readHead(dir).batches
+
+  /** The log's head as every write op reads it: the version the op
+    * builds on (`prev`, -1 for an empty log) with that version's
+    * segments, meta and logged schema. Every commit is staged against
+    * its head through `stage`, which diffs the new segment list against
+    * the head's, and publishes through `commit`.
+    */
+  private final case class Head(dir: String, prev: Int, segs: Seq[Segment],
+      meta: ManifestMeta,
+      schema: Option[org.apache.spark.sql.types.StructType]) {
+    def v: Int = prev + 1
+
+    def schemaLine: Option[String] = schema.map(sc => s"#schema\t${sc.json}")
+
+    /** Every batch id committed up to the head (`committedBatches`). */
+    def batches: Set[Long] = segs.flatMap(_.tag).toSet ++ meta.batches
+
+    /** The head's live rows of segments `rels`, deletion vectors applied
+      * (`liveRows`).
+      */
+    def scan(spark: SparkSession, rels: Seq[String] = segs.map(_.relPath),
+        keepPos: Boolean = false): DataFrame =
+      liveRows(spark, dir, prev, meta.dvs, rels, keepPos)
+
+    def stage(newSegs: Seq[Segment], m: ManifestMeta,
+        schemaLine: Option[String] = schemaLine,
+        colids: Option[Seq[ColId]] = None): StagedCommit =
+      StagedCommit(dir, v,
+        commitLines(dir, v, newSegs, segs, m, schemaLine, colids))
   }
 
-  /** Publish `lines` as manifest v — atomically (hard-link of a fully
-    * written temp file: readers never see a partial manifest) and
-    * EXCLUSIVELY (the link fails if v already exists, so of two racing
-    * writers exactly one wins and the loser fails loudly instead of
-    * clobbering — the single-writer contract, enforced rather than
-    * assumed).
-    */
+  private def readHead(dir: String): Head = {
+    val prev = version(dir)
+    if (prev < 0) Head(dir, prev, Nil, ManifestMeta(Set.empty, Set.empty), None)
+    else Head(dir, prev, segments(dir, prev), meta(dir, prev),
+      schemaOf(dir, prev))
+  }
+
+  /** Publishes a staged commit; returns its version. */
+  private def commit(st: StagedCommit): Int = {
+    publish(st.dir, st.v, st.lines)
+    st.v
+  }
+
   /** A name fragment no two writers share — process id + thread id +
     * a random token. Thread id alone is NOT enough: two single-threaded
     * JVMs both run on thread 1, and a shared temp path would let the
@@ -1082,8 +1126,8 @@ object SnapshotLog {
     s"$pid-$tid-${java.util.UUID.randomUUID().toString.take(8)}"
   }
 
+  /** Publish `lines` as manifest v (see `publishExclusive`). */
   private[graft] def publish(dir: String, v: Int, lines: Seq[String]): Unit = {
-    val tmp = logDir(dir).resolve(s".v$v.manifest.tmp-${writerToken()}")
     // every commit stamps its wall-clock time (`#ts`, epoch millis) —
     // the single choke point, so timestamp time travel (`versionAt`)
     // works for every commit kind without each caller remembering to.
@@ -1093,13 +1137,29 @@ object SnapshotLog {
     val stamped =
       if (lines.exists(_.startsWith("#ts\t"))) lines
       else lines :+ s"#ts\t${System.currentTimeMillis()}"
-    Files.write(tmp, stamped.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    val target = logDir(dir).resolve(s"v$v.manifest")
+    publishExclusive(logDir(dir).resolve(s"v$v.manifest"),
+      stamped.mkString("\n"),
+      s"snapshot v$v in $dir was committed by another writer")
+  }
+
+  /** Publish `content` at `target` atomically (hard-link of a fully
+    * written temp file: readers never see a partial file) and
+    * EXCLUSIVELY (the link fails if `target` already exists, so of two
+    * racing writers exactly one wins and the loser gets a
+    * ConcurrentModificationException carrying `lost` instead of
+    * clobbering — the single-writer contract, enforced rather than
+    * assumed). Manifests, transaction intents and pointers, and
+    * streaming checkpoint entries all publish through here.
+    */
+  private[graft] def publishExclusive(target: Path, content: String,
+      lost: => String): Unit = {
+    val tmp = target.resolveSibling(s".${target.getFileName}.tmp-${writerToken()}")
+    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+    def lose(e: Throwable): Nothing =
+      throw new java.util.ConcurrentModificationException(lost, e)
     try Files.createLink(target, tmp)
     catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"snapshot v$v in $dir was committed by another writer", e)
+      case e: java.nio.file.FileAlreadyExistsException => lose(e)
       case _: UnsupportedOperationException =>
         // Filesystems without hard links (some FUSE/NFS/object-store
         // mounts) fall back to a no-replace move: still atomic and
@@ -1107,11 +1167,7 @@ object SnapshotLog {
         // guaranteed atomic with the move everywhere — the documented
         // cluster posture (swap for a CAS service) covers those.
         try Files.move(tmp, target)
-        catch {
-          case e: java.nio.file.FileAlreadyExistsException =>
-            throw new java.util.ConcurrentModificationException(
-              s"snapshot v$v in $dir was committed by another writer", e)
-        }
+        catch { case e: java.nio.file.FileAlreadyExistsException => lose(e) }
     } finally Files.deleteIfExists(tmp)
   }
 
@@ -1382,6 +1438,58 @@ object SnapshotLog {
       .getOrElse(df.sparkSession.read.parquet(path).count())
   }
 
+  /** A fresh segment name of the commit over `h`:
+    * `seg-<v>-<kind>-<token>`, or `seg-<v>-<token>` for an empty
+    * `kind`. The per-writer token matters: the manifest link is
+    * exclusive, but two racing commits that both computed version v
+    * would otherwise BOTH write the same segment dir (mode overwrite)
+    * BEFORE the publish race resolves — the loser's data would silently
+    * replace the winner's committed rows under the winner's manifest
+    * and zone map. Unique names make the manifest's exclusivity protect
+    * the data too; the loser's orphan directory is reclaimed by vacuum.
+    */
+  private def segRel(h: Head, kind: String): String =
+    if (kind.isEmpty) s"seg-${h.v}-${writerToken()}"
+    else s"seg-${h.v}-$kind-${writerToken()}"
+
+  /** Write `df` as a `kind` data segment of the commit over `h`, its
+    * zone map and sidecar stats in the same pass (`writeSegWithStats`).
+    */
+  private def writeDataSeg(h: Head, kind: String, df: DataFrame,
+      statsCol: Column): Segment = {
+    val rel = segRel(h, kind)
+    val (mn, mx) = writeSegWithStats(df, h.dir, absPath(h.dir, rel), statsCol)
+    Segment(rel, mn, mx)
+  }
+
+  /** Write `df` as the `kind` change segment of the commit over `h`,
+    * its row count observed on the same pass: the dir-relative name
+    * when any row landed, None — and no artifact left behind — when
+    * none did.
+    */
+  private def writeTombstone(h: Head, kind: String,
+      df: DataFrame): Option[String] = {
+    val rel = segRel(h, kind)
+    val p = absPath(h.dir, rel)
+    if (writeCountObserved(df, p) == 0L) {
+      dropDir(Paths.get(p))
+      None
+    } else {
+      writeSegColIds(h.dir, p, df.columns.toSeq)
+      Some(rel)
+    }
+  }
+
+  /** Write `df` as the `kind` change segment of the copy-on-write
+    * commit over `h`, unconditionally; returns its dir-relative name.
+    */
+  private def writeChangeSeg(h: Head, kind: String, df: DataFrame): String = {
+    val rel = segRel(h, kind)
+    df.write.mode("overwrite").parquet(absPath(h.dir, rel))
+    writeSegColIds(h.dir, absPath(h.dir, rel), df.columns.toSeq)
+    rel
+  }
+
   /** The Bloom sidecars of a segment — empty when none were recorded
     * (pre-config segments, or a table that never configured one);
     * absent blooms never skip, the zone-map rule.
@@ -1446,13 +1554,8 @@ object SnapshotLog {
     }
     val df =
       if (hit.isEmpty) readAsOf(spark, dir, v).limit(0)
-      else {
-        val dvs = meta(dir, v).dvs
-        applyDvs(spark, dir, dvs,
-          readSegs(spark, dir, v, hit.map(_.relPath),
-            keepDvKeys = dvs.nonEmpty))
-          .filter(statExpr >= lo && statExpr <= hi)
-      }
+      else liveRows(spark, dir, v, meta(dir, v).dvs, hit.map(_.relPath))
+        .filter(statExpr >= lo && statExpr <= hi)
     (df, hit.size, segs.size)
   }
 
@@ -1464,11 +1567,8 @@ object SnapshotLog {
     * Returns the new version number.
     */
   def append(df: DataFrame, dir: String, statsCol: Column,
-      batchTag: Option[Long] = None): Int = {
-    val st = stageAppend(df, dir, statsCol, batchTag)
-    publish(st.dir, st.v, st.lines)
-    st.v
-  }
+      batchTag: Option[Long] = None): Int =
+    commit(stageAppend(df, dir, statsCol, batchTag))
 
   /** A fully prepared single-table commit — everything the op did
     * except the manifest publish. The segment data is already on disk
@@ -1484,33 +1584,28 @@ object SnapshotLog {
   def stageAppend(df: DataFrame, dir: String, statsCol: Column,
       batchTag: Option[Long] = None): StagedCommit = {
     Files.createDirectories(logDir(dir))
-    val prev = version(dir)
-    val v = prev + 1
-    // schema gate BEFORE any data lands: a refused append must leave
-    // neither a manifest nor an orphan segment directory behind
-    val snapSchema = evolvedSchema(
-      gateSchema(df.sparkSession, dir, prev), df.schema,
-      df.sparkSession.sessionState.analyzer.resolver)
-    // The segment name carries a per-writer token: the manifest link is
-    // exclusive, but two racing appends that both computed version v
-    // would otherwise BOTH write seg-<v> (mode overwrite) BEFORE the
-    // publish race resolves — the loser's data would silently replace
-    // the winner's committed rows under the winner's manifest and zone
-    // map. Unique names make the manifest's exclusivity protect the
-    // data too; the loser's orphan directory is reclaimed by vacuum.
-    val rel = s"seg-$v-${writerToken()}"
-    val segPath = Paths.get(dir, rel).toString
+    val h = readHead(dir)
+    val (seg, schemaLine) = writeAppend(df, h, statsCol, batchTag)
+    appendOver(h, seg, schemaLine)
+  }
+
+  /** `append`'s data half: the schema gate against `h`, then the one
+    * segment write. Returns the segment and the gated `#schema` line.
+    */
+  private def writeAppend(df: DataFrame, h: Head, statsCol: Column,
+      batchTag: Option[Long]): (Segment, String) = {
+    val schemaLine = gateLine(h, df)
     // write + stat aggregate in ONE pass (observe-fold, guide §1.2)
-    val (mn, mx) = writeSegWithStats(df, dir, segPath, statsCol)
-    val carried = if (prev < 0) Nil else segments(dir, prev)
+    (writeDataSeg(h, "", df, statsCol).copy(tag = batchTag), schemaLine)
+  }
+
+  /** `append`'s manifest half: the written `seg` committed over `h`. */
+  private def appendOver(h: Head, seg: Segment,
+      schemaLine: String): StagedCommit =
     // batches/compacted carry forward; cdcDel does NOT — it records
     // what its OWN version deleted, never standing state
-    val carriedMeta = (if (prev < 0) ManifestMeta(Set.empty, Set.empty)
-      else meta(dir, prev).carried).copy(opType = Some("append"))
-    StagedCommit(dir, v, commitLines(dir, v,
-      carried :+ Segment(rel, mn, mx, batchTag), carried, carriedMeta,
-      Some(s"#schema\t${snapSchema.json}")))
-  }
+    h.stage(h.segs :+ seg, h.meta.carried.copy(opType = Some("append")),
+      Some(schemaLine))
 
   /** == Deletion vectors (merge-on-read, round 14) ==
     * Copy-on-write `delete` prices a 10-row delete at a full rewrite
@@ -1533,31 +1628,36 @@ object SnapshotLog {
   private def dvFileKey: Column =
     regexp_extract(col("_metadata.file_path"), "(seg-[^/]+/[^/]+)$", 1)
 
-  /** Anti-join `df` (a raw multi-segment scan) against the active
-    * deletion vectors. With `keepPos` the (file, row-index) key
-    * columns stay on the result — delete/merge reuse them for touched-
-    * file discovery (input_file_name() is refused above a multi-source
-    * join; the metadata projection below the join is not).
+  /** The (file, row-index) keys of the DV segments `rels`, read under
+    * their fixed schema — a schema-less read would run a footer
+    * inference job every time a read of a DV-bearing version is merely
+    * defined.
     */
-  private def applyDvs(spark: SparkSession, dir: String, dvs: Set[String],
-      df: DataFrame, keepPos: Boolean = false): DataFrame = {
-    if (dvs.isEmpty && !keepPos) df
+  private def readDvKeys(spark: SparkSession, dir: String,
+      rels: Set[String]): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructType}
+    spark.read
+      .schema(new StructType().add(DvFileCol, StringType).add(DvPosCol, LongType))
+      .parquet(rels.toSeq.sorted.map(r => absPath(dir, r)): _*)
+  }
+
+  /** Rows of segments `rels` as of version `v` with the deletion vectors
+    * `dvs` anti-joined away. With `keepPos` the (file, row-index) key
+    * columns stay on the result — delete/merge reuse them for touched-
+    * file discovery and tombstone writes (input_file_name() is refused
+    * above a multi-source join; the metadata projection below the join,
+    * attached per relation by `readSegs`, is not).
+    */
+  private def liveRows(spark: SparkSession, dir: String, v: Int,
+      dvs: Set[String], rels: Seq[String],
+      keepPos: Boolean = false): DataFrame = {
+    val keyed =
+      readSegs(spark, dir, v, rels, keepDvKeys = keepPos || dvs.nonEmpty)
+    if (dvs.isEmpty) keyed
     else {
-      // a mapped (renamed-table) readSegs pre-attaches the key columns
-      // per relation — _metadata does not resolve above its union
-      val tagged =
-        if (df.columns.contains(DvFileCol)) df
-        else df
-          .withColumn(DvFileCol, dvFileKey)
-          .withColumn(DvPosCol, col("_metadata.row_index"))
-      if (dvs.isEmpty) tagged
-      else {
-        val dvDf = spark.read
-          .parquet(dvs.toSeq.sorted.map(r => absPath(dir, r)): _*)
-          .select(col(DvFileCol), col(DvPosCol))
-        val out = tagged.join(dvDf, Seq(DvFileCol, DvPosCol), "left_anti")
-        if (keepPos) out else out.drop(DvFileCol, DvPosCol)
-      }
+      val out = keyed.join(readDvKeys(spark, dir, dvs),
+        Seq(DvFileCol, DvPosCol), "left_anti")
+      if (keepPos) out else out.drop(DvFileCol, DvPosCol)
     }
   }
 
@@ -1616,9 +1716,7 @@ object SnapshotLog {
   def readAsOf(spark: SparkSession, dir: String, v: Int): DataFrame = {
     val segs = segments(dir, v)
     require(segs.nonEmpty, s"snapshot v$v is empty")
-    val dvs = meta(dir, v).dvs
-    applyDvs(spark, dir, dvs,
-      readSegs(spark, dir, v, segs.map(_.relPath), keepDvKeys = dvs.nonEmpty))
+    liveRows(spark, dir, v, meta(dir, v).dvs, segs.map(_.relPath))
   }
 
   /** Change-data feed: the rows ADDED in versions (fromV, toV],
@@ -1672,24 +1770,14 @@ object SnapshotLog {
     * idempotency gate after compaction. Returns the new version.
     */
   def compact(spark: SparkSession, dir: String, statsCol: Column): Int = {
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to compact in $dir")
-    val v = prev + 1
-    // same per-writer token as append: a racing committer must not be
-    // able to overwrite this rewrite's files before the publish race
-    val rel = s"seg-$v-${writerToken()}"
-    val segPath = Paths.get(dir, rel).toString
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to compact in $dir")
     // rewrite + stat aggregate in ONE pass (observe-fold, guide §1.2)
-    val (mn, mx) =
-      writeSegWithStats(readAsOf(spark, dir, prev), dir, segPath, statsCol)
+    val seg = writeDataSeg(h, "", readAsOf(spark, dir, h.prev), statsCol)
     // the rewrite materializes the evolved schema into the segment, and
     // the snapshot schema carries forward unchanged
-    publish(dir, v, commitLines(dir, v, Seq(Segment(rel, mn, mx)),
-      segments(dir, prev),
-      ManifestMeta(committedBatches(dir), Set(rel),
-        opType = Some("compact")),
-      schemaOf(dir, prev).map(sc => s"#schema\t${sc.json}")))
-    v
+    commit(h.stage(Seq(seg),
+      ManifestMeta(h.batches, Set(seg.relPath), opType = Some("compact"))))
   }
 
   /** OPTIMIZE with multi-dimensional clustering — Delta's
@@ -1748,23 +1836,20 @@ object SnapshotLog {
       declared: Option[String]): Int = {
     require(bucketBits >= 1 && bucketBits <= 8,
       s"bucketBits $bucketBits outside [1, 8]")
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to optimize in $dir")
-    val v = prev + 1
-    val newSegs = clusterRewrite(spark, dir, v,
-      readAsOf(spark, dir, prev), statsCol, dims, bucketBits, bits)
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to optimize in $dir")
+    val newSegs = clusterRewrite(spark, dir, h.v,
+      readAsOf(spark, dir, h.prev), statsCol, dims, bucketBits, bits)
     // An EMPTY snapshot (e.g. after a delete-all, which leaves a
     // readable 0-row rewrite segment) yields zero bucket dirs; a
     // manifest with no segment lines would make readAsOf of the new
     // head throw even though the previous head read fine — a scheduled
     // OPTIMIZE must never render the table unreadable. Nothing to
     // cluster → skip the commit entirely.
-    if (newSegs.isEmpty) return prev
-    publish(dir, v, commitLines(dir, v, newSegs, segments(dir, prev),
-      ManifestMeta(committedBatches(dir), newSegs.map(_.relPath).toSet,
-        opType = Some("optimize"), cluster = declared),
-      schemaOf(dir, prev).map(sc => s"#schema\t${sc.json}")))
-    v
+    if (newSegs.isEmpty) h.prev
+    else commit(h.stage(newSegs,
+      ManifestMeta(h.batches, newSegs.map(_.relPath).toSet,
+        opType = Some("optimize"), cluster = declared)))
   }
 
   /** The clustering rewrite both OPTIMIZE flavors share: one data pass
@@ -1814,7 +1899,7 @@ object SnapshotLog {
         Segment(rel, mn, mx)
       }
     }
-    walked(staging)(_.toSeq).reverse.foreach(Files.deleteIfExists)
+    dropDir(staging)
     newSegs
   }
 
@@ -1861,9 +1946,7 @@ object SnapshotLog {
         col(DvFileCol))
     val dvBySeg =
       if (dvs.isEmpty) Map.empty[String, Long]
-      else bySeg(
-        spark.read.parquet(dvs.toSeq.sorted.map(r => absPath(dir, r)): _*),
-        col(DvFileCol))
+      else bySeg(readDvKeys(spark, dir, dvs), col(DvFileCol))
     segs.map { s =>
       val bytes = walked(Paths.get(dir, s.relPath))(
         _.filter(Files.isRegularFile(_)).map(Files.size).sum)
@@ -1919,9 +2002,8 @@ object SnapshotLog {
       statsCol: Column, dims: Seq[Column], bucketBits: Int = 2,
       bits: Int = 16, smallBytes: Long = 64L << 20,
       minTombstoneRatio: Double = 0.1): Int = {
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to optimize in $dir")
-    val compacted = meta(dir, prev).compacted
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to optimize in $dir")
     // a bloom-configured table whose segment predates the config (or
     // a later-added bloom stat) reads bloomsCovered < configured —
     // rewriting it ARMS point-key pruning, the same
@@ -1929,14 +2011,14 @@ object SnapshotLog {
     // (q213); never-rewritten big healthy segments with full coverage
     // stay untouched
     val wantBlooms = bloomSpecOf(dir).size
-    val picked = segmentHealth(spark, dir, prev).filter(h =>
-      (h.bytes < smallBytes && !compacted(h.relPath)) ||
-        (h.dvRows > 0 && h.tombstoneRatio >= minTombstoneRatio) ||
+    val picked = segmentHealth(spark, dir, h.prev).filter(s =>
+      (s.bytes < smallBytes && !h.meta.compacted(s.relPath)) ||
+        (s.dvRows > 0 && s.tombstoneRatio >= minTombstoneRatio) ||
         // no compacted-skip here: a segment compacted BEFORE the
         // bloom config still lacks blooms, and its rewrite heals the
         // very condition that selected it — convergence holds (the
         // next call reads it covered and leaves it alone)
-        (wantBlooms > 0 && h.bloomsCovered < wantBlooms))
+        (wantBlooms > 0 && s.bloomsCovered < wantBlooms))
       .map(_.relPath).toSet
     optimizeSegments(spark, dir, statsCol, dims, picked, bucketBits, bits)
   }
@@ -1946,30 +2028,24 @@ object SnapshotLog {
       bits: Int = 16): Int = {
     require(bucketBits >= 1 && bucketBits <= 8,
       s"bucketBits $bucketBits outside [1, 8]")
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to optimize in $dir")
-    val segs = segments(dir, prev)
-    val sel = segs.filter(s => selected(s.relPath))
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to optimize in $dir")
+    val sel = h.segs.filter(s => selected(s.relPath))
     require(sel.size == selected.size,
-      s"selection names segments not in v$prev: " +
-        s"${(selected -- segs.map(_.relPath)).mkString(",")}")
-    val keep = segs.filterNot(s => selected(s.relPath))
+      s"selection names segments not in v${h.prev}: " +
+        s"${(selected -- h.segs.map(_.relPath)).mkString(",")}")
+    val keep = h.segs.filterNot(s => selected(s.relPath))
     // explicit selection rewrites exactly what it is told; an empty
     // selection commits nothing (convergence for the POLICY layer
     // lives in optimizeIncremental's compacted-skip, not here)
-    if (sel.isEmpty) return prev
-    val prevMeta = meta(dir, prev)
-    val v = prev + 1
+    if (sel.isEmpty) return h.prev
     // the rewrite reads ONLY the selected segments, DV-applied — the
     // tombstones of selected files materialize out here
-    val live = applyDvs(spark, dir, prevMeta.dvs,
-      readSegs(spark, dir, prev, sel.map(_.relPath),
-        keepDvKeys = prevMeta.dvs.nonEmpty))
-    val newSegs = clusterRewrite(spark, dir, v, live, statsCol, dims,
-      bucketBits, bits)
+    val newSegs = clusterRewrite(spark, dir, h.v,
+      h.scan(spark, sel.map(_.relPath)), statsCol, dims, bucketBits, bits)
     // every selected row was tombstoned AND nothing is kept: an empty
     // manifest would be unreadable — skip, exactly like empty optimize
-    if (newSegs.isEmpty && keep.isEmpty) return prev
+    if (newSegs.isEmpty && keep.isEmpty) return h.prev
     // DV retention: a DV segment stays active only while it tombstones
     // a file some KEPT segment still owns; ONE delete-sized read over
     // all DV segments decides — each key row carries its own DV
@@ -1980,9 +2056,8 @@ object SnapshotLog {
     // of the MoR design applied incrementally)
     val keptFiles = keep.map(_.relPath).toSet
     val liveDvs =
-      if (prevMeta.dvs.isEmpty || keptFiles.isEmpty) Set.empty[String]
-      else spark.read
-        .parquet(prevMeta.dvs.toSeq.sorted.map(r => absPath(dir, r)): _*)
+      if (h.meta.dvs.isEmpty || keptFiles.isEmpty) Set.empty[String]
+      else readDvKeys(spark, dir, h.meta.dvs)
         .select(
           regexp_extract(col("_metadata.file_path"),
             "(seg-[^/]+)/[^/]+$", 1).as("dv_seg"),
@@ -1993,14 +2068,11 @@ object SnapshotLog {
         .collect()
         .collect { case r if r.getInt(1) == 1 => r.getString(0) }
         .toSet
-    publish(dir, v, commitLines(dir, v, keep ++ newSegs, segs,
+    commit(h.stage(keep ++ newSegs,
       ManifestMeta(
-        prevMeta.batches ++ sel.flatMap(_.tag),
-        (prevMeta.compacted intersect keptFiles) ++
-          newSegs.map(_.relPath),
-        Set.empty, liveDvs, opType = Some("optimize")),
-      schemaOf(dir, prev).map(sc => s"#schema\t${sc.json}")))
-    v
+        h.meta.batches ++ sel.flatMap(_.tag),
+        (h.meta.compacted intersect keptFiles) ++ newSegs.map(_.relPath),
+        Set.empty, liveDvs, opType = Some("optimize"))))
   }
 
   /** Read exactly the segments `rels` (dir-relative) under version
@@ -2009,7 +2081,7 @@ object SnapshotLog {
     * (`__graft_dv_file`, `__graft_dv_pos`) key columns ride along —
     * derived from `_metadata`, which only resolves directly above a
     * file relation, so they MUST be attached here when the mapped path
-    * below unions relations (`applyDvs` reuses them when present).
+    * below unions relations (`liveRows` anti-joins on them).
     *
     * The mapped path engages only on tables where a column rename ever
     * happened (`#colids` history longer than 1 anywhere): segments
@@ -2093,77 +2165,76 @@ object SnapshotLog {
     */
   def delete(spark: SparkSession, dir: String, predicate: Column,
       statsCol: Column): Int = {
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to delete from in $dir")
-    val v = prev + 1
-    val segs = segments(dir, prev)
-    val prevMeta = meta(dir, prev)
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to delete from in $dir")
     // DV-applied scan (keepPos carries the file key for discovery):
     // a raw scan would re-count — and the rewrite would RESURRECT —
     // rows an earlier merge-on-read delete already tombstoned
-    val all = applyDvs(spark, dir, prevMeta.dvs,
-      readSegs(spark, dir, prev, segs.map(_.relPath), keepDvKeys = true),
-      keepPos = true)
     // raw predicate: pushes to parquet (through the anti-join's left
     // side), and filter's null-drops ARE delete semantics for the hit
     // side
-    val hits = all.filter(predicate)
+    val hits = h.scan(spark, keepPos = true).filter(predicate)
     // the predicate is re-evaluated by the discovery scan, the
     // deleted-row write and the survivor write — a non-deterministic
     // one could classify a row differently per scan, losing or
     // duplicating rows inside one commit. Refuse it up front (Spark's
     // own DeleteFromTable makes the same demand). The flag is read off
     // the analyzed Filter since Column hides its expression in Spark 4.
-    val deterministic = hits.queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition.deterministic
-    }.getOrElse(true)
-    require(deterministic,
+    require(predicateDeterministic(hits),
       "delete predicate must be deterministic — it is evaluated three " +
         "times (discovery scan, deleted-row write, survivor write)")
-    // the DV file key is dir-relative ("seg-x/part-y"), so touched
-    // segments resolve by prefix — input_file_name() would be refused
-    // above the DV anti-join anyway
-    val touchedFiles = hits
-      .select(col(DvFileCol)).distinct()
-      .collect().map(_.getString(0)).toSet
-    val touched = segs.filter(s =>
-      touchedFiles.exists(_.startsWith(s.relPath + "/")))
-    if (touched.isEmpty) prev
+    val touched = touchedSegs(h.segs, hits)
+    if (touched.isEmpty) h.prev
     else {
       // both rewrite scans are DV-applied too: a tombstoned row must
       // neither land in the survivor segment nor re-surface as a
       // "deleted" CDC row it already was
-      val touchedDf = applyDvs(spark, dir, prevMeta.dvs,
-        readSegs(spark, dir, prev, touched.map(_.relPath),
-          keepDvKeys = prevMeta.dvs.nonEmpty))
-      val delRel = s"seg-$v-cdc-${writerToken()}"
-      touchedDf.filter(predicate).write.mode("overwrite")
-        .parquet(absPath(dir, delRel))
-      writeSegColIds(dir, absPath(dir, delRel), touchedDf.columns.toSeq)
-      val rewriteRel = s"seg-$v-${writerToken()}"
-      val rewritePath = absPath(dir, rewriteRel)
+      val touchedDf = h.scan(spark, touched.map(_.relPath))
+      val delRel = writeChangeSeg(h, "cdc", touchedDf.filter(predicate))
       // survivors = NOT proven deleted — null-predicate rows stay, so
       // only this side needs the coalesce (¬null is null, and a bare
       // !predicate filter would drop the very rows SQL DELETE keeps)
-      val (mn, mx) = writeSegWithStats(
-        touchedDf.filter(!coalesce(predicate, lit(false))),
-        dir, rewritePath, statsCol)
-      val touchedSet = touched.map(_.relPath).toSet
-      val untouched = segs.filterNot(s => touchedSet(s.relPath))
+      val rewrite = writeDataSeg(h, "",
+        touchedDf.filter(!coalesce(predicate, lit(false))), statsCol)
       // dvs carry forward: entries for the rewritten segments point at
       // files the new manifest no longer lists — inert, never wrong
-      publish(dir, v, commitLines(dir, v,
-        untouched :+ Segment(rewriteRel, mn, mx), segs,
-        ManifestMeta(
-          prevMeta.batches ++ touched.flatMap(_.tag),
-          (prevMeta.compacted intersect untouched.map(_.relPath).toSet) +
-            rewriteRel,
-          Set(delRel), prevMeta.dvs, opType = Some("delete")),
-        schemaOf(dir, prev).map(sc => s"#schema\t${sc.json}")))
-      v
+      commit(h.stage(h.segs.diff(touched) :+ rewrite,
+        cowMeta(h, touched, Seq(rewrite.relPath), "delete")
+          .copy(cdcDel = Set(delRel))))
     }
   }
+
+  /** Whether the Filter predicate of `hits` is deterministic. */
+  private def predicateDeterministic(hits: DataFrame): Boolean =
+    hits.queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.deterministic
+    }.getOrElse(true)
+
+  /** Copy-on-write touched-segment discovery: the head segments owning
+    * at least one file of `hits` (a keyed scan, `keepPos`). The DV file
+    * key is dir-relative ("seg-x/part-y"), so touched segments resolve
+    * by prefix — input_file_name() would be refused above the DV
+    * anti-join anyway. One distinct-file collect, O(files).
+    */
+  private def touchedSegs(segs: Seq[Segment], hits: DataFrame): Seq[Segment] = {
+    val touchedFiles = hits
+      .select(col(DvFileCol)).distinct()
+      .collect().map(_.getString(0)).toSet
+    segs.filter(s => touchedFiles.exists(_.startsWith(s.relPath + "/")))
+  }
+
+  /** The meta of a copy-on-write commit over `h` that rewrote `touched`
+    * into the (dataChange = false) segments `rewrites`: batch tags of
+    * rewritten segments fold into `#batches`, untouched segments keep
+    * their compaction flags, and the DV set carries forward.
+    */
+  private def cowMeta(h: Head, touched: Seq[Segment], rewrites: Seq[String],
+      opType: String): ManifestMeta =
+    ManifestMeta(h.meta.batches ++ touched.flatMap(_.tag),
+      (h.meta.compacted intersect h.segs.diff(touched).map(_.relPath).toSet) ++
+        rewrites,
+      dvs = h.meta.dvs, opType = Some(opType))
 
   /** Merge-on-read DELETE — the small-delete economy `delete`'s
     * copy-on-write cannot offer: instead of rewriting every touched
@@ -2185,45 +2256,20 @@ object SnapshotLog {
     * re-run under retry must classify identically.
     */
   def deleteMor(spark: SparkSession, dir: String, predicate: Column): Int = {
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to delete from in $dir")
-    val v = prev + 1
-    val segs = segments(dir, prev)
-    val prevMeta = meta(dir, prev)
-    val all = applyDvs(spark, dir, prevMeta.dvs,
-      readSegs(spark, dir, prev, segs.map(_.relPath), keepDvKeys = true),
-      keepPos = true)
-    val hits = all.filter(predicate)
-    val deterministic = hits.queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition.deterministic
-    }.getOrElse(true)
-    require(deterministic,
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to delete from in $dir")
+    val hits = h.scan(spark, keepPos = true).filter(predicate)
+    require(predicateDeterministic(hits),
       "deleteMor predicate must be deterministic (SQL DELETE contract)")
-    val dvRel = s"seg-$v-dv-${writerToken()}"
-    val dvPath = absPath(dir, dvRel)
     // count observed on the write pass: an empty delete commits
     // nothing and leaves no artifact
-    if (writeCountObserved(hits, dvPath) == 0L) {
-      walked(Paths.get(dvPath))(_.toSeq).reverse.foreach(Files.deleteIfExists)
-      prev
-    } else {
-      writeSegColIds(dir, dvPath, hits.columns.toSeq)
-      publish(dir, v, commitLines(dir, v, segs, segs,
-        prevMeta.carried.copy(cdcDel = Set(dvRel),
-          dvs = prevMeta.dvs + dvRel, opType = Some("delete")),
-        schemaOf(dir, prev).map(sc => s"#schema\t${sc.json}")))
-      v
+    writeTombstone(h, "dv", hits) match {
+      case None => h.prev
+      case Some(dvRel) =>
+        commit(h.stage(h.segs, h.meta.carried.copy(cdcDel = Set(dvRel),
+          dvs = h.meta.dvs + dvRel, opType = Some("delete"))))
     }
   }
-
-  /** deleteMor with rebase-style retry: the tombstone write is
-    * re-derived per attempt (a racing append's rows must be observable
-    * to the predicate — same serializable posture as deleteWithRetry).
-    */
-  def deleteMorWithRetry(spark: SparkSession, dir: String,
-      predicate: Column, maxAttempts: Int = 5): Int =
-    commitWithRetry(maxAttempts)(deleteMor(spark, dir, predicate))
 
   /** Merge-on-read DELETE BY KEY SET (round-16): tombstone every row
     * whose `key` appears in `keys` (any frame carrying the key column)
@@ -2253,7 +2299,7 @@ object SnapshotLog {
       keys: DataFrame, keyCols: Seq[String]): Int =
     stageDeleteMorKeysMulti(spark, dir, keys, keyCols) match {
       case None => version(dir)
-      case Some((st, _)) => publish(st.dir, st.v, st.lines); st.v
+      case Some((st, _)) => commit(st)
     }
 
   /** `deleteMorKeysMulti` minus the publish (see StagedCommit): stages
@@ -2270,38 +2316,21 @@ object SnapshotLog {
       keys: DataFrame,
       keyCols: Seq[String]): Option[(StagedCommit, DataFrame)] = {
     require(keyCols.nonEmpty, "deleteMorKeys needs at least one key column")
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to delete from in $dir")
-    val v = prev + 1
-    val prevMeta = meta(dir, prev)
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to delete from in $dir")
     val keySet = keys.select(keyCols.map(col): _*).distinct()
-    val candidates = mergeCandidateSegsKeys(spark, dir, prev, keyCols, keySet)
+    val candidates = mergeCandidateSegsKeys(spark, dir, h.prev, keyCols, keySet)
     if (candidates.isEmpty) return None
-    val all = applyDvs(spark, dir, prevMeta.dvs,
-      readSegs(spark, dir, prev,
-        candidates.map(_.relPath), keepDvKeys = true),
-      keepPos = true)
-    val hits = all.join(keySet, keyCols, "left_semi")
-    val dvRel = s"seg-$v-dv-${writerToken()}"
-    val dvPath = absPath(dir, dvRel)
-    if (writeCountObserved(hits, dvPath) == 0L) {
-      walked(Paths.get(dvPath))(_.toSeq).reverse.foreach(Files.deleteIfExists)
-      None
-    } else {
-      writeSegColIds(dir, dvPath, hits.columns.toSeq)
-      val segs = segments(dir, prev)
-      val moved = spark.read.parquet(dvPath).drop(DvFileCol, DvPosCol)
-      Some((StagedCommit(dir, v, commitLines(dir, v, segs, segs,
-        prevMeta.carried.copy(cdcDel = Set(dvRel),
-          dvs = prevMeta.dvs + dvRel, opType = Some("delete")),
-        schemaOf(dir, prev).map(sc => s"#schema\t${sc.json}"))), moved))
+    val hits = h.scan(spark, candidates.map(_.relPath), keepPos = true)
+      .join(keySet, keyCols, "left_semi")
+    writeTombstone(h, "dv", hits).map { dvRel =>
+      // read back under the schema just written: no footer inference
+      val moved = spark.read.schema(hits.schema).parquet(absPath(dir, dvRel))
+        .drop(DvFileCol, DvPosCol)
+      (h.stage(h.segs, h.meta.carried.copy(cdcDel = Set(dvRel),
+        dvs = h.meta.dvs + dvRel, opType = Some("delete"))), moved)
     }
   }
-
-  /** deleteMorKeys with serializable re-run-on-conflict. */
-  def deleteMorKeysWithRetry(spark: SparkSession, dir: String,
-      keys: DataFrame, key: String, maxAttempts: Int = 5): Int =
-    commitWithRetry(maxAttempts)(deleteMorKeys(spark, dir, keys, key))
 
   /** Merge-on-read MERGE — `merge`'s upsert with `deleteMor`'s
     * economy: src lands as one ordinary dataChange segment (inserts
@@ -2326,50 +2355,36 @@ object SnapshotLog {
   def mergeMorKeys(spark: SparkSession, src: DataFrame, dir: String,
       keys: Seq[String], statsCol: Column): Int = {
     require(keys.nonEmpty, "merge needs at least one key column")
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to merge into in $dir — append first")
-    val v = prev + 1
-    val segs = segments(dir, prev)
-    val prevMeta = meta(dir, prev)
-    val snapSchema = evolvedSchema(
-      gateSchema(spark, dir, prev), src.schema,
-      spark.sessionState.analyzer.resolver)
-    val srcRel = s"seg-$v-${writerToken()}"
-    val srcPath = absPath(dir, srcRel)
-    val (smn, smx) = writeSegWithStats(src, dir, srcPath, statsCol)
-    val srcM = spark.read.schema(src.schema).parquet(srcPath)
-    val srcKeys = srcM.select(keys.map(col): _*).distinct()
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to merge into in $dir — append first")
+    val schemaLine = gateLine(h, src)
+    val srcSeg = writeDataSeg(h, "", src, statsCol)
+    val srcM = spark.read.schema(src.schema).parquet(absPath(dir, srcSeg.relPath))
     // old images of matched keys, DV-applied (a key merged twice
     // tombstones the FIRST merge's src row, not a ghost); the scan
     // opens only the key-range-overlapping candidates — a segment
     // whose recorded key range misses the src range cannot hold a
     // matched row (mergeCandidateSegsKeys)
-    val candidates = mergeCandidateSegsKeys(spark, dir, prev, keys, srcM)
-    val dvRel = s"seg-$v-dv-${writerToken()}"
-    val dvPath = absPath(dir, dvRel)
-    val anyMatched =
-      if (candidates.isEmpty) false
-      else {
-        val all = applyDvs(spark, dir, prevMeta.dvs,
-          readSegs(spark, dir, prev,
-            candidates.map(_.relPath), keepDvKeys = true),
-          keepPos = true)
-        val matched = all.join(srcKeys, keys, "left_semi")
-        val any = writeCountObserved(matched, dvPath) > 0L
-        if (!any)
-          walked(Paths.get(dvPath))(_.toSeq).reverse
-            .foreach(Files.deleteIfExists)
-        else writeSegColIds(dir, dvPath, matched.columns.toSeq)
-        any
-      }
-    publish(dir, v, commitLines(dir, v,
-      segs :+ Segment(srcRel, smn, smx), segs,
-      prevMeta.carried.copy(
-        cdcDel = if (anyMatched) Set(dvRel) else Set.empty,
-        dvs = if (anyMatched) prevMeta.dvs + dvRel else prevMeta.dvs,
+    val dvRel = tombstoneKeys(spark, h, keys, srcM,
+      srcM.select(keys.map(col): _*).distinct())
+    commit(h.stage(h.segs :+ srcSeg,
+      h.meta.carried.copy(cdcDel = dvRel.toSet, dvs = h.meta.dvs ++ dvRel,
         opType = Some("merge")),
-      Some(s"#schema\t${snapSchema.json}")))
-    v
+      Some(schemaLine)))
+  }
+
+  /** The merge-on-read key tombstone of a commit over `h`: every live
+    * row whose `keys` tuple appears in `keySet`, scanning only the
+    * candidate segments `probe`'s key range and blooms admit. None when
+    * no row matched (nothing is left behind).
+    */
+  private def tombstoneKeys(spark: SparkSession, h: Head, keys: Seq[String],
+      probe: DataFrame, keySet: DataFrame): Option[String] = {
+    val candidates = mergeCandidateSegsKeys(spark, h.dir, h.prev, keys, probe)
+    if (candidates.isEmpty) None
+    else writeTombstone(h, "dv",
+      h.scan(spark, candidates.map(_.relPath), keepPos = true)
+        .join(keySet, keys, "left_semi"))
   }
 
   /** Stage ONE merge-on-read commit landing a RESOLVED CDC batch
@@ -2393,73 +2408,28 @@ object SnapshotLog {
       delKeys: DataFrame, dir: String, keys: Seq[String],
       statsCol: Column): Option[StagedCommit] = {
     require(keys.nonEmpty, "apply needs at least one key column")
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to apply into in $dir — append first")
-    val v = prev + 1
-    val segs = segments(dir, prev)
-    val prevMeta = meta(dir, prev)
-    val hasUp = !upserts.isEmpty
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to apply into in $dir — append first")
     val srcStaged =
-      if (!hasUp) None
+      if (upserts.isEmpty) None
       else {
-        val snapSchema = evolvedSchema(gateSchema(spark, dir, prev),
-          upserts.schema, spark.sessionState.analyzer.resolver)
-        val srcRel = s"seg-$v-${writerToken()}"
-        val srcPath = absPath(dir, srcRel)
-        val (smn, smx) = writeSegWithStats(upserts, dir, srcPath, statsCol)
-        Some((Segment(srcRel, smn, smx), snapSchema, srcPath,
-          upserts.schema))
+        val schemaLine = gateLine(h, upserts)
+        val seg = writeDataSeg(h, "", upserts, statsCol)
+        Some((seg, schemaLine,
+          spark.read.schema(upserts.schema).parquet(absPath(dir, seg.relPath))))
       }
     val tombKeys = (srcStaged match {
-      case Some((_, _, p, sc)) => spark.read.schema(sc).parquet(p)
-        .select(keys.map(col): _*)
+      case Some((_, _, written)) => written.select(keys.map(col): _*)
         .unionByName(delKeys.select(keys.map(col): _*))
       case None => delKeys.select(keys.map(col): _*)
     }).distinct()
-    val candidates = mergeCandidateSegsKeys(spark, dir, prev, keys, tombKeys)
-    val dvRel = s"seg-$v-dv-${writerToken()}"
-    val dvPath = absPath(dir, dvRel)
-    val anyMatched =
-      if (candidates.isEmpty) false
-      else {
-        val all = applyDvs(spark, dir, prevMeta.dvs,
-          readSegs(spark, dir, prev,
-            candidates.map(_.relPath), keepDvKeys = true),
-          keepPos = true)
-        val matched = all.join(tombKeys, keys, "left_semi")
-        val any = writeCountObserved(matched, dvPath) > 0L
-        if (!any)
-          walked(Paths.get(dvPath))(_.toSeq).reverse
-            .foreach(Files.deleteIfExists)
-        else writeSegColIds(dir, dvPath, matched.columns.toSeq)
-        any
-      }
-    if (srcStaged.isEmpty && !anyMatched) None
-    else Some(StagedCommit(dir, v, commitLines(dir, v,
-      segs ++ srcStaged.map(_._1), segs,
-      prevMeta.carried.copy(
-        cdcDel = if (anyMatched) Set(dvRel) else Set.empty,
-        dvs = if (anyMatched) prevMeta.dvs + dvRel else prevMeta.dvs,
+    val dvRel = tombstoneKeys(spark, h, keys, tombKeys, tombKeys)
+    if (srcStaged.isEmpty && dvRel.isEmpty) None
+    else Some(h.stage(h.segs ++ srcStaged.map(_._1),
+      h.meta.carried.copy(cdcDel = dvRel.toSet, dvs = h.meta.dvs ++ dvRel,
         opType = Some("merge")),
-      srcStaged.map { case (_, sc, _, _) => s"#schema\t${sc.json}" }
-        .orElse(schemaOf(dir, prev).map(sc => s"#schema\t${sc.json}")))))
+      srcStaged.map(_._2).orElse(h.schemaLine)))
   }
-
-  /** mergeMor with serializable re-run-on-conflict. */
-  def mergeMorWithRetry(spark: SparkSession, src: DataFrame, dir: String,
-      key: String, statsCol: Column, maxAttempts: Int = 5): Int =
-    commitWithRetry(maxAttempts)(mergeMor(spark, src, dir, key, statsCol))
-
-  /** Composite-key retries. */
-  def mergeKeysWithRetry(spark: SparkSession, src: DataFrame, dir: String,
-      keys: Seq[String], statsCol: Column, maxAttempts: Int = 5): Int =
-    commitWithRetry(maxAttempts)(mergeKeys(spark, src, dir, keys, statsCol))
-
-  def mergeMorKeysWithRetry(spark: SparkSession, src: DataFrame,
-      dir: String, keys: Seq[String], statsCol: Column,
-      maxAttempts: Int = 5): Int =
-    commitWithRetry(maxAttempts)(
-      mergeMorKeys(spark, src, dir, keys, statsCol))
 
   /** == MERGE touched-key discovery pruning (round-16 item 1) ==
     * Both merge flavors used to open EVERY segment's key column to
@@ -2665,13 +2635,8 @@ object SnapshotLog {
     val keySet = keys.select(keyCols.map(col): _*).distinct()
     val cands = mergeCandidateSegsKeys(spark, dir, v, keyCols, keySet)
     if (cands.isEmpty) (readAsOf(spark, dir, v).limit(0), 0, segs.size)
-    else {
-      val m = meta(dir, v)
-      val df = applyDvs(spark, dir, m.dvs,
-        readSegs(spark, dir, v, cands.map(_.relPath),
-          keepDvKeys = m.dvs.nonEmpty))
-      (df.join(keySet, keyCols, "left_semi"), cands.size, segs.size)
-    }
+    else (liveRows(spark, dir, v, meta(dir, v).dvs, cands.map(_.relPath))
+      .join(keySet, keyCols, "left_semi"), cands.size, segs.size)
   }
 
   /** MERGE (upsert by key) as a copy-on-write commit — the operation
@@ -2718,22 +2683,13 @@ object SnapshotLog {
   def mergeKeys(spark: SparkSession, src: DataFrame, dir: String,
       keys: Seq[String], statsCol: Column): Int = {
     require(keys.nonEmpty, "merge needs at least one key column")
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to merge into in $dir — append first")
-    val v = prev + 1
-    val segs = segments(dir, prev)
-    // schema gate BEFORE any data lands — a refused merge must leave no
-    // orphan segment behind
-    val snapSchema = evolvedSchema(
-      gateSchema(spark, dir, prev), src.schema,
-      spark.sessionState.analyzer.resolver)
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to merge into in $dir — append first")
+    val schemaLine = gateLine(h, src)
     // materialize src ONCE; all phases below see this one frozen copy
-    val srcRel = s"seg-$v-${writerToken()}"
-    val srcPath = absPath(dir, srcRel)
-    val (smn, smx) = writeSegWithStats(src, dir, srcPath, statsCol)
-    val srcM = spark.read.schema(src.schema).parquet(srcPath)
+    val srcSeg = writeDataSeg(h, "", src, statsCol)
+    val srcM = spark.read.schema(src.schema).parquet(absPath(dir, srcSeg.relPath))
     val srcKeys = srcM.select(keys.map(col): _*).distinct()
-    val prevMeta = meta(dir, prev)
     // discovery opens ONLY the key-range-overlapping candidates (see
     // mergeCandidateSegsKeys — a non-overlapping segment cannot hold a
     // matched key, so it is untouched by construction); the file key
@@ -2741,48 +2697,27 @@ object SnapshotLog {
     // above a multi-source plan) and the scan is DV-applied: a
     // tombstoned old row must not mark its segment touched, nor
     // resurrect into the rewrite below
-    val candidates = mergeCandidateSegsKeys(spark, dir, prev, keys, srcM)
-    val touchedFiles =
-      if (candidates.isEmpty) Set.empty[String]
-      else applyDvs(spark, dir, prevMeta.dvs,
-        readSegs(spark, dir, prev,
-          candidates.map(_.relPath), keepDvKeys = true),
-        keepPos = true)
-        .join(srcKeys, keys, "left_semi")
-        .select(col(DvFileCol)).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touched = segs.filter(s =>
-      touchedFiles.exists(_.startsWith(s.relPath + "/")))
-    val touchedSet = touched.map(_.relPath).toSet
-    val untouched = segs.filterNot(s => touchedSet(s.relPath))
-
+    val candidates = mergeCandidateSegsKeys(spark, dir, h.prev, keys, srcM)
+    val touched =
+      if (candidates.isEmpty) Nil
+      else touchedSegs(h.segs,
+        h.scan(spark, candidates.map(_.relPath), keepPos = true)
+          .join(srcKeys, keys, "left_semi"))
     val (rewriteSegs, cdcDel) =
       if (touched.isEmpty) (Nil, Set.empty[String])
       else {
-        val touchedDf = applyDvs(spark, dir, prevMeta.dvs,
-          readSegs(spark, dir, prev, touched.map(_.relPath),
-            keepDvKeys = prevMeta.dvs.nonEmpty))
-        val delRel = s"seg-$v-cdc-${writerToken()}"
-        touchedDf.join(srcKeys, keys, "left_semi")
-          .write.mode("overwrite").parquet(absPath(dir, delRel))
-        writeSegColIds(dir, absPath(dir, delRel), touchedDf.columns.toSeq)
-        val rewriteRel = s"seg-$v-rw-${writerToken()}"
-        val rewritePath = absPath(dir, rewriteRel)
-        val (mn, mx) = writeSegWithStats(
-          touchedDf.join(srcKeys, keys, "left_anti"),
-          dir, rewritePath, statsCol)
-        (Seq(Segment(rewriteRel, mn, mx)), Set(delRel))
+        val touchedDf = h.scan(spark, touched.map(_.relPath))
+        val delRel = writeChangeSeg(h, "cdc",
+          touchedDf.join(srcKeys, keys, "left_semi"))
+        val rewrite = writeDataSeg(h, "rw",
+          touchedDf.join(srcKeys, keys, "left_anti"), statsCol)
+        (Seq(rewrite), Set(delRel))
       }
-
-    publish(dir, v, commitLines(dir, v,
-      untouched ++ rewriteSegs :+ Segment(srcRel, smn, smx), segs,
-      ManifestMeta(
-        prevMeta.batches ++ touched.flatMap(_.tag),
-        (prevMeta.compacted intersect untouched.map(_.relPath).toSet) ++
-          rewriteSegs.map(_.relPath),
-        cdcDel, prevMeta.dvs, opType = Some("merge")),
-      Some(s"#schema\t${snapSchema.json}")))
-    v
+    commit(h.stage(
+      h.segs.diff(touched) ++ rewriteSegs :+ srcSeg,
+      cowMeta(h, touched, rewriteSegs.map(_.relPath), "merge")
+        .copy(cdcDel = cdcDel),
+      Some(schemaLine)))
   }
 
   /** == First-class UPDATE (round-16 item 2) ==
@@ -2806,12 +2741,12 @@ object SnapshotLog {
     * preimage segment, never a re-evaluated source scan — pre/post
     * pair 1:1 by construction.
     */
-  private def updatePlan(spark: SparkSession, dir: String, prev: Int,
+  private def updatePlan(spark: SparkSession, h: Head,
       set: Seq[(String, Column)]): DataFrame => DataFrame = {
     require(set.nonEmpty, "UPDATE needs at least one assignment")
     val resolver = spark.sessionState.analyzer.resolver
-    val fields = gateSchema(spark, dir, prev)
-      .getOrElse(readAsOf(spark, dir, prev).schema).fields.toSeq
+    val fields = gateSchema(spark, h)
+      .getOrElse(readAsOf(spark, h.dir, h.prev).schema).fields.toSeq
     // cast targets widen container nullability: the RECORDED type may
     // say map value / array element / struct field non-null (the
     // encoder that first appended knew it), but parquet read-back
@@ -2858,14 +2793,12 @@ object SnapshotLog {
     */
   private def requireDeterministicUpdate(hits: DataFrame,
       applied: DataFrame, what: String): Unit = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-    val predDet = hits.queryExecution.analyzed.collectFirst {
-      case f: Filter => f.condition.deterministic
-    }.getOrElse(true)
-    require(predDet, s"$what predicate must be deterministic — it is " +
-      "re-evaluated per write phase and under retry (SQL UPDATE contract)")
+    require(predicateDeterministic(hits),
+      s"$what predicate must be deterministic — it is re-evaluated per " +
+        "write phase and under retry (SQL UPDATE contract)")
     val setDet = applied.queryExecution.analyzed.collect {
-      case p: Project => p.projectList.forall(_.deterministic)
+      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
+        p.projectList.forall(_.deterministic)
     }.forall(identity)
     require(setDet, s"$what assignment expressions must be deterministic " +
       "(re-evaluated under retry)")
@@ -2881,58 +2814,26 @@ object SnapshotLog {
     */
   def update(spark: SparkSession, dir: String, predicate: Column,
       set: Seq[(String, Column)], statsCol: Column): Int = {
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to update in $dir")
-    val v = prev + 1
-    val segs = segments(dir, prev)
-    val prevMeta = meta(dir, prev)
-    val applySet = updatePlan(spark, dir, prev, set)
-    val all = applyDvs(spark, dir, prevMeta.dvs,
-      readSegs(spark, dir, prev, segs.map(_.relPath), keepDvKeys = true),
-      keepPos = true)
-    val hits = all.filter(predicate)
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to update in $dir")
+    val applySet = updatePlan(spark, h, set)
+    val hits = h.scan(spark, keepPos = true).filter(predicate)
     requireDeterministicUpdate(hits,
       applySet(hits.drop(DvFileCol, DvPosCol)), "update")
-    val touchedFiles = hits
-      .select(col(DvFileCol)).distinct()
-      .collect().map(_.getString(0)).toSet
-    val touched = segs.filter(s =>
-      touchedFiles.exists(_.startsWith(s.relPath + "/")))
-    if (touched.isEmpty) prev
+    val touched = touchedSegs(h.segs, hits)
+    if (touched.isEmpty) h.prev
     else {
-      val touchedDf = applyDvs(spark, dir, prevMeta.dvs,
-        readSegs(spark, dir, prev, touched.map(_.relPath),
-          keepDvKeys = prevMeta.dvs.nonEmpty))
-      val preRel = s"seg-$v-cdcpre-${writerToken()}"
-      touchedDf.filter(predicate).write.mode("overwrite")
-        .parquet(absPath(dir, preRel))
-      writeSegColIds(dir, absPath(dir, preRel), touchedDf.columns.toSeq)
+      val touchedDf = h.scan(spark, touched.map(_.relPath))
+      val preRel = writeChangeSeg(h, "cdcpre", touchedDf.filter(predicate))
       // new images derive from the WRITTEN preimages — the predicate
       // never re-evaluates between pre and post, so the pair is exact
-      val postRel = s"seg-$v-post-${writerToken()}"
-      val postPath = absPath(dir, postRel)
-      val (pmn, pmx) = writeSegWithStats(
-        applySet(readSegs(spark, dir, prev, Seq(preRel))),
-        dir, postPath, statsCol)
-      val rwRel = s"seg-$v-rw-${writerToken()}"
-      val rwPath = absPath(dir, rwRel)
-      val (mn, mx) = writeSegWithStats(
-        touchedDf.filter(!coalesce(predicate, lit(false))),
-        dir, rwPath, statsCol)
-      val touchedSet = touched.map(_.relPath).toSet
-      val untouched = segs.filterNot(s => touchedSet(s.relPath))
-      publish(dir, v, commitLines(dir, v,
-        untouched :+ Segment(rwRel, mn, mx) :+ Segment(postRel, pmn, pmx),
-        segs,
-        ManifestMeta(
-          prevMeta.batches ++ touched.flatMap(_.tag),
-          (prevMeta.compacted intersect untouched.map(_.relPath).toSet) +
-            rwRel,
-          Set.empty, prevMeta.dvs,
-          cdcPre = Set(preRel), cdcPost = Set(postRel),
-          opType = Some("update")),
-        schemaOf(dir, prev).map(sc => s"#schema\t${sc.json}")))
-      v
+      val post = writeDataSeg(h, "post",
+        applySet(readSegs(spark, dir, h.prev, Seq(preRel))), statsCol)
+      val rw = writeDataSeg(h, "rw",
+        touchedDf.filter(!coalesce(predicate, lit(false))), statsCol)
+      commit(h.stage(h.segs.diff(touched) :+ rw :+ post,
+        cowMeta(h, touched, Seq(rw.relPath), "update")
+          .copy(cdcPre = Set(preRel), cdcPost = Set(post.relPath))))
     }
   }
 
@@ -2948,54 +2849,27 @@ object SnapshotLog {
     */
   def updateMor(spark: SparkSession, dir: String, predicate: Column,
       set: Seq[(String, Column)], statsCol: Column): Int = {
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to update in $dir")
-    val v = prev + 1
-    val segs = segments(dir, prev)
-    val prevMeta = meta(dir, prev)
-    val applySet = updatePlan(spark, dir, prev, set)
-    val all = applyDvs(spark, dir, prevMeta.dvs,
-      readSegs(spark, dir, prev, segs.map(_.relPath), keepDvKeys = true),
-      keepPos = true)
-    val hits = all.filter(predicate)
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to update in $dir")
+    val applySet = updatePlan(spark, h, set)
+    val hits = h.scan(spark, keepPos = true).filter(predicate)
     requireDeterministicUpdate(hits,
       applySet(hits.drop(DvFileCol, DvPosCol)), "updateMor")
-    val dvRel = s"seg-$v-dv-${writerToken()}"
-    val dvPath = absPath(dir, dvRel)
-    if (writeCountObserved(hits, dvPath) == 0L) {
-      walked(Paths.get(dvPath))(_.toSeq).reverse.foreach(Files.deleteIfExists)
-      prev
-    } else {
-      writeSegColIds(dir, dvPath, hits.columns.toSeq)
-      // key columns ride at the END of the tombstone write (applyDvs
-      // appends them), so dropping them restores the snapshot shape
-      val pre = spark.read.parquet(dvPath).drop(DvFileCol, DvPosCol)
-      val postRel = s"seg-$v-post-${writerToken()}"
-      val postPath = absPath(dir, postRel)
-      val (pmn, pmx) = writeSegWithStats(applySet(pre), dir, postPath,
-        statsCol)
-      publish(dir, v, commitLines(dir, v,
-        segs :+ Segment(postRel, pmn, pmx), segs,
-        prevMeta.carried.copy(
-          cdcPre = Set(dvRel), cdcPost = Set(postRel),
-          dvs = prevMeta.dvs + dvRel, opType = Some("update")),
-        schemaOf(dir, prev).map(sc => s"#schema\t${sc.json}")))
-      v
+    writeTombstone(h, "dv", hits) match {
+      case None => h.prev
+      case Some(dvRel) =>
+        // key columns ride at the END of the tombstone write (readSegs
+        // appends them), so dropping them restores the snapshot shape;
+        // read back under the schema just written: no footer inference
+        val pre = spark.read.schema(hits.schema).parquet(absPath(dir, dvRel))
+          .drop(DvFileCol, DvPosCol)
+        val post = writeDataSeg(h, "post", applySet(pre), statsCol)
+        commit(h.stage(h.segs :+ post,
+          h.meta.carried.copy(
+            cdcPre = Set(dvRel), cdcPost = Set(post.relPath),
+            dvs = h.meta.dvs + dvRel, opType = Some("update"))))
     }
   }
-
-  /** update with serializable re-run-on-conflict. */
-  def updateWithRetry(spark: SparkSession, dir: String, predicate: Column,
-      set: Seq[(String, Column)], statsCol: Column,
-      maxAttempts: Int = 5): Int =
-    commitWithRetry(maxAttempts)(update(spark, dir, predicate, set, statsCol))
-
-  /** updateMor with serializable re-run-on-conflict. */
-  def updateMorWithRetry(spark: SparkSession, dir: String,
-      predicate: Column, set: Seq[(String, Column)], statsCol: Column,
-      maxAttempts: Int = 5): Int =
-    commitWithRetry(maxAttempts)(
-      updateMor(spark, dir, predicate, set, statsCol))
 
   /** Full change-data feed over (fromV, toV]: `readChanges`' inserts
     * PLUS the rows row-level deletes/merges removed, each row tagged
@@ -3100,25 +2974,24 @@ object SnapshotLog {
     */
   def restore(spark: SparkSession, dir: String, v: Int,
       statsCol: Column): Int = {
-    val prev = version(dir)
-    require(prev >= 0, s"nothing to restore in $dir")
-    require(v >= 0 && v <= prev, s"restore target v$v outside [0, $prev]")
-    if (v == prev) return prev
-    val vNew = prev + 1
+    val h = readHead(dir)
+    require(h.prev >= 0, s"nothing to restore in $dir")
+    require(v >= 0 && v <= h.prev, s"restore target v$v outside [0, ${h.prev}]")
+    if (v == h.prev) return h.prev
     val segsV = segments(dir, v)
-    val segsP = segments(dir, prev)
     val setV = segsV.map(_.relPath).toSet
-    val setP = segsP.map(_.relPath).toSet
+    val setP = h.segs.map(_.relPath).toSet
     val shared = segsV.filter(s => setP(s.relPath))
     val readded = segsV.filterNot(s => setP(s.relPath))
-    val dropped = segsP.filterNot(s => setV(s.relPath))
+    val dropped = h.segs.filterNot(s => setV(s.relPath))
     val sharedNames = shared.map(_.relPath)
-    val dvsV = meta(dir, v).dvs
-    val dvsP = meta(dir, prev).dvs
+    val metaV = meta(dir, v)
+    val dvsV = metaV.dvs
+    val dvsP = h.meta.dvs
     val dvsComeBack = (dvsP -- dvsV).toSeq.sorted // prev-only tombstones
     val dvsGoAway = (dvsV -- dvsP).toSeq.sorted   // v-only tombstones
-    val sc = schemaOf(dir, prev)
-    val cids = colidsOf(dir, prev)
+    val sc = h.schema
+    val cids = colidsOf(dir, h.prev)
     // Row images of DV tombstones, RESTRICTED to entries targeting a
     // SHARED file: entries into re-added/dropped files are already
     // settled by those files' own materialization/removal, and
@@ -3177,12 +3050,10 @@ object SnapshotLog {
     // — both under prev's schema, so evolution never narrows
     val insertParts =
       (if (readded.isEmpty) Nil
-       else Seq(applyDvs(spark, dir, dvsV,
-         readSegs(spark, dir, prev, readded.map(_.relPath),
-           keepDvKeys = dvsV.nonEmpty)))) ++
+       else Seq(liveRows(spark, dir, h.prev, dvsV, readded.map(_.relPath)))) ++
         dvImages(dvsComeBack).toSeq
     val insertSeg = insertParts.reduceOption(_.unionByName(_)).flatMap { df =>
-      val rel = s"seg-$vNew-${writerToken()}"
+      val rel = segRel(h, "")
       val p = absPath(dir, rel)
       // write + stats + row count in ONE observed pass; a 0-row fresh
       // segment only matters when NOTHING else composes the manifest
@@ -3190,7 +3061,7 @@ object SnapshotLog {
       // drop it (its sidecars vanish with the dir)
       val (mn, mx, cnt) = writeSegWithStatsN(df, dir, p, statsCol)
       if (shared.nonEmpty && cnt == 0L) {
-        walked(Paths.get(p))(_.toSeq).reverse.foreach(Files.deleteIfExists)
+        dropDir(Paths.get(p))
         None
       } else Some(Segment(rel, mn, mx))
     }
@@ -3199,21 +3070,10 @@ object SnapshotLog {
     // prev, as ONE change segment
     val deleteParts =
       (if (dropped.isEmpty) Nil
-       else Seq(applyDvs(spark, dir, dvsP,
-         readSegs(spark, dir, prev, dropped.map(_.relPath),
-           keepDvKeys = dvsP.nonEmpty)))) ++
+       else Seq(h.scan(spark, dropped.map(_.relPath)))) ++
         dvImages(dvsGoAway).toSeq
-    val delRel = deleteParts.reduceOption(_.unionByName(_)).flatMap { df =>
-      val rel = s"seg-$vNew-cdc-${writerToken()}"
-      val p = absPath(dir, rel)
-      if (writeCountObserved(df, p) == 0L) {
-        walked(Paths.get(p))(_.toSeq).reverse.foreach(Files.deleteIfExists)
-        None
-      } else {
-        writeSegColIds(dir, p, df.columns.toSeq)
-        Some(rel)
-      }
-    }
+    val delRel = deleteParts.reduceOption(_.unionByName(_))
+      .flatMap(writeTombstone(h, "cdc", _))
     // active DVs: v's own set (shared-file entries live, the rest
     // inert) PLUS the comeback DVs — their shared-file copies were
     // re-delivered as images in the fresh segment, so the raw
@@ -3225,15 +3085,13 @@ object SnapshotLog {
     val newSegs = shared ++ insertSeg.toSeq
     require(newSegs.nonEmpty,
       s"restore to v$v of $dir yields an empty manifest")
-    publish(dir, vNew, commitLines(dir, vNew, newSegs, segsP,
+    commit(h.stage(newSegs,
       ManifestMeta(
-        meta(dir, prev).batches ++ dropped.flatMap(_.tag),
+        h.meta.batches ++ dropped.flatMap(_.tag),
         // shared segments keep their dataChange flags AS OF v; the
         // fresh inserts segment is dataChange = true by omission
-        metaOf(manifestLines(dir, v)).compacted intersect sharedNames.toSet,
-        delRel.toSet, liveDvs, opType = Some("restore")),
-      sc.map(s => s"#schema\t${s.json}")))
-    vNew
+        metaV.compacted intersect sharedNames.toSet,
+        delRel.toSet, liveDvs, opType = Some("restore"))))
   }
 
   /** == Shallow CLONE (round-16 item 3 — Delta's CLONE / Iceberg
@@ -3266,7 +3124,8 @@ object SnapshotLog {
     require(head >= 0, s"nothing to clone in $srcDir")
     val v = if (asOfV < 0) head else asOfV
     require(v <= head, s"clone source version v$v outside [0, $head]")
-    require(version(dstDir) < 0,
+    val dst = readHead(dstDir)
+    require(dst.prev < 0,
       s"clone target $dstDir already holds a log — clone only creates " +
         "fresh tables")
     Files.createDirectories(logDir(dstDir))
@@ -3310,7 +3169,7 @@ object SnapshotLog {
           }
         }
       }
-      publish(dstDir, 0, commitLines(dstDir, 0, segs, Nil,
+      commit(dst.stage(segs,
         ManifestMeta(segs.flatMap(_.tag).toSet ++ m.batches,
           m.compacted intersect segs.map(_.relPath).toSet,
           Set.empty, m.dvs, opType = Some("clone")),
@@ -3318,7 +3177,7 @@ object SnapshotLog {
         // the clone carries the SOURCE's name↔id table as of asOfV —
         // a fresh identity table would lose the rename history its
         // hard-linked segments' _colids files resolve against
-        colidsOverride = colidsOf(srcDir, v)))
+        colids = colidsOf(srcDir, v)))
     } catch {
       case e: Throwable =>
         // innermost first; only paths THIS call created — a
@@ -3328,7 +3187,6 @@ object SnapshotLog {
         }
         throw e
     }
-    0
   }
 
   /** == DESCRIBE HISTORY (round-16 continuation — Delta's surface) ==
@@ -3487,8 +3345,7 @@ object SnapshotLog {
             try Files.getLastModifiedTime(q).toMillis
             catch { case _: java.io.IOException => now } // active → fresh
           }.foldLeft(0L)(math.max))
-          if (now - newest > staleOptimizeAgeMs)
-            walked(p)(_.toSeq).reverse.foreach(Files.deleteIfExists)
+          if (now - newest > staleOptimizeAgeMs) dropDir(p)
         } catch {
           case _: java.io.IOException => ()
           case _: java.io.UncheckedIOException => ()
@@ -3542,7 +3399,8 @@ object SnapshotLog {
     *  - DELETE / MERGE / COMPACT are read-modify-write: their
     *    touched-segment discovery must OBSERVE the winner's rows for
     *    the outcome to be serializable, so the loser RE-RUNS the whole
-    *    operation against the new head via `commitWithRetry` — a
+    *    operation against the new head: `commitWithRetry(n)(op)` wraps
+    *    any of them (and every other single-table write op) — a
     *    manifest-only rebase would let a delete miss rows a concurrent
     *    append landed (write-skew), the conflict Delta classifies as
     *    ConcurrentAppendException and likewise refuses to rebase.
@@ -3578,57 +3436,19 @@ object SnapshotLog {
   def appendWithRetry(df: DataFrame, dir: String, statsCol: Column,
       batchTag: Option[Long] = None, maxAttempts: Int = 5): Int = {
     Files.createDirectories(logDir(dir))
-    var written: Option[(String, Long, Long)] = None
-    var attempt = 0
-    while (true) {
-      val prev = version(dir)
-      if (batchTag.exists(committedBatches(dir))) return prev
-      val v = prev + 1
-      val snapSchema = evolvedSchema(
-        gateSchema(df.sparkSession, dir, prev), df.schema,
-        df.sparkSession.sessionState.analyzer.resolver)
-      val (rel, mn, mx) = written.getOrElse {
-        val r = s"seg-$v-${writerToken()}"
-        val p = absPath(dir, r)
-        val (a, b) = writeSegWithStats(df, dir, p, statsCol)
-        val t = (r, a, b)
-        written = Some(t)
-        t
-      }
-      val carried = if (prev < 0) Nil else segments(dir, prev)
-      val carriedMeta = (if (prev < 0) ManifestMeta(Set.empty, Set.empty)
-        else meta(dir, prev).carried).copy(opType = Some("append"))
-      try {
-        publish(dir, v, commitLines(dir, v,
-          carried :+ Segment(rel, mn, mx, batchTag), carried, carriedMeta,
-          Some(s"#schema\t${snapSchema.json}")))
-        return v
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= maxAttempts) throw e
-          Thread.sleep(5L * attempt)
+    var written: Option[Segment] = None
+    commitWithRetry(maxAttempts) {
+      val h = readHead(dir)
+      if (batchTag.exists(h.batches)) h.prev
+      else written match {
+        case Some(seg) => commit(appendOver(h, seg, gateLine(h, df)))
+        case None =>
+          val (seg, schemaLine) = writeAppend(df, h, statsCol, batchTag)
+          written = Some(seg)
+          commit(appendOver(h, seg, schemaLine))
       }
     }
-    throw new IllegalStateException("unreachable")
   }
-
-  /** delete with serializable re-run-on-conflict (the classification
-    * above: read-modify-write must observe the winner's rows).
-    */
-  def deleteWithRetry(spark: SparkSession, dir: String, predicate: Column,
-      statsCol: Column, maxAttempts: Int = 5): Int =
-    commitWithRetry(maxAttempts)(delete(spark, dir, predicate, statsCol))
-
-  /** merge with serializable re-run-on-conflict. */
-  def mergeWithRetry(spark: SparkSession, src: DataFrame, dir: String,
-      key: String, statsCol: Column, maxAttempts: Int = 5): Int =
-    commitWithRetry(maxAttempts)(merge(spark, src, dir, key, statsCol))
-
-  /** compact with re-run-on-conflict. */
-  def compactWithRetry(spark: SparkSession, dir: String, statsCol: Column,
-      maxAttempts: Int = 5): Int =
-    commitWithRetry(maxAttempts)(compact(spark, dir, statsCol))
 
   /** Zone-map-pruned read: only segments whose [min, max] overlaps
     * [lo, hi] are opened; the exact predicate is re-applied as a
@@ -3642,13 +3462,8 @@ object SnapshotLog {
     val hit = segs.filter(s => s.min <= hi && s.max >= lo)
     val df =
       if (hit.isEmpty) readAsOf(spark, dir, v).limit(0)
-      else {
-        val dvs = meta(dir, v).dvs
-        applyDvs(spark, dir, dvs,
-          readSegs(spark, dir, v, hit.map(_.relPath),
-            keepDvKeys = dvs.nonEmpty))
-          .filter(statsCol >= lo && statsCol <= hi)
-      }
+      else liveRows(spark, dir, v, meta(dir, v).dvs, hit.map(_.relPath))
+        .filter(statsCol >= lo && statsCol <= hi)
     (df, hit.size, segs.size)
   }
 }

@@ -97,27 +97,12 @@ object SnapshotTxn {
     new String(Base64.getDecoder.decode(s), StandardCharsets.UTF_8)
 
   /** Atomic exclusive publish of a small metadata file (the manifest
-    * publish's temp+hard-link discipline; see SnapshotLog.publish for
-    * why link, not rename).
+    * publish's temp+hard-link discipline; see
+    * SnapshotLog.publishExclusive for why link, not rename).
     */
-  private def atomicPublish(target: Path, content: String): Unit = {
-    val tmp = target.getParent.resolve(
-      s".${target.getFileName}.tmp-${java.util.UUID.randomUUID().toString.take(12)}")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
-    try Files.createLink(target, tmp)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"transaction file $target already published", e)
-      case _: UnsupportedOperationException =>
-        try Files.move(tmp, target)
-        catch {
-          case e: java.nio.file.FileAlreadyExistsException =>
-            throw new java.util.ConcurrentModificationException(
-              s"transaction file $target already published", e)
-        }
-    } finally Files.deleteIfExists(tmp)
-  }
+  private def atomicPublish(target: Path, content: String): Unit =
+    SnapshotLog.publishExclusive(target, content,
+      s"transaction file $target already published")
 
   /** Commit every staged single-table commit atomically: all become
     * visible, or (on a crash before the intent publishes) none ever

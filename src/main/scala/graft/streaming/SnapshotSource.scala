@@ -83,24 +83,10 @@ object SnapshotSource {
     */
   private def publishFile(dir: Path, name: String, content: String): Unit = {
     Files.createDirectories(dir)
-    val tmp = dir.resolve(s".$name.tmp-${ProcessHandle.current().pid()}-" +
-      s"${Thread.currentThread().getId}")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
     val target = dir.resolve(name)
-    def lose(e: Throwable): Nothing =
-      throw new java.util.ConcurrentModificationException(
-        s"checkpoint entry $target was written by another tail — one " +
-          "reader per checkpoint dir (Spark's own streaming contract)", e)
-    try Files.createLink(target, tmp)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException => lose(e)
-      case _: UnsupportedOperationException =>
-        // no-hardlink filesystems fall back to a no-replace move — the
-        // loser must still get the DOCUMENTED exception type, exactly
-        // like SnapshotLog.publish's fallback
-        try Files.move(tmp, target)
-        catch { case e: java.nio.file.FileAlreadyExistsException => lose(e) }
-    } finally Files.deleteIfExists(tmp)
+    SnapshotLog.publishExclusive(target, content,
+      s"checkpoint entry $target was written by another tail — one " +
+        "reader per checkpoint dir (Spark's own streaming contract)")
   }
 
   /** The last PLANNED batch (offsets WAL), committed or not. */

@@ -85,8 +85,8 @@ class SnapshotLogRetrySpec extends SparkSpec {
       SnapshotLog.reset(dir, checkpointInterval = 3)
       SnapshotLog.append((0L until 10L).toDF("k"), dir, col("k"))
       inParallel(Seq(
-        () => { SnapshotLog.deleteWithRetry(spark, dir,
-          pmod(col("k"), lit(2L)) === 0, col("k"), maxAttempts = 50); () },
+        () => { SnapshotLog.commitWithRetry(50)(SnapshotLog.delete(spark, dir,
+          pmod(col("k"), lit(2L)) === 0, col("k"))); () },
         () => { SnapshotLog.appendWithRetry((100L until 104L).toDF("k"),
           dir, col("k"), maxAttempts = 50); () }
       ))
@@ -114,8 +114,8 @@ class SnapshotLogRetrySpec extends SparkSpec {
       SnapshotLog.reset(dir, checkpointInterval = 3)
       SnapshotLog.append((0L until 10L).toDF("k"), dir, col("k"))
       inParallel(Seq(
-        () => { SnapshotLog.deleteMorWithRetry(spark, dir,
-          pmod(col("k"), lit(2L)) === 0, maxAttempts = 50); () },
+        () => { SnapshotLog.commitWithRetry(50)(SnapshotLog.deleteMor(spark,
+          dir, pmod(col("k"), lit(2L)) === 0)); () },
         () => { SnapshotLog.appendWithRetry((100L until 104L).toDF("k"),
           dir, col("k"), maxAttempts = 50); () }
       ))
@@ -143,10 +143,10 @@ class SnapshotLogRetrySpec extends SparkSpec {
         () => {
           val pred = pmod(col("k"), lit(2L)) === 0
           val set = Seq("x" -> (col("k") + 100L))
-          if (mor) SnapshotLog.updateMorWithRetry(spark, dir, pred, set,
-            col("k"), maxAttempts = 50)
-          else SnapshotLog.updateWithRetry(spark, dir, pred, set,
-            col("k"), maxAttempts = 50)
+          if (mor) SnapshotLog.commitWithRetry(50)(
+            SnapshotLog.updateMor(spark, dir, pred, set, col("k")))
+          else SnapshotLog.commitWithRetry(50)(
+            SnapshotLog.update(spark, dir, pred, set, col("k")))
           ()
         },
         () => { SnapshotLog.appendWithRetry(
@@ -172,10 +172,10 @@ class SnapshotLogRetrySpec extends SparkSpec {
     SnapshotLog.reset(dir, checkpointInterval = 3)
     SnapshotLog.append((0L until 8L).toDF("k"), dir, col("k"))
     inParallel(Seq(
-      () => { SnapshotLog.mergeMorWithRetry(spark,
-        Seq(2L, 50L).toDF("k"), dir, "k", col("k"), maxAttempts = 50); () },
-      () => { SnapshotLog.compactWithRetry(spark, dir, col("k"),
-        maxAttempts = 50); () }
+      () => { SnapshotLog.commitWithRetry(50)(SnapshotLog.mergeMor(spark,
+        Seq(2L, 50L).toDF("k"), dir, "k", col("k"))); () },
+      () => { SnapshotLog.commitWithRetry(50)(
+        SnapshotLog.compact(spark, dir, col("k"))); () }
     ))
     // both committed in some order: key 2 replaced exactly once (its
     // old image tombstoned OR compacted away), 50 inserted once
@@ -191,10 +191,10 @@ class SnapshotLogRetrySpec extends SparkSpec {
     SnapshotLog.reset(dir, checkpointInterval = 3)
     SnapshotLog.append((0L until 8L).toDF("k"), dir, col("k"))
     inParallel(Seq(
-      () => { SnapshotLog.mergeWithRetry(spark,
-        Seq(2L, 50L).toDF("k"), dir, "k", col("k"), maxAttempts = 50); () },
-      () => { SnapshotLog.compactWithRetry(spark, dir, col("k"),
-        maxAttempts = 50); () }
+      () => { SnapshotLog.commitWithRetry(50)(SnapshotLog.merge(spark,
+        Seq(2L, 50L).toDF("k"), dir, "k", col("k"))); () },
+      () => { SnapshotLog.commitWithRetry(50)(
+        SnapshotLog.compact(spark, dir, col("k"))); () }
     ))
     // both committed (in either order): the final state holds all
     // original keys plus the merge insert, each exactly once
@@ -202,5 +202,41 @@ class SnapshotLogRetrySpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got === ((0L until 8L) :+ 50L).sorted)
     assert(SnapshotLog.version(dir) === 2)
+  }
+
+  test("commitWithRetry returns the op's value after retried conflicts") {
+    var calls = 0
+    val got = SnapshotLog.commitWithRetry(5) {
+      calls += 1
+      if (calls < 3)
+        throw new java.util.ConcurrentModificationException(s"lost $calls")
+      calls * 10
+    }
+    assert(got === 30)
+    assert(calls === 3)
+  }
+
+  test("commitWithRetry rethrows the last conflict at maxAttempts") {
+    var calls = 0
+    val last = intercept[java.util.ConcurrentModificationException] {
+      SnapshotLog.commitWithRetry(4) {
+        calls += 1
+        throw new java.util.ConcurrentModificationException(s"lost $calls")
+      }
+    }
+    assert(calls === 4)
+    assert(last.getMessage === "lost 4")
+  }
+
+  test("commitWithRetry propagates any other failure without a retry") {
+    var calls = 0
+    val refused = intercept[IllegalArgumentException] {
+      SnapshotLog.commitWithRetry(5) {
+        calls += 1
+        throw new IllegalArgumentException("refused")
+      }
+    }
+    assert(calls === 1)
+    assert(refused.getMessage === "refused")
   }
 }

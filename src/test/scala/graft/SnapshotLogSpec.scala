@@ -333,4 +333,36 @@ class SnapshotLogSpec extends SparkSpec {
     assert(SnapshotLog.version(dir) === 0)
     assert(SnapshotLog.readAsOf(spark, dir, 0).count() === 1)
   }
+
+  test("reads of a version with deletion vectors are defined without a Spark job") {
+    import spark.implicits._
+    val rows = (0L until 40L).map(k => (k, k * 10L))
+    def table(name: String): String = {
+      val dir = java.nio.file.Files.createTempDirectory(name).toString
+      SnapshotLog.reset(dir)
+      SnapshotLog.append(rows.take(20).toDF("k", "x"), dir, col("k"))
+      SnapshotLog.append(rows.drop(20).toDF("k", "x"), dir, col("k"))
+      dir
+    }
+    val pred = pmod(col("k"), lit(3L)) === 0
+    val mor = table("snaplog_dv_jobs")
+    val v = SnapshotLog.deleteMor(spark, mor, pred)
+    assert(SnapshotLog.meta(mor, v).dvs.nonEmpty)
+    // the DV-free reference: the same delete, copy-on-write, on a twin
+    val cow = table("snaplog_dv_ref")
+    val ref = SnapshotLog.delete(spark, cow, pred, col("k"))
+    assert(SnapshotLog.meta(cow, ref).dvs.isEmpty)
+    val keys = (0L until 40L by 2).toDF("k")
+    val (read, readJobs) = jobsOf(SnapshotLog.readAsOf(spark, mor, v))
+    val ((byKey, _, _), keyJobs) =
+      jobsOf(SnapshotLog.readAsOfKeys(spark, mor, v, Seq("k"), keys))
+    assert(readJobs === 0, s"defining readAsOf ran $readJobs Spark jobs")
+    assert(keyJobs === 0, s"defining readAsOfKeys ran $keyJobs Spark jobs")
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(sorted(read) === sorted(SnapshotLog.readAsOf(spark, cow, ref)))
+    assert(sorted(byKey) ===
+      sorted(SnapshotLog.readAsOfKeys(spark, cow, ref, Seq("k"), keys)._1))
+    assert(sorted(read) === rows.filterNot(_._1 % 3 == 0))
+  }
 }

@@ -28,6 +28,38 @@ trait SparkSpec extends AnyFunSuite {
       GraftEngine.releaseCaches()
     }
   }
+
+  /** The Spark jobs `body` runs: jobs carry this thread's job group; a
+    * marker job run afterwards proves every earlier start event has
+    * reached the listener (the listener bus delivers in order).
+    */
+  protected def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-jobs-${java.util.UUID.randomUUID}"
+    val groups = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = body
+      sc.setJobGroup(group + "-marker", "marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains(group + "-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(group + "-marker"), "marker job never observed")
+      (out, groups.toArray.count(_ == group))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSpec {
