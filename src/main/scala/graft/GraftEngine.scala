@@ -885,6 +885,17 @@ object GraftEngine {
     graft.queries.EventOps.releaseCaches()
     graft.queries.RecoOps.releaseCaches()
   }
+
+  /** Frees the blocks behind every local checkpoint `df` reads (its
+    * plan's `LogicalRDD` leaves). The ContextCleaner frees them only at
+    * GC, which is too slow to bound a long session's storage.
+    */
+  private[graft] def unpinCheckpoints(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }
 
 private object CosineRegistration {

@@ -55,8 +55,8 @@ object JobProfile {
         } else {
           val fn = SparkEntry.queries(name)
           // SPARK_GRAFT_RELEASE_QUERIES=1: release memos before every
-          // run so warm repeats of memo-backed rows profile real work
-          // (the BenchOne flag, same rationale)
+          // run so warm repeats of a memo-backed trainer/walk row
+          // (q211, q198, q210) profile real work instead of a memo hit
           (if (sys.env.contains("SPARK_GRAFT_RELEASE_QUERIES"))
             (() => GraftEngine.releaseCaches()) else (() => ()),
             () => fn(spark, sfDir).write.format("noop").mode("overwrite").save())

@@ -153,9 +153,8 @@ object SnapshotLog {
     * default applies only to `reset`'s parameter).
     */
   def checkpointIntervalOf(dir: String): Int = {
-    val p = configPath(dir)
-    if (!Files.exists(p)) 1
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
+    if (!Files.exists(configPath(dir))) 1
+    else configLines(dir)
       .collectFirst { case l if l.startsWith("interval=") =>
         l.stripPrefix("interval=").toInt }
       .getOrElse(DefaultCheckpointInterval)
@@ -298,6 +297,30 @@ object SnapshotLog {
   private val configLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  /** Runs `body` holding the config's in-JVM lock. */
+  private def withConfigLock[A](dir: String)(body: => A): A =
+    configLocks.computeIfAbsent(configPath(dir).toAbsolutePath.toString,
+      _ => new Object).synchronized(body)
+
+  /** Replaces the config with `lines` in one atomic rename (temp file,
+    * then `ATOMIC_MOVE`): readers see the old config or the new one,
+    * never a partial write. Callers hold `withConfigLock`.
+    */
+  private def replaceConfig(dir: String, lines: Seq[String]): Unit = {
+    val tmp = logDir(dir).resolve(s".config.tmp-${writerToken()}")
+    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, configPath(dir),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** The config's lines; none when the log has no config. */
+  private def configLines(dir: String): Seq[String] = {
+    val p = configPath(dir)
+    if (!Files.exists(p)) Nil
+    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq
+  }
+
   /** == Declared clustering spec (round-17 item 7 — Iceberg's
     * partition-spec / Delta's CLUSTER BY posture, lite) ==
     * The table DECLARES its clustering dimensions once
@@ -313,18 +336,13 @@ object SnapshotLog {
     * `renameColumn` re-binds the spec's expressions like every other
     * config expression.
     */
-  def clusterByOf(dir: String): Seq[String] = {
-    val p = configPath(dir)
-    if (!Files.exists(p)) Nil
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .filter(_.startsWith("cluster\t")).map(_.split('\t')(1)).toSeq
-  }
+  def clusterByOf(dir: String): Seq[String] =
+    configLines(dir).filter(_.startsWith("cluster\t")).map(_.split('\t')(1))
 
   def setClusterBy(spark: SparkSession, dir: String,
       dims: Seq[String]): Unit = {
     require(dims.nonEmpty, "a clustering spec needs at least one dimension")
-    val p = configPath(dir)
-    require(Files.exists(p),
+    require(Files.exists(configPath(dir)),
       s"no table config in $dir — reset first (the clustering spec is a " +
         "table property)")
     dims.foreach { e =>
@@ -334,17 +352,10 @@ object SnapshotLog {
         spark.sessionState.sqlParser.parseExpression(e)).isSuccess,
         s"cluster expression does not parse: $e")
     }
-    val lock = configLocks.computeIfAbsent(
-      p.toAbsolutePath.toString, _ => new Object)
-    lock.synchronized {
-      val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-        .toSeq.filterNot(_.startsWith("cluster\t")) ++
-        dims.map(e => s"cluster\t$e")
-      val tmp = logDir(dir).resolve(s".config.tmp-${writerToken()}")
-      Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    withConfigLock(dir) {
+      replaceConfig(dir,
+        configLines(dir).filterNot(_.startsWith("cluster\t")) ++
+          dims.map(e => s"cluster\t$e"))
     }
   }
 
@@ -372,20 +383,15 @@ object SnapshotLog {
     * which renames don't change), and compaction/OPTIMIZE rewrites
     * record fresh blooms through the same stat pass.
     */
-  def bloomSpecOf(dir: String): Map[String, (Long, Double)] = {
-    val p = configPath(dir)
-    if (!Files.exists(p)) Map.empty
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .filter(_.startsWith("bloom\t")).map { l =>
-        val a = l.split('\t')
-        a(1) -> (a(2).toLong, a(3).toDouble)
-      }.toMap
-  }
+  def bloomSpecOf(dir: String): Map[String, (Long, Double)] =
+    configLines(dir).filter(_.startsWith("bloom\t")).map { l =>
+      val a = l.split('\t')
+      a(1) -> (a(2).toLong, a(3).toDouble)
+    }.toMap
 
   def setBloomOn(dir: String, statName: String,
       expectedItems: Long = 1L << 17, fpp: Double = 0.001): Unit = {
-    val p = configPath(dir)
-    require(Files.exists(p),
+    require(Files.exists(configPath(dir)),
       s"no table config in $dir — reset first (the bloom spec is a " +
         "table property)")
     require(expectedItems > 0,
@@ -394,28 +400,18 @@ object SnapshotLog {
     require(statsColsOf(dir).exists(_._1 == statName),
       s"no stat named '$statName' — blooms attach to a recorded stat " +
         "expression (add it via reset/evolveStatsCols first)")
-    val lock = configLocks.computeIfAbsent(
-      p.toAbsolutePath.toString, _ => new Object)
-    lock.synchronized {
-      val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-        .toSeq.filterNot(_.startsWith(s"bloom\t$statName\t")) :+
-        s"bloom\t$statName\t$expectedItems\t$fpp"
-      val tmp = logDir(dir).resolve(s".config.tmp-${writerToken()}")
-      Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    withConfigLock(dir) {
+      replaceConfig(dir,
+        configLines(dir).filterNot(_.startsWith(s"bloom\t$statName\t")) :+
+          s"bloom\t$statName\t$expectedItems\t$fpp")
     }
   }
 
   def evolveStatsCols(dir: String, add: Seq[(String, String)]): Unit = {
-    val p = configPath(dir)
-    require(Files.exists(p),
+    require(Files.exists(configPath(dir)),
       s"no table config in $dir — legacy config-less logs have no stats " +
         "schema to evolve; reset first")
-    val lock = configLocks.computeIfAbsent(
-      p.toAbsolutePath.toString, _ => new Object)
-    lock.synchronized {
+    withConfigLock(dir) {
       val existing = statsColsOf(dir).toMap
       add.foreach { case (n, e) =>
         requireStatLine(n, e)
@@ -427,16 +423,9 @@ object SnapshotLog {
         }
       }
       val fresh = add.filterNot { case (n, _) => existing.contains(n) }
-      if (fresh.nonEmpty) {
-        val lines =
-          Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq ++
-            fresh.map { case (n, e) => s"stat\t$n\t$e" }
-        val tmp = logDir(dir).resolve(s".config.tmp-${writerToken()}")
-        Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, p,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
+      if (fresh.nonEmpty)
+        replaceConfig(dir,
+          configLines(dir) ++ fresh.map { case (n, e) => s"stat\t$n\t$e" })
     }
   }
 
@@ -465,13 +454,10 @@ object SnapshotLog {
     */
   def addCheck(spark: SparkSession, dir: String, name: String,
       exprSql: String): Unit = {
-    val p = configPath(dir)
-    require(Files.exists(p),
+    require(Files.exists(configPath(dir)),
       s"no table config in $dir — reset first (checks are table properties)")
     requireStatLine(name, exprSql)
-    val lock = configLocks.computeIfAbsent(
-      p.toAbsolutePath.toString, _ => new Object)
-    lock.synchronized {
+    withConfigLock(dir) {
       // head validation runs INSIDE the config lock and the head is
       // re-checked after the scan (round-17 advice): a commit landing
       // mid-scan would otherwise slip unvalidated rows under a
@@ -498,16 +484,8 @@ object SnapshotLog {
           s"check '$name' is already recorded as '$old' — drop-and-re-add " +
             "is not supported; pick a new name")
       }
-      if (!existing.contains(name)) {
-        val lines =
-          Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq :+
-            s"check\t$name\t$exprSql"
-        val tmp = logDir(dir).resolve(s".config.tmp-${writerToken()}")
-        Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, p,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
+      if (!existing.contains(name))
+        replaceConfig(dir, configLines(dir) :+ s"check\t$name\t$exprSql")
     }
   }
 
@@ -522,14 +500,11 @@ object SnapshotLog {
     * contract), the constraint governs what writers may land.
     */
   def addNotNull(spark: SparkSession, dir: String, colName: String): Unit = {
-    val p = configPath(dir)
-    require(Files.exists(p),
+    require(Files.exists(configPath(dir)),
       s"no table config in $dir — reset first (constraints are table " +
         "properties)")
     requireStatLine(colName, colName)
-    val lock = configLocks.computeIfAbsent(
-      p.toAbsolutePath.toString, _ => new Object)
-    lock.synchronized {
+    withConfigLock(dir) {
       // validated inside the config lock with a post-scan head
       // re-check, same rationale and residual contract as addCheck
       val head = version(dir)
@@ -546,49 +521,29 @@ object SnapshotLog {
       require(version(dir) == head,
         s"table advanced past v$head while validating NOT NULL " +
           s"'$colName' — the scan no longer proves the head is clean; retry")
-      if (!notNullsOf(dir).contains(colName)) {
-        val lines =
-          Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq :+
-            s"notnull\t$colName"
-        val tmp = logDir(dir).resolve(s".config.tmp-${writerToken()}")
-        Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, p,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
+      if (!notNullsOf(dir).contains(colName))
+        replaceConfig(dir, configLines(dir) :+ s"notnull\t$colName")
     }
   }
 
   /** The table's NOT NULL columns, as recorded in the config. */
-  def notNullsOf(dir: String): Seq[String] = {
-    val p = configPath(dir)
-    if (!Files.exists(p)) Nil
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
+  def notNullsOf(dir: String): Seq[String] =
+    configLines(dir)
       .collect { case l if l.startsWith("notnull\t") => l.split('\t')(1) }
-      .toSeq
-  }
 
   /** The table's CHECK constraints, as recorded in the config. */
-  def checksOf(dir: String): Seq[(String, String)] = {
-    val p = configPath(dir)
-    if (!Files.exists(p)) Nil
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .collect { case l if l.startsWith("check\t") =>
-        val Array(_, n, e) = l.split('\t')
-        (n, e)
-      }.toSeq
-  }
+  def checksOf(dir: String): Seq[(String, String)] =
+    configLines(dir).collect { case l if l.startsWith("check\t") =>
+      val Array(_, n, e) = l.split('\t')
+      (n, e)
+    }
 
   /** The table's sidecar stats schema, as recorded at reset. */
-  def statsColsOf(dir: String): Seq[(String, String)] = {
-    val p = configPath(dir)
-    if (!Files.exists(p)) Nil
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .collect { case l if l.startsWith("stat\t") =>
-        val Array(_, n, e) = l.split('\t')
-        (n, e)
-      }.toSeq
-  }
+  def statsColsOf(dir: String): Seq[(String, String)] =
+    configLines(dir).collect { case l if l.startsWith("stat\t") =>
+      val Array(_, n, e) = l.split('\t')
+      (n, e)
+    }
 
   private def manifestLines(dir: String, v: Int): Seq[String] = {
     val mf = logDir(dir).resolve(s"v$v.manifest")
@@ -1008,17 +963,13 @@ object SnapshotLog {
       else c)
     val newSchema = org.apache.spark.sql.types.StructType(sc.fields.map(f =>
       if (resolver(f.name, oldName)) f.copy(name = newName) else f))
-    val p = configPath(dir)
-    val lock = configLocks.computeIfAbsent(
-      p.toAbsolutePath.toString, _ => new Object)
-    lock.synchronized {
+    withConfigLock(dir) {
       // every config rewrite validates BEFORE the manifest publishes —
       // a refused rename must leave both the log and the config
       // exactly as they were
       val rewritten: Option[Seq[String]] =
-        if (!Files.exists(p)) None
-        else Some(Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-          .toSeq.map { l =>
+        if (!Files.exists(configPath(dir))) None
+        else Some(configLines(dir).map { l =>
             val f = l.split('\t')
             f(0) match {
               case "stat" =>
@@ -1035,14 +986,7 @@ object SnapshotLog {
       val v = commit(h.stage(h.segs,
         h.meta.carried.copy(opType = Some("rename")),
         Some(s"#schema\t${newSchema.json}"), colids = Some(newIds)))
-      rewritten.foreach { lines =>
-        val tmp = logDir(dir).resolve(s".config.tmp-${writerToken()}")
-        Files.write(tmp,
-          lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, p,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
+      rewritten.foreach(replaceConfig(dir, _))
       v
     }
   }
@@ -1866,12 +1810,12 @@ object SnapshotLog {
     val token = writerToken()
     val staging = Paths.get(dir, s".opt-$v-$token")
     val shift = dims.size * bits - bucketBits
-    ZOrder.withZ(df, dims, bits)
+    val staged = ZOrder.withZ(df, dims, bits)
       .withColumn("__zb", shiftright(col("__z"), shift))
       .repartitionByRange(1 << bucketBits, col("__zb"), col("__z"))
       .sortWithinPartitions(col("__zb"), col("__z"))
       .drop("__z")
-      .write.partitionBy("__zb").mode("overwrite").parquet(staging.toString)
+    staged.write.partitionBy("__zb").mode("overwrite").parquet(staging.toString)
     val bucketDirs = listed(staging)(_.filter(
       _.getFileName.toString.startsWith("__zb=")).toSeq)
       .sortBy(_.getFileName.toString)
@@ -1881,8 +1825,14 @@ object SnapshotLog {
     // (guide §2.4: fewer passes; the per-group agg values are identical
     // to the per-dir aggregates because partitionBy wrote exactly each
     // group's rows into its dir).
+    // The read names the staged schema and the listed bucket dirs: no
+    // footer-inference job, and no "All paths were ignored" WARN (the
+    // hidden staging root is filtered out as a path; `basePath` keeps
+    // `__zb` as the partition column).
     val newSegs = if (bucketDirs.isEmpty) Seq.empty[Segment] else {
-      val statDf = spark.read.parquet(staging.toString)
+      val statDf = spark.read.schema(staged.schema)
+        .option("basePath", staging.toString)
+        .parquet(bucketDirs.map(_.toString): _*)
       val plan = segStatPlan(spark, dir, statDf.drop("__zb"), statsCol)
       val byBucket = statDf
         .groupBy(col("__zb").cast("string").as("__zbkey"))

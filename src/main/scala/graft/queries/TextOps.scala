@@ -173,11 +173,7 @@ object TextOps {
     // exactly this). drain() additionally can't miss a build racing
     // the release (the KeyedMemo contract).
     unigramMemo.drain().foreach { case (_, _, _, words) =>
-      words.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
+      graft.GraftEngine.unpinCheckpoints(words)
     }
   }
 

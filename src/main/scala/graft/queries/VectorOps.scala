@@ -34,7 +34,7 @@ object VectorOps {
     * the amortized build into every serving row. Same lifecycle convention
     * as TextOps' pinned kernels: whichever consumer runs first pays the
     * build, everyone else reads; released by `releaseCaches()` (Bench/
-    * Verify/BenchOne call it after the sweep). Seeded fits make the
+    * Verify/JobProfile call it after the sweep). Seeded fits make the
     * shared index identical to a per-query rebuild, so results are
     * unchanged. At 100 TB the analogue is `IvfPq.save`/`load` — the
     * index lives on disk across serving sessions; this memo is the
@@ -56,15 +56,6 @@ object VectorOps {
     * release).
     */
   def releaseCaches(): Unit = {
-    // localCheckpoint frames pin RDD blocks that the ContextCleaner
-    // frees only at GC — explicit unpersist here (the unigramMemo
-    // lesson: GC alone is too slow to bound a long session's storage)
-    def unpin(df: DataFrame): Unit =
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
     servedIndexes.drain().foreach {
       case i: graft.ext.IvfPq.Index => i.close()
       case i: graft.ext.PqIndex.Index => i.close()
@@ -75,7 +66,7 @@ object VectorOps {
     // per-hop scored states — the returned frames reference only the
     // LAST of these, so walking their plans would miss the rest)
     walkPinned.synchronized {
-      walkPinned.foreach(unpin)
+      walkPinned.foreach(graft.GraftEngine.unpinCheckpoints)
       walkPinned.clear()
     }
     // facade-built kNN graphs (knnGraphOf on caller frames) are
@@ -557,10 +548,11 @@ object VectorOps {
   private[graft] def graphBeamSearch(s: SparkSession, e0: DataFrame,
       beam: Int = 8, hops: Int = 4, entries: Int = 8,
       degree: Int = 8): (DataFrame, DataFrame) = {
-    val (topk, scored) = graphBeamGrouped(s,
-      e0.select(lit(0).as("__grp"), col("vec_id"), col("embedding")),
-      beam, hops, entries, degree)
-    (topk.drop("__grp"), scored.drop("__grp"))
+    val (base, adj) = graphAdjGrouped(s,
+      e0.select(lit(0).as("__grp"), col("vec_id"), col("embedding")), degree)
+    val (topk, scored) = graphWalkGrid(s, base, adj, regimeQueries(base),
+      Seq((beam, entries)), hops)
+    (topk.drop("__gp", "__grp"), scored.drop("__gp", "__grp", "__beam"))
   }
 
   /** Checkpoints made by the graph walks, tracked for explicit release
@@ -570,45 +562,20 @@ object VectorOps {
     */
   private val walkPinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
 
-  private def walkCkpt(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint()
+  /** Local checkpoint of a walk frame, tracked in `walkPinned`. A LAZY
+    * one (`eager = false`, round-18 hop fusion) still truncates lineage
+    * at a LogicalRDD leaf (per-hop plans stay shallow — the reason the
+    * walk checkpoints at all), but submits no job: the chain
+    * materializes inside the FIRST action that consumes it — the final
+    * hop's EAGER checkpoint — so a 4-hop walk runs as one submitted
+    * action instead of five. Intermediates cache when computed (the
+    * lazy-checkpoint contract), so beam windows re-reading earlier
+    * states never recompute them.
+    */
+  private def walkCkpt(df: DataFrame, eager: Boolean): DataFrame = {
+    val c = df.localCheckpoint(eager)
     walkPinned.synchronized { walkPinned += c }
     c
-  }
-
-  /** LAZY local checkpoint for intermediate hop states (round-18 hop
-    * fusion): lineage still truncates at a LogicalRDD leaf (per-hop
-    * plans stay shallow — the reason the walk checkpoints at all), but
-    * no job is submitted per hop; the chain materializes inside the
-    * FIRST action that consumes it — the final hop's EAGER checkpoint
-    * — so a 4-hop walk runs as one submitted action instead of five.
-    * Intermediates cache when computed (the lazy-checkpoint contract),
-    * so beam windows re-reading earlier states never recompute them.
-    */
-  private def walkCkptLazy(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint(eager = false)
-    walkPinned.synchronized { walkPinned += c }
-    c
-  }
-
-  /** The walk, GROUPED on `__grp` — every stage keys on the group, so
-    * independent corpora (q210's two regimes) walk in ONE set of Spark
-    * jobs instead of one per corpus: at these state sizes the cost is
-    * job-scheduling overhead, not data, so co-walking halves the wall.
-    * Input (`__grp`, vec_id, embedding); outputs carry `__grp`.
-    * Composition of the two halves below (round-17 item 8 split the
-    * adjacency BUILD from the WALK so the (beam, entries) calibration
-    * grid re-walks ONE shared adjacency instead of rebuilding the
-    * corpus-sized graph per grid point).
-    */
-  private def graphBeamGrouped(s: SparkSession, eg: DataFrame,
-      beam: Int, hops: Int, entries: Int,
-      degree: Int): (DataFrame, DataFrame) = {
-    val (base, adj) = graphAdjGrouped(s, eg, degree)
-    val q = base.filter(col("vec_id") < 10)
-      .select(col("__grp"), col("vec_id").as("q_id"),
-        col("embedding").as("q_emb"))
-    graphWalkGrouped(s, base, adj, q, beam, hops, entries)
   }
 
   /** Adjacency half: builds the navigable-small-world edge list for
@@ -639,7 +606,7 @@ object VectorOps {
     // synthesizes embeddings from 64 md5 draws per row, and re-deriving
     // that in every consumer was 6× the 10× row (53 s → 8.5 s).
     val base = walkCkpt(
-      eg.select(col("__grp"), col("vec_id"), col("embedding")))
+      eg.select(col("__grp"), col("vec_id"), col("embedding")), eager = true)
     val nAgg = base.groupBy(col("__grp")).agg(count(lit(1)).as("n"))
     // CLUSTERED corpora concentrate whole clusters into a few sign
     // buckets (the point of LSH — and a quadratic trap for the
@@ -687,110 +654,38 @@ object VectorOps {
           col("b_id").as("dst"))
         .union(edges.select(col("__grp"), col("b_id").as("src"),
           col("a_id").as("dst")))
-        .distinct())
+        .distinct(), eager = true)
     (base, adj)
   }
 
-  /** Walk half: beam search over a prebuilt (base, adj) pair for an
-    * arbitrary query frame `q` (`__grp`, q_id, q_emb) — the group tags
-    * on `q` decide which corpora walk (joins key on `__grp`, so groups
-    * with no queries cost nothing). Self-matches (vec_id = q_id)
+  /** Walk half, the ONE graph-walk kernel: beam search over a prebuilt
+    * (base, adj) pair for an arbitrary query frame `q` (`__grp`, q_id,
+    * q_emb) at every (beam, entries) point of `grid`. The group tags on
+    * `q` decide which corpora walk (joins key on `__grp`, so groups
+    * with no queries cost nothing), and every grid point's beam state
+    * co-walks in the SAME Spark jobs over the same adjacency — the
+    * `__grp` co-walking trick applied a second time, on the GRID axis
+    * (guide §2.4; round-17 verdict item 4: the calibration's (2,4) and
+    * (4,8) walks were two full per-hop job chains over identical
+    * adjacency). A single walk is the one-point grid `Seq((beam,
+    * entries))`. State rows carry a `__gp` tag ("beam:entries") plus
+    * the point's `__beam`; every window, dedup and anti-join is scoped
+    * by (`__gp`, `__grp`, q_id), so a point's rows do not depend on
+    * which other points share the walk (Round18OptSpec pins each point
+    * against a reference single walk). Self-matches (vec_id = q_id)
     * always exclude, as in every serving arm's calibration. Returns
-    * (top-`finalK` per query, every scored candidate) — the second
-    * frame's per-query row count IS the walk's cost in distance
-    * evaluations, the unit the cross-arm tuner compares on.
-    */
-  private[graft] def graphWalkGrouped(s: SparkSession, base: DataFrame,
-      adj: DataFrame, q: DataFrame, beam: Int, hops: Int, entries: Int,
-      finalK: Int = 3): (DataFrame, DataFrame) = {
-    CosineSimilarity.ensureRegistered(s)
-    def topN(scored: DataFrame, n: Int): DataFrame = {
-      val w = Window.partitionBy(col("__grp"), col("q_id"))
-        .orderBy(col("cos_r").desc, col("vec_id"))
-      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= n)
-        .select(col("__grp"), col("q_id"), col("vec_id"), col("cos_r"))
-    }
-    val nAgg = base.groupBy(col("__grp")).agg(count(lit(1)).as("n"))
-    def score(cand: DataFrame): DataFrame =
-      cand.join(base, Seq("__grp", "vec_id"))
-        .join(broadcast(q), Seq("__grp", "q_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
-        .select(col("__grp"), col("q_id"), col("vec_id"), col("cos_r"))
-    // entry points are part of the INDEX, disjoint from the query set
-    // (vec_id < 10): an entry that IS the query gets excluded from
-    // scoring, which silently left those queries with no entry in
-    // their own neighborhood (measured: recall 0.2 → healthy after).
-    // Candidates come from a deterministic HASH PREFILTER (expected
-    // ~4·entries ids per group) so the exact smallest-of pick sorts a
-    // bounded set — a bare per-group row_number window funneled each
-    // regime's whole id column through ONE task, a single-task
-    // corpus-sized sort on a path whose pitch is corpus-independence.
-    // The prefilter is id-determined (xxhash), so the entry SET is
-    // rerun-stable; tiny corpora (n ≲ 4·entries) keep everything.
-    val wE = Window.partitionBy(col("__grp")).orderBy(col("vec_id"))
-    val entryIds = base.filter(col("vec_id") >= 10)
-      .join(broadcast(nAgg), Seq("__grp"))
-      .filter(pmod(xxhash64(col("vec_id")),
-        greatest(lit(1L), (col("n") / lit(4L * entries)).cast("long"))) === 0L)
-      .select(col("__grp"), col("vec_id"))
-      .withColumn("rn", row_number().over(wE)).filter(col("rn") <= entries)
-      .drop("rn")
-    val entry = q.select(col("__grp"), col("q_id"))
-      .join(entryIds, Seq("__grp"))
-    // the per-hop state is groups·queries·beam·degree rows —
-    // single-partition frames, so each hop's eager checkpoint
-    // schedules 1 task per stage instead of shuffle.partitions of
-    // them (the walk's cost is job/task overhead, not data).
-    // coalesce(1), not repartition(1): the round-robin exchange per
-    // hop was one more shuffle stage (and AQE job) per checkpoint on
-    // frames whose row ORDER nothing depends on — every consumer
-    // re-sorts through a window (guide §2.4: remove shuffles outright)
-    // hop fusion (round-18): intermediate states take LAZY local
-    // checkpoints — plans stay hop-shallow but no per-hop job submits;
-    // the LAST hop's eager checkpoint materializes the whole chain in
-    // one action (so build-vs-serve accounting is unchanged: the walk
-    // still fully computes inside whichever step runs it)
-    var scored = (if (hops == 0) walkCkpt(score(entry).coalesce(1))
-      else walkCkptLazy(score(entry).coalesce(1)))
-    var beamDf = topN(scored, beam)
-    (1 to hops).foreach { h =>
-      val expand = beamDf.select(col("__grp"), col("q_id"),
-          col("vec_id").as("src"))
-        .join(adj, Seq("__grp", "src"))
-        .select(col("__grp"), col("q_id"), col("dst").as("vec_id"))
-        .distinct()
-      val unseen = expand.join(
-        scored.select(col("__grp"), col("q_id"), col("vec_id")),
-        Seq("__grp", "q_id", "vec_id"), "left_anti")
-      val next = scored.unionByName(score(unseen)).coalesce(1)
-      scored = if (h == hops) walkCkpt(next) else walkCkptLazy(next)
-      beamDf = topN(scored, beam)
-    }
-    (topN(scored, finalK), scored)
-  }
-
-  /** Grid-of-(beam, entries) walk: every grid point's beam state
-    * co-walks in ONE set of Spark jobs over the SAME prebuilt
-    * (base, adj) — the `__grp` co-walking trick applied a second time,
-    * on the GRID axis (guide §2.4; round-17 verdict item 4: the
-    * calibration's (2,4) and (4,8) walks were two full per-hop job
-    * chains over identical adjacency). State rows carry a `__gp` tag
-    * plus the point's `__beam`; entry sets compute per grid point with
-    * the exact single-walk expression (the hash prefilter modulus
-    * depends on `entries`, so one point's entry set is NOT a prefix of
-    * another's and must not be derived by truncation). Per-point rows
-    * are expression-identical to `graphWalkGrouped` at that
-    * (beam, entries) — same score rounding, same window tiebreaks,
-    * same per-hop dedup, all scoped by (`__gp`, `__grp`, q_id) —
-    * Round18OptSpec pins the identity per point.
+    * (top-`finalK` per point and query: `__gp`, `__grp`, q_id, vec_id,
+    * cos_r; every scored candidate: `__gp`, `__grp`, `__beam`, q_id,
+    * vec_id, cos_r) — the second frame's per-query row count IS the
+    * walk's cost in distance evaluations, the unit the cross-arm tuner
+    * compares on.
     */
   private[graft] def graphWalkGrid(s: SparkSession, base: DataFrame,
       adj: DataFrame, q: DataFrame, grid: Seq[(Int, Int)], hops: Int,
       finalK: Int = 3): (DataFrame, DataFrame) = {
     CosineSimilarity.ensureRegistered(s)
     def tag(b: Int, e: Int) = s"$b:$e"
-    def topN(scored: DataFrame, n: Column): DataFrame = {
+    def topN(scored: DataFrame, n: Int): DataFrame = {
       val w = Window.partitionBy(col("__gp"), col("__grp"), col("q_id"))
         .orderBy(col("cos_r").desc, col("vec_id"))
       scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= n)
@@ -810,14 +705,30 @@ object VectorOps {
         .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
         .select(col("__gp"), col("__grp"), col("__beam"), col("q_id"),
           col("vec_id"), col("cos_r"))
+    // the literal bound (the widest beam) lets Spark cut each window
+    // group before its shuffle (WindowGroupLimit), which a column bound
+    // alone does not; the per-point `__beam` cut stays exact
+    val maxBeam = grid.map(_._1).max
     def topBeam(scored: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("__gp"), col("__grp"), col("q_id"))
         .orderBy(col("cos_r").desc, col("vec_id"))
       scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= col("__beam"))
+        .filter(col("rn") <= maxBeam && col("rn") <= col("__beam"))
         .select(col("__gp"), col("__grp"), col("q_id"), col("vec_id"))
     }
-    // per-point entry sets, each the exact graphWalkGrouped expression
+    // entry points are part of the INDEX, disjoint from the query set
+    // (vec_id < 10): an entry that IS the query gets excluded from
+    // scoring, which silently left those queries with no entry in
+    // their own neighborhood (measured: recall 0.2 → healthy after).
+    // Candidates come from a deterministic HASH PREFILTER (expected
+    // ~4·entries ids per group) so the exact smallest-of pick sorts a
+    // bounded set — a bare per-group row_number window funneled each
+    // regime's whole id column through ONE task, a single-task
+    // corpus-sized sort on a path whose pitch is corpus-independence.
+    // The prefilter is id-determined (xxhash), so the entry SET is
+    // rerun-stable; tiny corpora (n ≲ 4·entries) keep everything. The
+    // modulus depends on `entries`, so each grid point computes its own
+    // set (one point's set is NOT a prefix of another's).
     val wE = Window.partitionBy(col("__grp")).orderBy(col("vec_id"))
     val entryByGp = grid.map { case (b, e) =>
       base.filter(col("vec_id") >= 10)
@@ -831,10 +742,20 @@ object VectorOps {
     }.reduce(_.unionByName(_))
     val entry = qAll.select(col("__gp"), col("__grp"), col("q_id"))
       .join(entryByGp, Seq("__gp", "__grp"))
-    // hop fusion: same lazy-intermediate / eager-final shape as
-    // graphWalkGrouped above
-    var scored = (if (hops == 0) walkCkpt(score(entry).coalesce(1))
-      else walkCkptLazy(score(entry).coalesce(1)))
+    // the per-hop state is grid·groups·queries·beam·degree rows —
+    // single-partition frames, so each hop's checkpoint schedules 1
+    // task per stage instead of shuffle.partitions of them (the walk's
+    // cost is job/task overhead, not data). coalesce(1), not
+    // repartition(1): the round-robin exchange per hop was one more
+    // shuffle stage (and AQE job) per checkpoint on frames whose row
+    // ORDER nothing depends on — every consumer re-sorts through a
+    // window (guide §2.4: remove shuffles outright).
+    // Hop fusion (round-18): intermediate states take LAZY local
+    // checkpoints; the LAST hop's eager checkpoint materializes the
+    // whole chain in one action (so build-vs-serve accounting is
+    // unchanged: the walk still fully computes inside whichever step
+    // runs it)
+    var scored = walkCkpt(score(entry).coalesce(1), eager = hops == 0)
     var beamDf = topBeam(scored)
     (1 to hops).foreach { h =>
       val expand = beamDf.select(col("__gp"), col("__grp"), col("q_id"),
@@ -847,10 +768,10 @@ object VectorOps {
         scored.select(col("__gp"), col("__grp"), col("q_id"), col("vec_id")),
         Seq("__gp", "__grp", "q_id", "vec_id"), "left_anti")
       val next = scored.unionByName(score(unseen)).coalesce(1)
-      scored = if (h == hops) walkCkpt(next) else walkCkptLazy(next)
+      scored = walkCkpt(next, eager = h == hops)
       beamDf = topBeam(scored)
     }
-    (topN(scored, lit(finalK)), scored)
+    (topN(scored, finalK), scored)
   }
 
   /** The two calibration regimes as ONE tagged (base, adj) pair,
@@ -899,13 +820,14 @@ object VectorOps {
       // per query each (measured: 8 hash-picked entries covered 6-7 of
       // the 8 synthetic clusters and clustered recall read 0.8; 24
       // restores 1.0)
-      val (topk, visited) = graphWalkGrouped(s, base, adj,
-        regimeQueries(base), beam = 8, hops = 4, entries = 24)
+      val (topk, visited) = graphWalkGrid(s, base, adj,
+        regimeQueries(base), Seq((8, 24)), hops = 4)
       Seq("clustered", "isotropic").map { regime =>
         (regime,
           base.filter(col("__grp") === regime).drop("__grp"),
-          topk.filter(col("__grp") === regime).drop("__grp"),
-          visited.filter(col("__grp") === regime).drop("__grp"))
+          topk.filter(col("__grp") === regime).drop("__gp", "__grp"),
+          visited.filter(col("__grp") === regime)
+            .drop("__gp", "__grp", "__beam"))
       }
     }
 
@@ -919,8 +841,9 @@ object VectorOps {
     * the unit every published recall-vs-cost ANN curve plots. All
     * grid walks re-use the ONE memoized (base, adj) pair; a grid
     * point costs queries·beam·degree·hops scored rows, never a
-    * corpus pass. Both regimes co-walk per grid point (the grouped
-    * kernel), so the whole grid is |GraphGrid| walks.
+    * corpus pass. Both regimes and every grid point co-walk in one
+    * `graphWalkGrid` call, so the whole grid is the production walk
+    * plus one grid walk.
     */
   val GraphGrid: Seq[(Int, Int)] = Seq((2, 4), (4, 8), (8, 24))
 
@@ -939,73 +862,41 @@ object VectorOps {
       }.toMap
       val nQ = exact3.map { case (r, set) =>
         r -> set.map(_._1).size.toDouble }
-      // Two independent chains (guide §2.6: overlap independent jobs):
-      // (a) the (8,24) point IS the production walk q210/q215 serve
-      // from — read the graphBeamRegimes memo instead of re-walking
-      // (round-17 dedup); (b) ALL remaining grid points co-walk in ONE
-      // grouped job chain (`graphWalkGrid` — round-18: the former
-      // per-point walks paid the full per-hop planning/scheduling bill
-      // once per point over identical adjacency). Per (regime, point):
-      // (top-3 pairs, visited count), exactly what the sequential form
-      // collected.
-      type PointRes = (Array[(String, (Long, Long))], Map[String, Long])
-      val restGrid = GraphGrid.filterNot { case (b, e) => b == 8 && e == 24 }
-      def tag(b: Int, e: Int) = s"$b:$e"
-      val prodPoint: () => Map[(Int, Int), PointRes] = () => {
-        val regs = graphBeamRegimes(s, d)
-        Map((8, 24) -> ((regs.toArray.flatMap { case (regime, _, topk, _) =>
-          topk.select(col("q_id"), col("vec_id")).collect()
-            .map(r => (regime, (r.getLong(0), r.getLong(1))))
-        }, regs.map { case (regime, _, _, vis) =>
-          regime -> vis.count()
-        }.toMap)))
-      }
-      val gridPoints: () => Map[(Int, Int), PointRes] = () =>
-        if (restGrid.isEmpty) Map.empty
-        else {
-          val (topk, scored) =
-            graphWalkGrid(s, base, adj, q, restGrid, hops = 4)
-          val gotAll = topk
-            .select(col("__gp"), col("__grp"), col("q_id"), col("vec_id"))
-            .collect()
-            .map(r => (r.getString(0),
-              (r.getString(1), (r.getLong(2), r.getLong(3)))))
-          val visAll = scored.groupBy(col("__gp"), col("__grp"))
-            .agg(count(lit(1)).as("nv")).collect()
-            .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-            .toMap
-          restGrid.map { case (b, e) =>
-            val t = tag(b, e)
-            (b, e) -> ((gotAll.filter(_._1 == t).map(_._2),
-              regimes.map(rg => rg -> visAll.getOrElse((t, rg), 0L)).toMap))
-          }.toMap
-        }
-      // dedicated 2-thread pool, not the global ForkJoinPool: callers
-      // of this memo are themselves .par (annArmTable, warmup), and
-      // threads blocked in collect() don't use ManagedBlocker, so
-      // nesting on the global pool can serialize the walks (round-17
-      // advice)
-      import scala.collection.parallel.CollectionConverters._
-      val pool = new java.util.concurrent.ForkJoinPool(2)
-      val byPoint: Map[(Int, Int), PointRes] =
-        try {
-          val pc = Seq(prodPoint, gridPoints).par
-          pc.tasksupport =
-            new scala.collection.parallel.ForkJoinTaskSupport(pool)
-          pc.map(_.apply()).seq.reduce(_ ++ _)
-        } finally pool.shutdown()
-      val rows = GraphGrid.map { case (beam, entries) =>
-        val (got, visited) = byPoint((beam, entries))
-        regimes.map { regime =>
-          val g = got.filter(_._1 == regime).map(_._2).toSet
-          val ex = exact3(regime)
-          regime -> GraphCal(beam, entries,
-            (g intersect ex).size.toDouble / ex.size,
-            visited.getOrElse(regime, 0L) / nQ(regime))
-        }
-      }
+      // Per ("beam:entries" tag, regime): the top-3 (q_id, vec_id)
+      // pairs and the visited count. The (8,24) point IS the production
+      // walk q210/q215 serve from — read the graphBeamRegimes memo
+      // instead of re-walking (round-17 dedup); ALL remaining grid
+      // points co-walk in ONE `graphWalkGrid` job chain (round-18: the
+      // former per-point walks paid the full per-hop
+      // planning/scheduling bill once per point over identical
+      // adjacency). Both run on the caller's thread: two concurrent
+      // walks' local checkpoints once deadlocked Spark's checkpoint
+      // bookkeeping inside one Verify run.
+      val prod = graphBeamRegimes(s, d)
+      val (topk, scored) = graphWalkGrid(s, base, adj, q,
+        GraphGrid.filterNot(_ == ((8, 24))), hops = 4)
+      val got = prod.map { case (regime, _, ptopk, _) =>
+        ("8:24", regime) -> ptopk.select(col("q_id"), col("vec_id"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      }.toMap ++ topk
+        .select(col("__gp"), col("__grp"), col("q_id"), col("vec_id"))
+        .collect()
+        .groupBy(r => (r.getString(0), r.getString(1)))
+        .map { case (k, rs) =>
+          k -> rs.map(r => (r.getLong(2), r.getLong(3))).toSet }
+      val visited = prod.map { case (regime, _, _, vis) =>
+        ("8:24", regime) -> vis.count()
+      }.toMap ++ scored.groupBy(col("__gp"), col("__grp"))
+        .agg(count(lit(1)).as("nv")).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
       regimes.map { regime =>
-        regime -> rows.map(_.toMap.apply(regime))
+        val ex = exact3(regime)
+        regime -> GraphGrid.map { case (beam, entries) =>
+          val key = (s"$beam:$entries", regime)
+          val g = got.getOrElse(key, Set.empty[(Long, Long)])
+          GraphCal(beam, entries, (g intersect ex).size.toDouble / ex.size,
+            visited.getOrElse(key, 0L) / nQ(regime))
+        }
       }.toMap
     }
 
@@ -1029,33 +920,25 @@ object VectorOps {
     * calibration query set) of the probed cells' member counts — the
     * rows the ADC stage actually scans per query, the IVF arm's
     * distance-evaluation count. Derived from the SERVED index's own
-    * cell assignment + the identical centroid-probe ranking
-    * `IvfPq.search` runs (cosine is scale-invariant, so the
+    * cell assignment + the centroid ranking `IvfPq.search` runs
+    * (`IvfPq.probe`, on the driver; cosine is scale-invariant, so the
     * un-normalized queries rank cells identically), so the table
-    * prices the real serving path. One |q|·kCells probe ranking +
-    * one kCells-row size agg — query-scale, collected once per
-    * (session, dir, regime).
+    * prices the real serving path. One query collect + one kCells-row
+    * size agg — query-scale, collected once per (session, dir, regime).
     */
   private def ivfProbeCost(s: SparkSession, d: String,
       regime: String): Map[Int, Double] =
     served(s, d, s"ivfcost_$regime") {
-      CosineSimilarity.ensureRegistered(s)
       val index = regimeIndex(s, d, regime)
-      val e = regimeCorpus(s, d, regime)
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+      val qs = regimeCorpus(s, d, regime).filter(col("vec_id") < 10)
+        .select(col("embedding")).collect()
+        .map(_.getSeq[Float](0).toArray)
       val sizes = index.cells.groupBy(col("cell"))
-        .agg(count(lit(1)).as("cn"))
-      val ranked = q.crossJoin(broadcast(index.centroids))
-        .withColumn("c_sim", expr("cosine_sim(q_emb, centroid)"))
-        .withColumn("crn", row_number().over(Window.partitionBy(col("q_id"))
-          .orderBy(col("c_sim").desc, col("cell"))))
-        .join(broadcast(sizes), Seq("cell"))
-        .select(col("q_id"), col("crn"), col("cn")).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-      val nq = ranked.map(_._1).distinct.length.toDouble
+        .agg(count(lit(1)).as("cn")).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
       ProbeGrid.map { p =>
-        p -> ranked.filter(_._2 <= p).map(_._3).sum / nq
+        p -> qs.map(q => graft.ext.IvfPq.probe(index, q, p)
+          .map(sizes.getOrElse(_, 0L)).sum).sum / qs.length.toDouble
       }.toMap
     }
 
@@ -1140,11 +1023,11 @@ object VectorOps {
         val (base, adj) = regimeAdj(s, d)
         val qg = queries.select(lit("isotropic").as("__grp"),
           col("q_id"), col("q_emb"))
-        val (topk, _) = graphWalkGrouped(s, base, adj, qg,
-          beam = pick.p1, hops = 4, entries = pick.p2, finalK = topK)
+        val (topk, _) = graphWalkGrid(s, base, adj, qg,
+          Seq((pick.p1, pick.p2)), hops = 4, finalK = topK)
         val w = Window.partitionBy(col("q_id"))
           .orderBy(col("cos_r").desc, col("vec_id"))
-        topk.drop("__grp")
+        topk.drop("__gp", "__grp")
           .withColumn("rn", row_number().over(w))
           .select(col("q_id"), col("vec_id"), col("cos_r"), col("rn"))
           .orderBy(col("q_id"), col("rn"))
@@ -1157,14 +1040,11 @@ object VectorOps {
     * ann_calibration / graph_adj steps' bills), so q232's row prices
     * reading the measured table + the pick, not building it.
     */
-  def warmAnnArms(s: SparkSession, d: String): Unit = {
-    import scala.collection.parallel.CollectionConverters._
-    // independent per-regime probe-cost collects (the graph grid memo
-    // is shared — the second caller blocks on the same key and reads
-    // the one build); concurrent for the §2.6 back-fill
-    Seq("isotropic", "clustered").par.foreach(annArmTable(s, d, _))
-    ()
-  }
+  def warmAnnArms(s: SparkSession, d: String): Unit =
+    // sequential: the first table builds the graph grid memo, whose
+    // walks take local checkpoints — a probe-cost job running beside
+    // them is the pattern that deadlocked Spark's checkpoint bookkeeping
+    Seq("isotropic", "clustered").foreach(annArmTable(s, d, _))
 
   /** q187's body over ANY (vec_id, embedding) frame — incremental
     * kNN-graph maintenance shared by the registered query and

@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ext.SnapshotLog
 import graft.queries.{TextOps, VectorOps}
@@ -12,9 +15,9 @@ import graft.queries.{TextOps, VectorOps}
   *    the merge-rewrite job as a lazy broadcast subtree (one action
   *    per EM round instead of two) — pinned against an INDEPENDENT
   *    pure-driver reference implementation of the identical algorithm.
-  *  - Graph-ANN calibration: the (2,4)/(4,8) grid points now co-walk
-  *    in ONE grouped job chain (`graphWalkGrid`) — pinned per point
-  *    against the single-point kernel (`graphWalkGrouped`).
+  *  - Graph-ANN calibration: every grid point co-walks in ONE grouped
+  *    job chain (`graphWalkGrid`, the only walk kernel) — pinned per
+  *    point against a reference single-point walk kept here.
   *  - Observed folds (segment stats, delete-vector counts, EM loss,
   *    label-propagation convergence): each site's fallback is forced
   *    through `Observed.suppress`, must bump that site's counter once
@@ -95,40 +98,106 @@ class Round18OptSpec extends SparkSpec {
 
   // == Graph calibration: grid co-walk == per-point single walks ==
 
+  /** Reference single walk: the per-point beam search `graphWalkGrid`
+    * replaced, kept here as the independent check of its per-point
+    * rows. Input `q` is (`__grp`, q_id, q_emb); returns (top-`finalK`:
+    * `__grp`, q_id, vec_id, cos_r; every scored candidate). Its local
+    * checkpoints are added to `pinned` for the caller to release.
+    */
+  private def referenceWalk(base: DataFrame, adj: DataFrame, q: DataFrame,
+      beam: Int, hops: Int, entries: Int, finalK: Int,
+      pinned: ArrayBuffer[DataFrame]): (DataFrame, DataFrame) = {
+    graft.functions.CosineSimilarity.ensureRegistered(spark)
+    def ckpt(df: DataFrame, eager: Boolean): DataFrame = {
+      val c = df.localCheckpoint(eager)
+      pinned += c
+      c
+    }
+    def topN(scored: DataFrame, n: Int): DataFrame = {
+      val w = Window.partitionBy(col("__grp"), col("q_id"))
+        .orderBy(col("cos_r").desc, col("vec_id"))
+      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= n)
+        .select(col("__grp"), col("q_id"), col("vec_id"), col("cos_r"))
+    }
+    val nAgg = base.groupBy(col("__grp")).agg(count(lit(1)).as("n"))
+    def score(cand: DataFrame): DataFrame =
+      cand.join(base, Seq("__grp", "vec_id"))
+        .join(broadcast(q), Seq("__grp", "q_id"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
+        .select(col("__grp"), col("q_id"), col("vec_id"), col("cos_r"))
+    val wE = Window.partitionBy(col("__grp")).orderBy(col("vec_id"))
+    val entryIds = base.filter(col("vec_id") >= 10)
+      .join(broadcast(nAgg), Seq("__grp"))
+      .filter(pmod(xxhash64(col("vec_id")),
+        greatest(lit(1L), (col("n") / lit(4L * entries)).cast("long"))) === 0L)
+      .select(col("__grp"), col("vec_id"))
+      .withColumn("rn", row_number().over(wE)).filter(col("rn") <= entries)
+      .drop("rn")
+    val entry = q.select(col("__grp"), col("q_id"))
+      .join(entryIds, Seq("__grp"))
+    var scored = ckpt(score(entry).coalesce(1), eager = hops == 0)
+    var beamDf = topN(scored, beam)
+    (1 to hops).foreach { h =>
+      val expand = beamDf.select(col("__grp"), col("q_id"),
+          col("vec_id").as("src"))
+        .join(adj, Seq("__grp", "src"))
+        .select(col("__grp"), col("q_id"), col("dst").as("vec_id"))
+        .distinct()
+      val unseen = expand.join(
+        scored.select(col("__grp"), col("q_id"), col("vec_id")),
+        Seq("__grp", "q_id", "vec_id"), "left_anti")
+      scored = ckpt(scored.unionByName(score(unseen)).coalesce(1),
+        eager = h == hops)
+      beamDf = topN(scored, beam)
+    }
+    (topN(scored, finalK), scored)
+  }
+
   test("graphWalkGrid reproduces each grid point's single walk exactly") {
+    val pinned = ArrayBuffer.empty[DataFrame]
     try {
       val (base, adj) = VectorOps.regimeAdj(spark, sfDir)
       val q = base.filter(col("vec_id") < 10)
         .select(col("__grp"), col("vec_id").as("q_id"),
           col("embedding").as("q_emb"))
-      val grid = Seq((2, 4), (4, 8))
-      val (mTopk, mScored) =
-        VectorOps.graphWalkGrid(spark, base, adj, q, grid, hops = 4)
-      val mTopkRows = mTopk.collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-          r.getLong(3), r.getDouble(4)))
-      val mVisited = mScored.groupBy(col("__gp"), col("__grp"))
-        .agg(count(lit(1)).as("nv")).collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      grid.foreach { case (b, e) =>
-        val tag = s"$b:$e"
-        val (sTopk, sScored) = VectorOps.graphWalkGrouped(
-          spark, base, adj, q, beam = b, hops = 4, entries = e)
-        val sRows = sTopk.collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-            r.getDouble(3))).toSet
-        val gRows = mTopkRows.filter(_._1 == tag)
-          .map { case (_, g, qi, v, c) => (g, qi, v, c) }.toSet
-        assert(gRows === sRows, s"top-k diverged at grid point ($b, $e)")
-        val sVisited = sScored.groupBy(col("__grp"))
+      // the calibration grid (incl. the production (8, 24) point) at
+      // the served depth, then a no-hop walk with a wider final cut
+      val grid = Seq((2, 4), (4, 8), (8, 24))
+      Seq((4, 3), (0, 5)).foreach { case (hops, finalK) =>
+        val (mTopk, mScored) = VectorOps.graphWalkGrid(spark, base, adj, q,
+          grid, hops = hops, finalK = finalK)
+        val mTopkRows = mTopk.collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2),
+            r.getLong(3), r.getDouble(4)))
+        val mVisited = mScored.groupBy(col("__gp"), col("__grp"))
           .agg(count(lit(1)).as("nv")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        sVisited.foreach { case (grp, nv) =>
-          assert(mVisited.getOrElse((tag, grp), 0L) === nv,
-            s"visited count diverged at ($b, $e) regime $grp")
+          .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+        grid.foreach { case (b, e) =>
+          val tag = s"$b:$e"
+          val at = s"($b, $e), hops $hops, finalK $finalK"
+          val (sTopk, sScored) = referenceWalk(base, adj, q, beam = b,
+            hops = hops, entries = e, finalK = finalK, pinned)
+          val sRows = sTopk.collect()
+            .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+              r.getDouble(3))).toSet
+          val gRows = mTopkRows.filter(_._1 == tag)
+            .map { case (_, g, qi, v, c) => (g, qi, v, c) }.toSet
+          assert(gRows.nonEmpty, s"no top-k rows at $at")
+          assert(gRows === sRows, s"top-k diverged at $at")
+          val sVisited = sScored.groupBy(col("__grp"))
+            .agg(count(lit(1)).as("nv")).collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+          sVisited.foreach { case (grp, nv) =>
+            assert(mVisited.getOrElse((tag, grp), 0L) === nv,
+              s"visited count diverged at $at regime $grp")
+          }
         }
       }
-    } finally VectorOps.releaseCaches()
+    } finally {
+      pinned.foreach(GraftEngine.unpinCheckpoints)
+      VectorOps.releaseCaches()
+    }
   }
 
   // == Observed fallbacks: forced at every site, counted, identical ==

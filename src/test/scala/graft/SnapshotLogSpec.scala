@@ -365,4 +365,22 @@ class SnapshotLogSpec extends SparkSpec {
       sorted(SnapshotLog.readAsOfKeys(spark, cow, ref, Seq("k"), keys)._1))
     assert(sorted(read) === rows.filterNot(_._1 % 3 == 0))
   }
+
+  test("optimize reads back its staged rewrite without a schema-inference job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("snaplog_opt_jobs").toString
+    SnapshotLog.reset(dir)
+    val rows = (0L until 64L).map(k => (k, (k * 7L) % 64L))
+    SnapshotLog.append(rows.take(32).toDF("k", "x"), dir, col("k"))
+    SnapshotLog.append(rows.drop(32).toDF("k", "x"), dir, col("k"))
+    val (v, jobs) = jobsOf(
+      SnapshotLog.optimize(spark, dir, col("k"), Seq(col("k"), col("x"))))
+    // the staged rewrite is read with its known schema from the listed
+    // bucket dirs — a schema-less read of the hidden staging dir ran
+    // one more (footer-inference) job per optimize
+    assert(jobs <= 7, s"optimize ran $jobs Spark jobs")
+    assert(SnapshotLog.meta(dir, v).opType === Some("optimize"))
+    assert(SnapshotLog.readAsOf(spark, dir, v).as[(Long, Long)].collect()
+      .sorted.toSeq === rows)
+  }
 }
