@@ -112,7 +112,7 @@ object PlansInternal {
     }
 
     section("Graph beam walks, both regimes (every executed action — " +
-      "per-hop states lazily checkpointed, one action per walk)") {
+      "two key-pruned fetches per hop, the beam search on the driver)") {
       graft.queries.VectorOps.releaseCaches()
       sink.clear()
       graft.queries.VectorOps.warmGraphWalks(spark, sfDir)

@@ -86,34 +86,21 @@ object IvfPq {
     def close(): Unit = pinned.getOrElse(cells).unpersist(blocking = false)
   }
 
-  /** L2-normalize the embedding column (norm materialized in its own
-    * projection — inlining it into the transform lambda would re-run
-    * the aggregate per element). The index serves COSINE: on unit
-    * vectors squared L2 = 2 - 2·cos, so the ADC shortlist's L2 order
-    * is monotone with the final cosine metric — without this, PQ's L2
-    * geometry and the cosine re-rank disagree and the shortlist cut
-    * silently costs recall (the standard normalize-before-PQ rule of
-    * cosine-metric IVF-PQ deployments). Cosine itself is scale
-    * invariant, so probing and re-ranking are unchanged.
+  /** (vec_id, cell, codes) of every vector in `vectors`, one compiled
+    * map over the rows that encodes each vector's `Quantizer.unit`
+    * form. The index serves COSINE: on unit vectors squared L2 =
+    * 2 - 2·cos, so the ADC shortlist's L2 order is monotone with the
+    * final cosine metric — without normalizing, PQ's L2 geometry and
+    * the cosine re-rank disagree and the shortlist cut silently costs
+    * recall (the standard normalize-before-PQ rule of cosine-metric
+    * IVF-PQ deployments). Cosine itself is scale invariant, so probing
+    * and re-ranking are unchanged.
     */
-  private[graft] def unitize(vectors: DataFrame): DataFrame =
-    vectors
-      .withColumn("_n", sqrt(aggregate(
-        transform(col("embedding"), x => x.cast("double") * x.cast("double")),
-        lit(0.0), (acc, x) => acc + x)))
-      .withColumn("embedding",
-        when(col("_n") === 0.0, col("embedding"))
-          .otherwise(transform(col("embedding"),
-            x => (x.cast("double") / col("_n")).cast("float"))))
-      .drop("_n")
-
-  /** (vec_id, cell, codes) of every unit vector in `unit`, one compiled
-    * map over the rows.
-    */
-  private def encodeUnit(q: Quantizers, unit: DataFrame): DataFrame = {
-    import unit.sparkSession.implicits._
-    unit.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .map { case (id, v) => val (cell, codes) = q.encode(v); (id, cell, codes) }
+  private def encodeUnit(q: Quantizers, vectors: DataFrame): DataFrame = {
+    import vectors.sparkSession.implicits._
+    vectors.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .map { case (id, v) =>
+        val (cell, codes) = q.encode(Quantizer.unit(v)); (id, cell, codes) }
       .toDF("vec_id", "cell", "codes")
   }
 
@@ -135,9 +122,11 @@ object IvfPq {
       kCells: Int = 16, m: Int = 8, kCodes: Int = 16,
       seed: Long = 42, residual: Boolean = true): Index = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val unit = unitize(embeddings)
-    val sampled = Quantizer.sample(unit,
+    // the sample's rank depends only on vec_id and the seed, so
+    // unitizing the sampled rows gives the sample of the unit corpus
+    val sampled = Quantizer.sample(embeddings,
       Quantizer.PointsPerCentroid * math.max(kCells, kCodes), seed)
+      .map { case (id, v) => (id, Quantizer.unit(v)) }
     // centroids are stored as float; encode against the stored values
     val cents = Quantizer.train(Quantizer.trainingSet(sampled, kCells),
       0, dim, kCells, seed).map(_.map(_.toFloat.toDouble))
@@ -147,7 +136,7 @@ object IvfPq {
     }
     val q = new Quantizers(cents,
       Quantizer.trainBooks(pqPoints, m, kCodes, dim / m, seed), m, kCodes, residual)
-    val cells = encodeUnit(q, unit)
+    val cells = encodeUnit(q, embeddings)
     cells.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cells.count()
     Index(Quantizer.centroidTable(spark, cents),
@@ -198,7 +187,7 @@ object IvfPq {
     * intermediate ever materializes, one pass per increment.
     */
   def encode(index: Index, vectors: DataFrame): DataFrame =
-    encodeUnit(index.quantizers, unitize(vectors))
+    encodeUnit(index.quantizers, vectors)
 
   /** A new Index whose serving table includes `newVectors`, encoded by
     * `encode` against the standing quantizers. On disk this is an
@@ -229,7 +218,7 @@ object IvfPq {
     * number, −0.0 = 0.0; `sign` −1 for descending), ties to the lower
     * id.
     */
-  private def byScore(sign: Int): Ordering[(Double, Long)] = (a, b) => {
+  private[graft] def byScore(sign: Int): Ordering[(Double, Long)] = (a, b) => {
     val c = sign * SQLOrderingUtil.compareDoubles(a._1, b._1)
     if (c != 0) c else java.lang.Long.compare(a._2, b._2)
   }
@@ -240,7 +229,7 @@ object IvfPq {
   /** The probe's `orderBy(c_sim.desc, cell)` and the re-rank's
     * `orderBy(cos_r.desc, vec_id)`.
     */
-  private val Descending = byScore(-1)
+  private[graft] val Descending = byScore(-1)
 
   /** The `cap` least (adc, vec_id) pairs offered, by `Ascending` — the
     * rows `row_number() <= cap` over `orderBy(adc, vec_id)` keeps.
@@ -292,7 +281,7 @@ object IvfPq {
     val qs = queries.select(col("q_id"), col("q_emb")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val q = index.quantizers
-    // 1. driver: queries normalize like the index did (see unitize), so
+    // 1. driver: queries normalize like the index did (see encodeUnit), so
     //    the ADC tables measure L2 in the geometry the codes were
     //    trained in; the re-rank scores the raw query
     val rank = Array.fill(qs.length)(new Array[Int](index.kCells))

@@ -1,8 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Product-quantization (PQ) index: split the d-dim embedding into `m`
   * contiguous subspaces, k-means each subspace independently (seeded),
@@ -22,18 +24,20 @@ import org.apache.spark.sql.functions._
   * cell) this is the standard IVF-PQ layout (`IvfPq`); here PQ is kept
   * orthogonal so each mechanism is provable on its own.
   *
-  * The search side is DataFrame-native: the ADC lookup is a
-  * higher-order `transform`/`aggregate` over the broadcast distance
-  * table — no UDF, no collect of the corpus.
+  * The search side builds each query's distance table on the driver
+  * (`Quantizer.adcTable`) and ships the tables as a local frame; the
+  * ADC lookup over the codes is a higher-order `transform`/`aggregate`
+  * — no UDF, no collect of the corpus.
   */
 object PqIndex {
 
   /** `codebooks`: (sub int, code int, centroid array<double> of
-    * subDim). `codes`: (vec_id long, codes array<int> of m) — persisted
+    * subDim), the stored form of `books` (row `sub·k + code`, on the
+    * driver). `codes`: (vec_id long, codes array<int> of m) — persisted
     * by `build`; call `close()` when the index is done serving.
     */
   final case class Index(codebooks: DataFrame, codes: DataFrame,
-      m: Int, k: Int, subDim: Int) {
+      books: Array[Array[Double]], m: Int, k: Int, subDim: Int) {
     def close(): Unit = codes.unpersist(blocking = false)
   }
 
@@ -57,39 +61,15 @@ object PqIndex {
     // callers release it via Index.close()
     codes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     codes.count()
-    Index(Quantizer.codebookTable(spark, books, k), codes, m, k, subDim)
-  }
-
-  /** Per-query ADC lookup table: one ordered array per q_id where
-    * dt[sub·k + code] = exact squared L2 between the query's q_emb
-    * sub-slice and that codebook centroid. Built by joining the
-    * m·k-row BROADCAST codebook against the (small) query set and
-    * collecting the slots back into one array column — the
-    * "asymmetric" half of ADC. (`IvfPq` builds the same slots on the
-    * driver: `Quantizer.adcTable`.)
-    */
-  private def distanceTable(codebooks: DataFrame, queries: DataFrame,
-      k: Int, subDim: Int): DataFrame = {
-    val subDist = queries
-      .crossJoin(broadcast(codebooks))
-      .withColumn("qsub", slice(col("q_emb"), col("sub") * subDim + 1,
-        lit(subDim)))
-      .withColumn("d2",
-        aggregate(zip_with(col("qsub"), col("centroid"),
-          (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
-          lit(0.0), (acc, x) => acc + x))
-      .select(col("q_id"), (col("sub") * k + col("code")).as("slot"), col("d2"))
-    // one ordered array per query: dt[slot] = d2  (slot is 0-based)
-    subDist
-      .groupBy(col("q_id"))
-      .agg(array_sort(collect_list(struct(col("slot"), col("d2")))).as("pairs"))
-      .select(col("q_id"), transform(col("pairs"), p => p("d2")).as("dt"))
+    Index(Quantizer.codebookTable(spark, books, k), codes, books, m, k, subDim)
   }
 
   /** Approximate top-k by ADC. `queries`: (q_id long, q_emb
-    * array<float>). The per-query distance table is built by joining
-    * the m·k-row broadcast codebook against the (small) query set and
-    * collecting it back into ONE array column ordered by sub·k+code,
+    * array<float>), one row per q_id. The query batch is collected and
+    * each query's m·k distance table — dt[sub·k + code] = exact squared
+    * L2 between its sub-slice and that codebook centroid, the
+    * "asymmetric" half of ADC — is built on the driver
+    * (`Quantizer.adcTable`) and broadcast as a local (q_id, dt) frame,
     * so the candidate scan does pure array math per row: approximate
     * squared L2 = Σ_s dt[s·k + codes[s]].
     *
@@ -101,7 +81,13 @@ object PqIndex {
   def search(index: Index, queries: DataFrame, topK: Int = 5,
       excludeSelf: Boolean = true): DataFrame = {
     val k = index.k
-    val dt = distanceTable(index.codebooks, queries, k, index.subDim)
+    val spark = queries.sparkSession
+    val dt = spark.createDataFrame(
+      queries.select(col("q_id"), col("q_emb")).collect().toSeq.map(r =>
+        Row(r.getLong(0), Quantizer.adcTable(r.getSeq[Float](1).toArray,
+          index.books, index.m, k).toSeq)).asJava,
+      StructType(Seq(StructField("q_id", LongType),
+        StructField("dt", ArrayType(DoubleType)))))
     // candidate scan: codes only, query table broadcast
     index.codes.crossJoin(broadcast(dt))
       .filter(if (excludeSelf) col("q_id") =!= col("vec_id") else lit(true))

@@ -165,7 +165,7 @@ object Quantizer {
 
   /** One codebook of k centroids per subspace, subspace s trained with
     * seed + s; row `s·k + code` of the result is that code's centroid
-    * (the `sub·k + code` slot order of `PqIndex.distanceTable`).
+    * (the `sub·k + code` slot order of `adcTable`).
     */
   def trainBooks(points: Array[Array[Float]], m: Int, k: Int, subDim: Int,
       seed: Long): Array[Array[Double]] =
@@ -191,7 +191,7 @@ object Quantizer {
 
   /** `v` scaled to unit L2 norm: the norm is the double sum of squares,
     * each element `(x / n).toFloat`, and a zero vector (n = 0) is left
-    * as it is — `IvfPq.unitize`'s rules for one driver-side vector.
+    * as it is. `IvfPq` encodes and probes with this form.
     */
   def unit(v: Array[Float]): Array[Float] = {
     var ss = 0.0

@@ -62,9 +62,7 @@ object VectorOps {
       case df: DataFrame => df.unpersist(blocking = false) // knn graph
       case _ => () // AnnIndex pins no cache; gbeam walks release below
     }
-    // every checkpoint the graph walks made (input frames, adjacency,
-    // per-hop scored states — the returned frames reference only the
-    // LAST of these, so walking their plans would miss the rest)
+    // every checkpoint the graph adjacency builds made (base and adj)
     walkPinned.synchronized {
       walkPinned.foreach(graft.GraftEngine.unpinCheckpoints)
       walkPinned.clear()
@@ -527,23 +525,23 @@ object VectorOps {
     * serving family beside bucketed LSH (q51) and IVF-PQ (q133):
     * navigable-graph engines (HNSW, NSG) answer queries by walking
     * neighbor links toward the query instead of probing partitions.
-    * Spark-first shape: the q183 top-3 graph symmetrizes into an
-    * adjacency list ONCE (graph construction is the indexing cost, as
-    * in HNSW), then each query walks it in `hops` driver-coordinated
-    * rounds — frontier ⋈ adjacency (expand), anti-join vs the visited
-    * set (never re-score), broadcast-query cosine scoring of the new
-    * candidates only, and a top-`beam` re-select over everything seen
-    * (best-first, 6dp-rounded cosine + vec_id ties, so the walk is
-    * deterministic and rerun-identical). Entry points are the
+    * Shape: the q183 top-3 graph symmetrizes into an adjacency list
+    * ONCE in Spark (graph construction is the indexing cost, as in
+    * HNSW), then each query walks it in `hops` rounds on the driver —
+    * fetch the beam's adjacency rows (expand), skip what was already
+    * scored (never re-score), cosine-score the new candidates only,
+    * and re-select the top `beam` over everything seen (best-first,
+    * 6dp-rounded cosine + vec_id ties, so the walk is deterministic
+    * and rerun-identical). Entry points are the
     * `entries` smallest vec_ids — fixed and oracle-portable, the
     * single-layer stand-in for HNSW's hierarchy. Candidates scored
     * per query are ≤ entries + hops·beam·degree — independent of the
     * corpus size, the property that makes graph ANN serve at 100 TB:
-    * the walk touches O(beam·hops) adjacency rows (a key-pruned join
-    * against the a_id-bucketed persisted graph), never a partition
-    * scan. Returns (top-3 per query, every scored candidate) — the
-    * second frame is the honest visited-count audit Round19OpsSpec
-    * pins ≪ corpus.
+    * the walk fetches O(beam·hops) adjacency rows (a key filter on
+    * the checkpointed graph) and only their neighbors' embeddings.
+    * Returns (top-3 per query, every scored candidate) — the second
+    * frame is the honest visited-count audit Round19OpsSpec pins
+    * ≪ corpus.
     */
   private[graft] def graphBeamSearch(s: SparkSession, e0: DataFrame,
       beam: Int = 8, hops: Int = 4, entries: Int = 8,
@@ -552,28 +550,20 @@ object VectorOps {
       e0.select(lit(0).as("__grp"), col("vec_id"), col("embedding")), degree)
     val (topk, scored) = graphWalkGrid(s, base, adj, regimeQueries(base),
       Seq((beam, entries)), hops)
-    (topk.drop("__gp", "__grp"), scored.drop("__gp", "__grp", "__beam"))
+    (topk.drop("__gp", "__grp"), scored.drop("__gp", "__grp"))
   }
 
-  /** Checkpoints made by the graph walks, tracked for explicit release
-    * (`releaseCaches`): the walk's RESULT frames reference only the
-    * final scored checkpoint, so the adjacency and per-hop
-    * intermediates would otherwise linger until GC.
+  /** Checkpoints of the graph adjacency builds (base and adj), tracked
+    * for explicit release (`releaseCaches`): no walk result references
+    * them, so they would otherwise linger until GC.
     */
   private val walkPinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
 
-  /** Local checkpoint of a walk frame, tracked in `walkPinned`. A LAZY
-    * one (`eager = false`, round-18 hop fusion) still truncates lineage
-    * at a LogicalRDD leaf (per-hop plans stay shallow — the reason the
-    * walk checkpoints at all), but submits no job: the chain
-    * materializes inside the FIRST action that consumes it — the final
-    * hop's EAGER checkpoint — so a 4-hop walk runs as one submitted
-    * action instead of five. Intermediates cache when computed (the
-    * lazy-checkpoint contract), so beam windows re-reading earlier
-    * states never recompute them.
+  /** Eager local checkpoint of an adjacency-build frame, tracked in
+    * `walkPinned`.
     */
-  private def walkCkpt(df: DataFrame, eager: Boolean): DataFrame = {
-    val c = df.localCheckpoint(eager)
+  private def walkCkpt(df: DataFrame): DataFrame = {
+    val c = df.localCheckpoint()
     walkPinned.synchronized { walkPinned += c }
     c
   }
@@ -581,8 +571,8 @@ object VectorOps {
   /** Adjacency half: builds the navigable-small-world edge list for
     * every `__grp` corpus in `eg` and returns (base, adj) — both
     * checkpointed (base because three family joins, the entry select
-    * and every hop's score() re-read it; adj because every hop
-    * expands against it). The walk half re-walks these at ANY
+    * and every hop's embedding fetch re-read it; adj because every hop
+    * fetches from it). The walk half re-walks these at ANY
     * (beam, entries) without re-paying this corpus-sized build — the
     * graph-arm calibration grid (q232) depends on that split.
     */
@@ -602,11 +592,12 @@ object VectorOps {
     // ≤ 3·degree.
     //
     // The input frame materializes ONCE: it feeds three family joins,
-    // the entry select and a score() per hop — q210's clustered regime
-    // synthesizes embeddings from 64 md5 draws per row, and re-deriving
-    // that in every consumer was 6× the 10× row (53 s → 8.5 s).
+    // the entry select and an embedding fetch per hop — q210's
+    // clustered regime synthesizes embeddings from 64 md5 draws per
+    // row, and re-deriving that in every consumer was 6× the 10× row
+    // (53 s → 8.5 s).
     val base = walkCkpt(
-      eg.select(col("__grp"), col("vec_id"), col("embedding")), eager = true)
+      eg.select(col("__grp"), col("vec_id"), col("embedding")))
     val nAgg = base.groupBy(col("__grp")).agg(count(lit(1)).as("n"))
     // CLUSTERED corpora concentrate whole clusters into a few sign
     // buckets (the point of LSH — and a quadratic trap for the
@@ -654,28 +645,37 @@ object VectorOps {
           col("b_id").as("dst"))
         .union(edges.select(col("__grp"), col("b_id").as("src"),
           col("a_id").as("dst")))
-        .distinct(), eager = true)
+        .distinct())
     (base, adj)
   }
 
-  /** Walk half, the ONE graph-walk kernel: beam search over a prebuilt
-    * (base, adj) pair for an arbitrary query frame `q` (`__grp`, q_id,
-    * q_emb) at every (beam, entries) point of `grid`. The group tags on
-    * `q` decide which corpora walk (joins key on `__grp`, so groups
-    * with no queries cost nothing), and every grid point's beam state
-    * co-walks in the SAME Spark jobs over the same adjacency — the
-    * `__grp` co-walking trick applied a second time, on the GRID axis
-    * (guide §2.4; round-17 verdict item 4: the calibration's (2,4) and
-    * (4,8) walks were two full per-hop job chains over identical
-    * adjacency). A single walk is the one-point grid `Seq((beam,
-    * entries))`. State rows carry a `__gp` tag ("beam:entries") plus
-    * the point's `__beam`; every window, dedup and anti-join is scoped
-    * by (`__gp`, `__grp`, q_id), so a point's rows do not depend on
-    * which other points share the walk (Round18OptSpec pins each point
-    * against a reference single walk). Self-matches (vec_id = q_id)
-    * always exclude, as in every serving arm's calibration. Returns
-    * (top-`finalK` per point and query: `__gp`, `__grp`, q_id, vec_id,
-    * cos_r; every scored candidate: `__gp`, `__grp`, `__beam`, q_id,
+  /** Walk half, the ONE graph-walk kernel: best-first beam search over
+    * a prebuilt (base, adj) pair for a query frame `q` (`__grp`, q_id,
+    * q_emb; one row per (`__grp`, q_id)) at every (beam, entries) point
+    * of `grid`, run on the driver. Every (point, group, query) walk
+    * keeps the candidates it scored as vec_id → cos_r; its beam is the
+    * top `beam` of them by (cos_r desc, vec_id) in Spark's sort order
+    * (`IvfPq.Descending`: NaN first — a zero vector scores NaN — and
+    * −0.0 = 0.0). Each hop fetches, for all walks at once, the
+    * adjacency rows of the beams' union and the embeddings of the
+    * neighbors some walk has not scored yet, and scores them with the
+    * 6dp-rounded cosine. A candidate is scored once per walk, and
+    * self-matches (vec_id = q_id) never score, as in every serving
+    * arm's calibration. Walks never read each other's state, so a
+    * point's rows do not depend on which other points share the call
+    * (Round18OptSpec pins each point against a reference Spark walk).
+    * Spark work: the query collect (none for a local frame), one entry
+    * query for every `entries` of the grid, and two key-pruned fetches
+    * per hop, whatever the grid.
+    *
+    * Scale contract: the driver holds one (vec_id, cos_r) pair per
+    * scored candidate per walk — exactly the returned `scored` frame,
+    * whose size the walk already reports as its cost — plus one hop's
+    * fetched neighbor embeddings, dropped after that hop. The corpus
+    * and the adjacency never reach the driver.
+    *
+    * Returns local frames (top-`finalK` per point and query; every
+    * scored candidate), both (`__gp` "beam:entries", `__grp`, q_id,
     * vec_id, cos_r) — the second frame's per-query row count IS the
     * walk's cost in distance evaluations, the unit the cross-arm tuner
     * compares on.
@@ -683,95 +683,96 @@ object VectorOps {
   private[graft] def graphWalkGrid(s: SparkSession, base: DataFrame,
       adj: DataFrame, q: DataFrame, grid: Seq[(Int, Int)], hops: Int,
       finalK: Int = 3): (DataFrame, DataFrame) = {
-    CosineSimilarity.ensureRegistered(s)
-    def tag(b: Int, e: Int) = s"$b:$e"
-    def topN(scored: DataFrame, n: Int): DataFrame = {
-      val w = Window.partitionBy(col("__gp"), col("__grp"), col("q_id"))
-        .orderBy(col("cos_r").desc, col("vec_id"))
-      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= n)
-        .select(col("__gp"), col("__grp"), col("q_id"), col("vec_id"),
-          col("cos_r"))
-    }
-    val nAgg = base.groupBy(col("__grp")).agg(count(lit(1)).as("n"))
-    // queries replicated per grid point, carrying the point's beam so
-    // the per-hop cut can filter on a column instead of a constant
-    val qAll = grid.map { case (b, e) =>
-      q.withColumn("__gp", lit(tag(b, e))).withColumn("__beam", lit(b))
-    }.reduce(_.unionByName(_))
-    def score(cand: DataFrame): DataFrame =
-      cand.join(base, Seq("__grp", "vec_id"))
-        .join(broadcast(qAll), Seq("__gp", "__grp", "q_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
-        .select(col("__gp"), col("__grp"), col("__beam"), col("q_id"),
-          col("vec_id"), col("cos_r"))
-    // the literal bound (the widest beam) lets Spark cut each window
-    // group before its shuffle (WindowGroupLimit), which a column bound
-    // alone does not; the per-point `__beam` cut stays exact
-    val maxBeam = grid.map(_._1).max
-    def topBeam(scored: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("__gp"), col("__grp"), col("q_id"))
-        .orderBy(col("cos_r").desc, col("vec_id"))
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= maxBeam && col("rn") <= col("__beam"))
-        .select(col("__gp"), col("__grp"), col("q_id"), col("vec_id"))
-    }
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val grpField = q.schema("__grp")
+    val qs = q.select(col("__grp"), col("q_id"), col("q_emb")).collect()
+      .map(r => (r.get(0), r.getLong(1), r.getSeq[Float](2).toArray))
+    val groups = qs.map(_._1).distinct.toSeq
+    // the rows of `df` whose (`__grp`, `key`) is in `ids`, by one key
+    // filter per group (an IN set), in one job — a broadcast join
+    // against a local frame of the keys would add a job to collect it
+    def fetch(df: DataFrame, key: String, ids: Seq[(Any, Long)],
+        cols: String*): Array[Row] =
+      if (ids.isEmpty) Array.empty
+      else df.filter(ids.groupBy(_._1).map { case (g, gi) =>
+          col("__grp") === lit(g) && col(key).isin(gi.map(_._2): _*) }
+          .reduce(_ || _))
+        .select(("__grp" +: key +: cols).map(col): _*).collect()
     // entry points are part of the INDEX, disjoint from the query set
     // (vec_id < 10): an entry that IS the query gets excluded from
     // scoring, which silently left those queries with no entry in
     // their own neighborhood (measured: recall 0.2 → healthy after).
     // Candidates come from a deterministic HASH PREFILTER (expected
-    // ~4·entries ids per group) so the exact smallest-of pick sorts a
-    // bounded set — a bare per-group row_number window funneled each
-    // regime's whole id column through ONE task, a single-task
-    // corpus-sized sort on a path whose pitch is corpus-independence.
-    // The prefilter is id-determined (xxhash), so the entry SET is
+    // ~4·entries ids per group), so the smallest-`entries` pick below
+    // sorts a bounded set, never a corpus-sized id column. The
+    // prefilter is id-determined (xxhash), so the entry SET is
     // rerun-stable; tiny corpora (n ≲ 4·entries) keep everything. The
-    // modulus depends on `entries`, so each grid point computes its own
-    // set (one point's set is NOT a prefix of another's).
-    val wE = Window.partitionBy(col("__grp")).orderBy(col("vec_id"))
-    val entryByGp = grid.map { case (b, e) =>
-      base.filter(col("vec_id") >= 10)
+    // modulus depends on `entries`, so each value has its own set (one
+    // set is NOT a prefix of another's); one query covers them all.
+    val es = grid.map(_._2).distinct
+    val inQ = base.filter(col("__grp").isin(groups: _*))
+    val nAgg = inQ.groupBy(col("__grp")).agg(count(lit(1)).as("n"))
+    val hit = es.map(e => pmod(xxhash64(col("vec_id")),
+      greatest(lit(1L), (col("n") / lit(4L * e)).cast("long"))) === 0L)
+    val cands =
+      if (groups.isEmpty) Array.empty[Row]
+      else inQ.filter(col("vec_id") >= 10)
         .join(broadcast(nAgg), Seq("__grp"))
-        .filter(pmod(xxhash64(col("vec_id")),
-          greatest(lit(1L), (col("n") / lit(4L * e)).cast("long"))) === 0L)
-        .select(col("__grp"), col("vec_id"))
-        .withColumn("rn", row_number().over(wE)).filter(col("rn") <= e)
-        .drop("rn")
-        .withColumn("__gp", lit(tag(b, e)))
-    }.reduce(_.unionByName(_))
-    val entry = qAll.select(col("__gp"), col("__grp"), col("q_id"))
-      .join(entryByGp, Seq("__gp", "__grp"))
-    // the per-hop state is grid·groups·queries·beam·degree rows —
-    // single-partition frames, so each hop's checkpoint schedules 1
-    // task per stage instead of shuffle.partitions of them (the walk's
-    // cost is job/task overhead, not data). coalesce(1), not
-    // repartition(1): the round-robin exchange per hop was one more
-    // shuffle stage (and AQE job) per checkpoint on frames whose row
-    // ORDER nothing depends on — every consumer re-sorts through a
-    // window (guide §2.4: remove shuffles outright).
-    // Hop fusion (round-18): intermediate states take LAZY local
-    // checkpoints; the LAST hop's eager checkpoint materializes the
-    // whole chain in one action (so build-vs-serve accounting is
-    // unchanged: the walk still fully computes inside whichever step
-    // runs it)
-    var scored = walkCkpt(score(entry).coalesce(1), eager = hops == 0)
-    var beamDf = topBeam(scored)
-    (1 to hops).foreach { h =>
-      val expand = beamDf.select(col("__gp"), col("__grp"), col("q_id"),
-          col("vec_id").as("src"))
-        .join(adj, Seq("__grp", "src"))
-        .select(col("__gp"), col("__grp"), col("q_id"),
-          col("dst").as("vec_id"))
-        .distinct()
-      val unseen = expand.join(
-        scored.select(col("__gp"), col("__grp"), col("q_id"), col("vec_id")),
-        Seq("__gp", "__grp", "q_id", "vec_id"), "left_anti")
-      val next = scored.unionByName(score(unseen)).coalesce(1)
-      scored = walkCkpt(next, eager = h == hops)
-      beamDf = topBeam(scored)
+        .filter(hit.reduce(_ || _))
+        .select(col("__grp"), col("vec_id"), col("embedding"),
+          array(hit: _*).as("hit"))
+        .collect()
+    val entryOf = es.zipWithIndex.map { case (e, i) =>
+      e -> cands.filter(_.getSeq[Boolean](3)(i)).groupBy(_.get(0))
+        .map { case (g, rs) => g -> rs.sortBy(_.getLong(1)).take(e)
+          .map(r => (r.getLong(1), r.getSeq[Float](2).toArray)) }
+    }.toMap
+    final class Walk(val gp: String, val beam: Int, val grp: Any,
+        val qId: Long, qEmb: Array[Float]) {
+      val scored = scala.collection.mutable.HashMap.empty[Long, Double]
+      def offer(id: Long, emb: Array[Float]): Unit =
+        if (id != qId && !scored.contains(id))
+          scored(id) = graft.ext.Quantizer.round(
+            CosineSimilarity.cosine(qEmb, emb), 6)
+      def ranked: Seq[(Double, Long)] = scored.toSeq.map(_.swap)
+        .sorted(graft.ext.IvfPq.Descending)
     }
-    (topN(scored, finalK), scored)
+    val walks = for {
+      (b, e) <- grid
+      (g, qId, qEmb) <- qs.toSeq
+    } yield {
+      val w = new Walk(s"$b:$e", b, g, qId, qEmb)
+      entryOf(e).getOrElse(g, Array.empty[(Long, Array[Float])])
+        .foreach { case (id, emb) => w.offer(id, emb) }
+      w
+    }
+    (1 to hops).foreach { _ =>
+      val beams = walks.map(w => w -> w.ranked.take(w.beam).map(_._2))
+      val nbrs = fetch(adj, "src",
+        beams.flatMap { case (w, ids) => ids.map((w.grp, _)) }.distinct,
+        "dst").groupBy(r => (r.get(0), r.getLong(1)))
+        .map { case (k, rs) => k -> rs.map(_.getLong(2)) }
+      val unseen = beams.map { case (w, ids) =>
+        w -> ids.flatMap(id => nbrs.getOrElse((w.grp, id), Array.empty[Long]))
+          .distinct.filter(v => v != w.qId && !w.scored.contains(v))
+      }
+      val emb = fetch(base, "vec_id",
+        unseen.flatMap { case (w, ids) => ids.map((w.grp, _)) }.distinct,
+        "embedding").map(r => (r.get(0), r.getLong(1)) ->
+          r.getSeq[Float](2).toArray).toMap
+      unseen.foreach { case (w, ids) =>
+        ids.foreach(v => emb.get((w.grp, v)).foreach(w.offer(v, _)))
+      }
+    }
+    val schema = StructType(Seq(StructField("__gp", StringType), grpField,
+      StructField("q_id", LongType), StructField("vec_id", LongType),
+      StructField("cos_r", DoubleType)))
+    val rows = walks.map(w =>
+      w.ranked.map { case (c, v) => Row(w.gp, w.grp, w.qId, v, c) })
+    (s.createDataFrame(rows.flatMap(_.take(finalK)).asJava, schema),
+      s.createDataFrame(rows.flatten.asJava, schema))
   }
 
   /** The two calibration regimes as ONE tagged (base, adj) pair,
@@ -826,8 +827,7 @@ object VectorOps {
         (regime,
           base.filter(col("__grp") === regime).drop("__grp"),
           topk.filter(col("__grp") === regime).drop("__gp", "__grp"),
-          visited.filter(col("__grp") === regime)
-            .drop("__gp", "__grp", "__beam"))
+          visited.filter(col("__grp") === regime).drop("__gp", "__grp"))
       }
     }
 
@@ -841,9 +841,8 @@ object VectorOps {
     * the unit every published recall-vs-cost ANN curve plots. All
     * grid walks re-use the ONE memoized (base, adj) pair; a grid
     * point costs queries·beam·degree·hops scored rows, never a
-    * corpus pass. Both regimes and every grid point co-walk in one
-    * `graphWalkGrid` call, so the whole grid is the production walk
-    * plus one grid walk.
+    * corpus pass. Both regimes and every grid point walk in one
+    * `graphWalkGrid` call.
     */
   val GraphGrid: Seq[(Int, Int)] = Seq((2, 4), (4, 8), (8, 24))
 
@@ -863,32 +862,15 @@ object VectorOps {
       val nQ = exact3.map { case (r, set) =>
         r -> set.map(_._1).size.toDouble }
       // Per ("beam:entries" tag, regime): the top-3 (q_id, vec_id)
-      // pairs and the visited count. The (8,24) point IS the production
-      // walk q210/q215 serve from — read the graphBeamRegimes memo
-      // instead of re-walking (round-17 dedup); ALL remaining grid
-      // points co-walk in ONE `graphWalkGrid` job chain (round-18: the
-      // former per-point walks paid the full per-hop
-      // planning/scheduling bill once per point over identical
-      // adjacency). Both run on the caller's thread: two concurrent
-      // walks' local checkpoints once deadlocked Spark's checkpoint
-      // bookkeeping inside one Verify run.
-      val prod = graphBeamRegimes(s, d)
-      val (topk, scored) = graphWalkGrid(s, base, adj, q,
-        GraphGrid.filterNot(_ == ((8, 24))), hops = 4)
-      val got = prod.map { case (regime, _, ptopk, _) =>
-        ("8:24", regime) -> ptopk.select(col("q_id"), col("vec_id"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      }.toMap ++ topk
-        .select(col("__gp"), col("__grp"), col("q_id"), col("vec_id"))
-        .collect()
-        .groupBy(r => (r.getString(0), r.getString(1)))
-        .map { case (k, rs) =>
-          k -> rs.map(r => (r.getLong(2), r.getLong(3))).toSet }
-      val visited = prod.map { case (regime, _, _, vis) =>
-        ("8:24", regime) -> vis.count()
-      }.toMap ++ scored.groupBy(col("__gp"), col("__grp"))
-        .agg(count(lit(1)).as("nv")).collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
+      // pairs and the visited count, read off the walk's local frames
+      val (topk, scored) = graphWalkGrid(s, base, adj, q, GraphGrid, hops = 4)
+      def byPoint(df: DataFrame) =
+        df.select(col("__gp"), col("__grp"), col("q_id"), col("vec_id"))
+          .collect().groupBy(r => (r.getString(0), r.getString(1)))
+      val got = byPoint(topk).map { case (k, rs) =>
+        k -> rs.map(r => (r.getLong(2), r.getLong(3))).toSet }
+      val visited = byPoint(scored).map { case (k, rs) =>
+        k -> rs.length.toLong }
       regimes.map { regime =>
         val ex = exact3(regime)
         regime -> GraphGrid.map { case (beam, entries) =>
@@ -1041,9 +1023,8 @@ object VectorOps {
     * reading the measured table + the pick, not building it.
     */
   def warmAnnArms(s: SparkSession, d: String): Unit =
-    // sequential: the first table builds the graph grid memo, whose
-    // walks take local checkpoints — a probe-cost job running beside
-    // them is the pattern that deadlocked Spark's checkpoint bookkeeping
+    // sequential: the first table builds the graph calibration memo of
+    // both regimes, which the second only reads
     Seq("isotropic", "clustered").foreach(annArmTable(s, d, _))
 
   /** q187's body over ANY (vec_id, embedding) frame — incremental

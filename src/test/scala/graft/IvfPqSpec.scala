@@ -213,6 +213,22 @@ class IvfPqSpec extends SparkSpec {
       .map(r => r.getLong(0) -> (r.getInt(1),
         r.getAs[scala.collection.Seq[Int]](2).toList)).toMap
 
+  /** The Spark-expression L2 normalization the compiled encode and the
+    * driver-side search replaced (`Quantizer.unit`), kept as the
+    * references' own copy: the norm in its own projection, a zero
+    * vector left as it is.
+    */
+  private def unitize(vectors: DataFrame): DataFrame =
+    vectors
+      .withColumn("_n", sqrt(aggregate(
+        transform(col("embedding"), x => x.cast("double") * x.cast("double")),
+        lit(0.0), (acc, x) => acc + x)))
+      .withColumn("embedding",
+        when(col("_n") === 0.0, col("embedding"))
+          .otherwise(transform(col("embedding"),
+            x => (x.cast("double") / col("_n")).cast("float"))))
+      .drop("_n")
+
   /** The higher-order-function encode the compiled kernel replaced,
     * kept as its reference: argmins as `array_min` over struct(d2, id)
     * on broadcast 1-row arrays of the stored centroids and codebooks.
@@ -229,7 +245,7 @@ class IvfPqSpec extends SparkSpec {
       zip_with(a, b, (x, c) => (x.cast("double") - c.cast("double"))
         * (x.cast("double") - c.cast("double"))),
       lit(0.0), (acc, x) => acc + x)
-    IvfPq.unitize(vectors)
+    unitize(vectors)
       .crossJoin(broadcast(centArr))
       .withColumn("cell", array_min(transform(col("carr"),
         c => struct(d2(col("embedding"), c.getField("centroid")).as("d2"),
@@ -311,7 +327,7 @@ class IvfPqSpec extends SparkSpec {
     val k = index.kCodes
     val subDim = index.subDim
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-    val qUnit = IvfPq.unitize(queries.withColumnRenamed("q_emb", "embedding"))
+    val qUnit = unitize(queries.withColumnRenamed("q_emb", "embedding"))
       .withColumnRenamed("embedding", "q_emb")
     val qCells = qUnit
       .crossJoin(broadcast(index.centroids))

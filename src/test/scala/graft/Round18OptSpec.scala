@@ -15,9 +15,10 @@ import graft.queries.{TextOps, VectorOps}
   *    the merge-rewrite job as a lazy broadcast subtree (one action
   *    per EM round instead of two) — pinned against an INDEPENDENT
   *    pure-driver reference implementation of the identical algorithm.
-  *  - Graph-ANN calibration: every grid point co-walks in ONE grouped
-  *    job chain (`graphWalkGrid`, the only walk kernel) — pinned per
-  *    point against a reference single-point walk kept here.
+  *  - Graph-ANN calibration: every grid point walks in ONE
+  *    `graphWalkGrid` call (the only walk kernel, a driver beam search)
+  *    — pinned per point against a reference single-point Spark walk
+  *    kept here, and bounded in Spark jobs.
   *  - Observed folds (segment stats, delete-vector counts, EM loss,
   *    label-propagation convergence): each site's fallback is forced
   *    through `Observed.suppress`, must bump that site's counter once
@@ -96,7 +97,7 @@ class Round18OptSpec extends SparkSpec {
     } finally TextOps.releaseCaches()
   }
 
-  // == Graph calibration: grid co-walk == per-point single walks ==
+  // == Graph calibration: grid walk == per-point single walks ==
 
   /** Reference single walk: the per-point beam search `graphWalkGrid`
     * replaced, kept here as the independent check of its per-point
@@ -164,8 +165,25 @@ class Round18OptSpec extends SparkSpec {
       // the calibration grid (incl. the production (8, 24) point) at
       // the served depth, then a no-hop walk with a wider final cut
       val grid = Seq((2, 4), (4, 8), (8, 24))
-      Seq((4, 3), (0, 5)).foreach { case (hops, finalK) =>
-        val (mTopk, mScored) = VectorOps.graphWalkGrid(spark, base, adj, q,
+      // external queries whose ids (>= 10) ARE entry ids, as a caller's
+      // id space can collide with the corpus's (annTopKArm): each is the
+      // corpus vector of the entry it collides with, so a self-match the
+      // walk failed to exclude would score 1.0. Entry ids are read off
+      // the reference's no-hop walks (their scored rows are the entries)
+      val entryIds = grid.map { case (b, e) =>
+        referenceWalk(base, adj, q, beam = b, hops = 0, entries = e,
+          finalK = 1, pinned)._2.select(col("__grp"), col("vec_id"))
+      }.reduce(_.union(_)).distinct()
+      val qEntry = base.join(entryIds, Seq("__grp", "vec_id"))
+        .select(col("__grp"), col("vec_id").as("q_id"),
+          col("embedding").as("q_emb"))
+      assert(qEntry.filter(col("q_id") < 10).isEmpty)
+      assert(!qEntry.isEmpty, "no entry-id queries")
+      for {
+        (qName, qf) <- Seq("regime queries" -> q, "entry-id queries" -> qEntry)
+        (hops, finalK) <- Seq((4, 3), (0, 5))
+      } {
+        val (mTopk, mScored) = VectorOps.graphWalkGrid(spark, base, adj, qf,
           grid, hops = hops, finalK = finalK)
         val mTopkRows = mTopk.collect()
           .map(r => (r.getString(0), r.getString(1), r.getLong(2),
@@ -175,8 +193,8 @@ class Round18OptSpec extends SparkSpec {
           .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
         grid.foreach { case (b, e) =>
           val tag = s"$b:$e"
-          val at = s"($b, $e), hops $hops, finalK $finalK"
-          val (sTopk, sScored) = referenceWalk(base, adj, q, beam = b,
+          val at = s"($b, $e), hops $hops, finalK $finalK, $qName"
+          val (sTopk, sScored) = referenceWalk(base, adj, qf, beam = b,
             hops = hops, entries = e, finalK = finalK, pinned)
           val sRows = sTopk.collect()
             .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
@@ -198,6 +216,19 @@ class Round18OptSpec extends SparkSpec {
       pinned.foreach(GraftEngine.unpinCheckpoints)
       VectorOps.releaseCaches()
     }
+  }
+
+  test("a 4-hop calibration-grid walk runs at most 12 Spark jobs, the same on every rep") {
+    try {
+      val (base, adj) = VectorOps.regimeAdj(spark, sfDir)
+      val q = base.filter(col("vec_id") < 10)
+        .select(col("__grp"), col("vec_id").as("q_id"),
+          col("embedding").as("q_emb"))
+      val jobs = (1 to 3).map(_ => jobsOf(VectorOps.graphWalkGrid(spark,
+        base, adj, q, VectorOps.GraphGrid, hops = 4))._2)
+      assert(jobs.forall(_ <= 12), s"graphWalkGrid ran $jobs Spark jobs")
+      assert(jobs.distinct.size === 1, s"job count moved across reps: $jobs")
+    } finally VectorOps.releaseCaches()
   }
 
   // == Observed fallbacks: forced at every site, counted, identical ==
