@@ -59,7 +59,7 @@ object Bench {
     "incident_intervals" -> ((s, d) => graft.queries.EventOps.warmIncidents(s, d)),
     // the trained ALS pipeline q61 serves from: the train/serve split
     // every other repeated kernel already reports — q61's row is now
-    // recommendForUserSubset + back-map only
+    // the subset top-k pass + back-map only
     "als_model" -> ((s, d) => graft.queries.RecoOps.warmAlsModel(s, d)),
     // q179's two pinned candidate tables (winnow pairs + containment
     // prefix pairs) — without this line the screen row re-prices the

@@ -231,15 +231,19 @@ object IvfPq {
     */
   private[graft] val Descending = byScore(-1)
 
-  /** The `cap` least (adc, vec_id) pairs offered, by `Ascending` — the
-    * rows `row_number() <= cap` over `orderBy(adc, vec_id)` keeps.
+  /** The `cap` least values offered, by `ord` — the rows `row_number()
+    * <= cap` over that order keeps (the shortlist cut: (adc, vec_id) by
+    * `Ascending`). `worst` is the value a new one must precede once
+    * `size` reaches `cap`.
     */
-  private final class Shortlist(cap: Int) {
-    private val heap = new java.util.PriorityQueue[(Double, Long)](Ascending.reverse)
-    def offer(h: (Double, Long)): Unit =
+  private[graft] final class Shortlist[T](cap: Int, ord: Ordering[T]) {
+    private val heap = new java.util.PriorityQueue[T](ord.reverse)
+    def size: Int = heap.size
+    def worst: T = heap.peek
+    def offer(h: T): Unit =
       if (heap.size < cap) heap.add(h)
-      else if (cap > 0 && Ascending.lt(h, heap.peek)) { heap.poll(); heap.add(h) }
-    def hits: Iterator[(Double, Long)] = heap.iterator.asScala
+      else if (cap > 0 && ord.lt(h, heap.peek)) { heap.poll(); heap.add(h) }
+    def hits: Iterator[T] = heap.iterator.asScala
   }
 
   /** The query-side state of a search, built on the driver: per query,
@@ -306,7 +310,7 @@ object IvfPq {
         try candidates(index, probed).as[(Long, Int, Array[Int])].rdd
           .mapPartitions { rows =>
             val pr = bc.value
-            val lists = Array.fill(pr.qIds.length * g)(new Shortlist(shortlist))
+            val lists = Array.fill(pr.qIds.length * g)(new Shortlist(shortlist, Ascending))
             rows.foreach { case (id, cell, codes) =>
               var i = 0
               while (i < pr.qIds.length) {

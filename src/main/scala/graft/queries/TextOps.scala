@@ -1,8 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import graft.ext.{IvfPq, Quantizer}
 import graft.{GraftQuery, Observed, Tables}
 import graft.Fns._
 
@@ -200,15 +203,17 @@ object TextOps {
     bpeLoop(s, d, rounds = 10); ()
   }
 
-  /** Memoized lexical-retrieval statistics, keyed (session, dir): the
-    * per-corpus (doc_id, token) postings and token document
-    * frequencies every lexical arm reads. A production hybrid-search
-    * deployment builds its inverted-index statistics ONCE and serves
-    * every query from them (the servedIndexes posture on the dense
-    * side); recomputing the corpus tokenization per hybridTopK call
-    * priced the stats build into every serving row. All three are
-    * pinned via `pin` (released by releaseCaches) — the 1-row `n_docs`
-    * too, or every serve would re-scan the documents table to count it.
+  /** Memoized lexical-retrieval statistics, keyed (session, dir): one
+    * row per document with text (doc_id, toks: its distinct tokens),
+    * the token document frequencies (tok, df) derived from it, and the
+    * 1-row `n_docs`. A production hybrid-search deployment builds its
+    * inverted-index statistics ONCE and serves every query from them
+    * (the servedIndexes posture on the dense side); recomputing the
+    * corpus tokenization per hybridTopK call priced the stats build
+    * into every serving row. All three are pinned via `pin` (released
+    * by releaseCaches) — the 1-row `n_docs` too, or every serve would
+    * re-scan the documents table to count it. doc_id is the documents
+    * table's key, so the token table needs no shuffle.
     */
   private val lexMemo =
     new graft.KeyedMemo[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
@@ -216,13 +221,12 @@ object TextOps {
   def lexStats(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) =
     lexMemo.getOrBuild((s, d)) {
       val docs = t(s, d, "documents")
-      val dtok = pin(docs
-        .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
-        .distinct())
-      val dfT = pin(dtok.groupBy(col("tok"))
-        .agg(count(lit(1)).cast("double").as("df")))
+      val docToks = pin(docs.filter(col("text").isNotNull)
+        .select(col("doc_id"), array_distinct(toks(col("text"))).as("toks")))
+      val dfT = pin(docToks.select(explode(col("toks")).as("tok"))
+        .groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df")))
       val nDocs = pin(docs.agg(count(lit(1)).cast("double").as("n_docs")))
-      (dtok, dfT, nDocs)
+      (docToks, dfT, nDocs)
     }
 
   /** Explicit setup: materialize the memoized lexical stats so bench
@@ -230,8 +234,8 @@ object TextOps {
     * serving-only and the build is its own accounted line.
     */
   def warmLexStats(s: SparkSession, d: String): Unit = {
-    val (dtok, dfT, nDocs) = lexStats(s, d)
-    Seq(dtok, dfT, nDocs).foreach(_.write.format("noop").mode("overwrite").save())
+    val (docToks, dfT, nDocs) = lexStats(s, d)
+    Seq(docToks, dfT, nDocs).foreach(_.write.format("noop").mode("overwrite").save())
   }
 
   /** UniMax waterfill kernel shared by q172 and
@@ -310,69 +314,136 @@ object TextOps {
       .write.format("noop").mode("overwrite").save()
 
   /** The lexical retrieval arm shared by q156 and GraftEngine
-    * .hybridTopK: score corpus docs against per-query token sets
-    * (`qtok`: q_id, tok) by summed Lucene idf over shared distinct
-    * tokens, keep each query's top-`k` (6dp-rounded score, doc_id
-    * tiebreak). Token-key shuffles against the memoized postings; the
-    * df table broadcasts.
+    * .hybridTopK: score corpus docs against each query's distinct
+    * tokens (`queries`: (q_id, tokens), one entry per q_id) by the
+    * summed Lucene idf over shared tokens, and keep each query's top
+    * `k` as (q_id, doc_id, lex_rn) in (q_id, lex_rn) order. A doc is
+    * scored only if it shares a token, and never against its own id.
+    *
+    * Query-scale state goes to the driver, corpus-scale state never
+    * does: one collect reads `n_docs` and the df of the query tokens
+    * only, the idf terms are computed on the driver, and one pass over
+    * the doc-keyed token table keeps a bounded heap per query in each
+    * partition; the driver merges them. Two Spark jobs. The arithmetic
+    * is Spark's expression's: idf = round(ln(1 + (n − df + 0.5)/(df +
+    * 0.5)), 6) with `StrictMath.log` (Spark's `Log`), the score is
+    * round(Σ idf, 6) — its terms are 6dp values, so the summation order
+    * cannot move the rounded sum — and ranks follow (score desc, doc_id)
+    * in Spark's double order (`IvfPq.Descending`). LexicalKernelSpec
+    * keeps the join/window plan this replaced as the reference.
     */
-  def lexicalTopK(s: SparkSession, d: String, qtok: DataFrame, k: Int): DataFrame = {
-    val (dtok, dfT, nDocs) = lexStats(s, d)
-    qtok.join(dtok, Seq("tok"))
-      .filter(col("doc_id") =!= col("q_id"))
-      .join(broadcast(dfT), Seq("tok"))
-      .crossJoin(broadcast(nDocs))
-      .withColumn("idf", round(log(lit(1.0) +
-        (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))), 6))
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(round(sum(col("idf")), 6).as("s"))
-      .withColumn("lex_rn", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("s").desc, col("doc_id"))))
-      .filter(col("lex_rn") <= k)
-      .select(col("q_id"), col("doc_id"), col("lex_rn"))
+  private[graft] def lexicalTopK(s: SparkSession, d: String,
+      queries: Seq[(Long, Array[String])], k: Int): Seq[(Long, Long, Int)] = {
+    val (docToks, dfT, nDocs) = lexStats(s, d)
+    val wanted = queries.flatMap(_._2).distinct
+    // one job: the n_docs row (tok null) and the query tokens' df rows
+    val stats =
+      if (wanted.isEmpty || k <= 0) Array.empty[Row]
+      else nDocs.select(lit(null).cast("string").as("tok"), col("n_docs").as("df"))
+        .unionByName(dfT.filter(col("tok").isin(wanted: _*))).collect()
+    val n = stats.find(_.isNullAt(0)).map(_.getDouble(1)).getOrElse(0.0)
+    val idf = stats.filterNot(_.isNullAt(0)).map { r =>
+      val df = r.getDouble(1)
+      r.getString(0) -> Quantizer.round(StrictMath.log(1.0 + (n - df + 0.5) / (df + 0.5)), 6)
+    }.toMap
+    val qIds = queries.map(_._1).toArray
+    // token → (query index, idf) for every query holding it
+    val postings = queries.zipWithIndex.flatMap { case ((_, ts), i) =>
+      ts.flatMap(tok => idf.get(tok).map(tok -> (i, _)))
+    }.groupMap(_._1)(_._2).map { case (tok, ps) => tok -> ps.toArray }
+    val hits: Array[(Int, (Double, Long))] =
+      if (postings.isEmpty) Array.empty
+      else {
+        import s.implicits._
+        val bc = s.sparkContext.broadcast((qIds, postings))
+        try docToks.as[(Long, Array[String])].rdd.mapPartitions { rows =>
+          val (ids, post) = bc.value
+          val tops = Array.fill(ids.length)(new IvfPq.Shortlist(k, IvfPq.Descending))
+          val sums = new Array[Double](ids.length)
+          val hit = new Array[Boolean](ids.length)
+          val touched = scala.collection.mutable.ArrayBuffer.empty[Int]
+          rows.foreach { case (doc, ts) =>
+            ts.foreach(tok => post.get(tok).foreach(_.foreach { case (i, w) =>
+              if (!hit(i)) { hit(i) = true; touched += i }
+              sums(i) += w
+            }))
+            touched.foreach { i =>
+              if (ids(i) != doc) tops(i).offer((Quantizer.round(sums(i), 6), doc))
+              sums(i) = 0.0
+              hit(i) = false
+            }
+            touched.clear()
+          }
+          tops.iterator.zipWithIndex.flatMap { case (t, i) => t.hits.map((i, _)) }
+        }.collect()
+        finally bc.destroy()
+      }
+    hits.groupMap(_._1)(_._2).toSeq.sortBy(p => qIds(p._1)).flatMap { case (i, hs) =>
+      hs.sorted(IvfPq.Descending).take(k).zipWithIndex
+        .map { case ((_, doc), r) => (qIds(i), doc, r + 1) }
+    }
   }
 
   /** Reciprocal-rank fusion (k=60) of a lexical and a dense top-k list
-    * (q_id, doc_id, lex_rn / dense_rn) — the q156 fusion, shared with
-    * the facade. A doc missing from one arm reports rank 0 there and
-    * contributes 0 to the fused score. Each list holds a (q_id, doc_id)
-    * pair at most once, so grouping the union of the two lists fuses
-    * them as a full outer join would, with one shuffle for both lists
-    * instead of one per side.
+    * of (q_id, doc_id, rank) — the q156 fusion, shared with the facade.
+    * A doc missing from one arm reports rank 0 there and contributes 0
+    * to the fused score, rrf = round(1/(60 + lex_rn) + 1/(60 +
+    * dense_rn), 6). Both lists are at most k rows per query, so the
+    * merge runs on the driver. Returns a local (q_id, doc_id, lex_rn,
+    * dense_rn, rrf, rn) frame in (q_id, rn) order, ranked by (rrf desc,
+    * doc_id).
     */
-  def rrfFuse(lexTop: DataFrame, denTop: DataFrame): DataFrame =
-    lexTop.unionByName(denTop, allowMissingColumns = true)
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(max(col("lex_rn")).as("lex_rn"), max(col("dense_rn")).as("dense_rn"))
-      .select(col("q_id"), col("doc_id"),
-        coalesce(col("lex_rn"), lit(0)).as("lex_rn"),
-        coalesce(col("dense_rn"), lit(0)).as("dense_rn"),
-        round(coalesce(lit(1.0) / (lit(60) + col("lex_rn")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("dense_rn")), lit(0.0)), 6).as("rrf"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("rrf").desc, col("doc_id"))))
-      .orderBy(col("q_id"), col("rn"))
+  private[graft] def rrfFuse(s: SparkSession, lex: Seq[(Long, Long, Int)],
+      dense: Seq[(Long, Long, Int)]): DataFrame = {
+    def term(r: Int): Double = if (r == 0) 0.0 else 1.0 / (60 + r)
+    val ranks = (lex.map { case (q, doc, r) => (q, doc) -> (r, 0) } ++
+        dense.map { case (q, doc, r) => (q, doc) -> (0, r) })
+      .groupMapReduce(_._1)(_._2) { case ((l1, d1), (l2, d2)) => (l1 max l2, d1 max d2) }
+    val rows = ranks.toSeq.groupBy(_._1._1).toSeq.sortBy(_._1).flatMap { case (q, ps) =>
+      ps.map { case ((_, doc), (l, dn)) =>
+        ((Quantizer.round(term(l) + term(dn), 6), doc), (l, dn))
+      }.sortBy(_._1)(IvfPq.Descending).zipWithIndex
+        .map { case (((rrf, doc), (l, dn)), r) => Row(q, doc, l, dn, rrf, r + 1) }
+    }
+    s.createDataFrame(rows.asJava, RrfSchema)
+  }
+
+  private val RrfSchema = StructType(Seq(
+    StructField("q_id", LongType, nullable = false),
+    StructField("doc_id", LongType, nullable = false),
+    StructField("lex_rn", IntegerType, nullable = false),
+    StructField("dense_rn", IntegerType, nullable = false),
+    StructField("rrf", DoubleType, nullable = false),
+    StructField("rn", IntegerType, nullable = false)))
+
+  /** Each query's (q_id, distinct tokens of q_text), tokenized on the
+    * driver as `array_distinct(split(q_text, ' '))` does: Spark's split
+    * has limit −1, so empty tokens stay (Java's default split drops the
+    * trailing ones); a null text has no tokens.
+    */
+  private[graft] def queryTokens(queries: DataFrame): Seq[(Long, Array[String])] =
+    queries.select(col("q_id"), col("q_text")).collect().toSeq.map { r =>
+      r.getLong(0) ->
+        (if (r.isNullAt(1)) Array.empty[String] else r.getString(1).split(" ", -1).distinct)
+    }
 
   /** GraftEngine's hybrid serving entry: RRF fusion of the lexical arm
-    * (memoized corpus stats, caller query text) and the dense arm
-    * served from the session's shared IVF-PQ index (VectorOps
-    * .annTopK). `queries`: (q_id long, q_text string, q_emb
-    * array<float>). At full probe (nProbe = kCells, shortlist =
-    * Int.MaxValue) the dense arm is exact (the q139 losslessness
-    * proof), so the result reproduces q156 bit-for-bit —
-    * GraftEngineSpec pins that; the defaults passed by the facade are
-    * the q133 serving configuration.
+    * (memoized corpus stats, caller query text tokenized on the driver
+    * by `queryTokens`) and the dense arm served from the session's shared
+    * IVF-PQ index (VectorOps.annTopK). `queries`: (q_id long, q_text
+    * string, q_emb array<float>), one row per q_id. At full probe
+    * (nProbe = kCells, shortlist = Int.MaxValue) the dense arm is exact
+    * (the q139 losslessness proof), so the result reproduces q156
+    * bit-for-bit — GraftEngineSpec pins that; the defaults passed by
+    * the facade are the q133 serving configuration.
     */
   def hybridTopK(s: SparkSession, d: String, queries: DataFrame, k: Int,
       nProbe: Int, shortlist: Int): DataFrame = {
-    val qtok = queries.select(col("q_id"),
-      explode(array_distinct(toks(col("q_text")))).as("tok"))
-    val lexTop = lexicalTopK(s, d, qtok, k)
-    val denTop = VectorOps.annTopK(s, d,
+    val lex = lexicalTopK(s, d, queryTokens(queries), k)
+    val dense = VectorOps.annTopK(s, d,
         queries.select(col("q_id"), col("q_emb")), k, nProbe, shortlist)
-      .select(col("q_id"), col("vec_id").as("doc_id"),
-        col("rn").as("dense_rn"))
-    rrfFuse(lexTop, denTop)
+      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
+    rrfFuse(s, lex, dense)
   }
 
   /** Exact pairwise Jaccard >= threshold via a shingle inverted index:
@@ -1854,7 +1925,7 @@ object TextOps {
 
     GraftQuery(
       "q156_hybrid_rrf",
-      "Hybrid retrieval fusion — reciprocal-rank fusion (RRF, Cormack et al. 2009, the k=60 constant every production hybrid search uses) of a LEXICAL ranking and a DENSE ranking for the same query set, the modern two-tower retrieval shape: query docs (doc_id < 5; doc_id = vec_id links the modalities, the q123 convention) rank the corpus (a) lexically by summed Lucene idf over shared distinct tokens (the q141 statistics on set-semantics tokens) and (b) densely by embedding cosine (the q50 kernel), each arm keeping its top-10 (self excluded, rounded scores, doc_id tiebreak); fusion outer-merges the two lists per (query, doc) and scores 1/(60+rank) per arm (0 for an arm that missed the doc — reported as rank 0, so the output also audits ARM DISAGREEMENT, which on this fixture is total: embeddings are independent of text, exactly what q123 exposes). Determinism: idf terms round at 6dp before summing, cosines at 6dp, RRF scores at 6dp from exact integer ranks. Scale: the lexical arm is token-key shuffles with the 5-doc query side joined through a broadcast df table; the dense arm broadcasts 5 query vectors over one corpus pass; fusion merges two <=10-row-per-query lists — linear everywhere, the corpus is never pairwise.",
+      "Hybrid retrieval fusion — reciprocal-rank fusion (RRF, Cormack et al. 2009, the k=60 constant every production hybrid search uses) of a LEXICAL ranking and a DENSE ranking for the same query set, the modern two-tower retrieval shape: query docs (doc_id < 5; doc_id = vec_id links the modalities, the q123 convention) rank the corpus (a) lexically by summed Lucene idf over shared distinct tokens (the q141 statistics on set-semantics tokens) and (b) densely by embedding cosine (the q50 kernel), each arm keeping its top-10 (self excluded, rounded scores, doc_id tiebreak); fusion outer-merges the two lists per (query, doc) and scores 1/(60+rank) per arm (0 for an arm that missed the doc — reported as rank 0, so the output also audits ARM DISAGREEMENT, which on this fixture is total: embeddings are independent of text, exactly what q123 exposes). Determinism: idf terms round at 6dp before summing, cosines at 6dp, RRF scores at 6dp from exact integer ranks. Scale: the lexical arm reads the 5 query docs' token arrays, their tokens' df and n_docs to the driver, then scores in one pass over the memoized doc-keyed token table with a bounded heap per query; the dense arm broadcasts 5 query vectors over one corpus pass; fusion merges the two <=10-row-per-query lists on the driver — linear everywhere, the corpus is never pairwise.",
       (s, d) => {
         graft.functions.CosineSimilarity.ensureRegistered(s)
         // lexical arm through the MEMOIZED corpus stats + the shared
@@ -1862,20 +1933,21 @@ object TextOps {
         // GraftEngine.hybridTopK serves from, so the registered query
         // and the facade can never drift (and the bench row is
         // serving-only once warmLexStats has run)
-        val (dtok, _, _) = lexStats(s, d)
-        val qtok = dtok.filter(col("doc_id") < 5)
-          .select(col("doc_id").as("q_id"), col("tok"))
-        val lexTop = lexicalTopK(s, d, qtok, 10)
+        val (docToks, _, _) = lexStats(s, d)
+        val qs = docToks.filter(col("doc_id") < 5).collect().toSeq
+          .map(r => (r.getLong(0), r.getSeq[String](1).toArray))
+        val lex = lexicalTopK(s, d, qs, 10)
         val e = Tables.load(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val q = e.filter(col("vec_id") < 5)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val denTop = e.join(broadcast(q), col("q_id") =!= col("vec_id"))
+        val dense = e.join(broadcast(q), col("q_id") =!= col("vec_id"))
           .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
           .withColumn("dense_rn", row_number().over(
             Window.partitionBy(col("q_id")).orderBy(col("cos_r").desc, col("vec_id"))))
           .filter(col("dense_rn") <= 10)
-          .select(col("q_id"), col("vec_id").as("doc_id"), col("dense_rn"))
-        rrfFuse(lexTop, denTop)
+          .select(col("q_id"), col("vec_id"), col("dense_rn")).collect().toSeq
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+        rrfFuse(s, lex, dense)
       },
       Some("WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents), " +
         "dt AS (SELECT DISTINCT doc_id, tok FROM tk), " +

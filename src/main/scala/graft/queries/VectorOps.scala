@@ -1,11 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.Fns._
 import graft.functions.CosineSimilarity
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Similarity search over the embeddings fixture (Array[Float], 64-d).
   *
@@ -683,8 +685,6 @@ object VectorOps {
   private[graft] def graphWalkGrid(s: SparkSession, base: DataFrame,
       adj: DataFrame, q: DataFrame, grid: Seq[(Int, Int)], hops: Int,
       finalK: Int = 3): (DataFrame, DataFrame) = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val grpField = q.schema("__grp")
     val qs = q.select(col("__grp"), col("q_id"), col("q_emb")).collect()
@@ -1007,14 +1007,19 @@ object VectorOps {
           col("q_id"), col("q_emb"))
         val (topk, _) = graphWalkGrid(s, base, adj, qg,
           Seq((pick.p1, pick.p2)), hops = 4, finalK = topK)
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_r").desc, col("vec_id"))
-        topk.drop("__gp", "__grp")
-          .withColumn("rn", row_number().over(w))
-          .select(col("q_id"), col("vec_id"), col("cos_r"), col("rn"))
-          .orderBy(col("q_id"), col("rn"))
+        // the walk's frame is local: rank it on the driver
+        val rows = topk.select(col("q_id"), col("vec_id"), col("cos_r")).collect()
+          .groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (q, rs) =>
+            rs.map(r => (r.getDouble(2), r.getLong(1))).sorted(graft.ext.IvfPq.Descending)
+              .zipWithIndex.map { case ((cos, v), r) => Row(q, v, cos, r + 1) }
+          }
+        s.createDataFrame(rows.asJava, ArmSchema)
     }
   }
+
+  private val ArmSchema = StructType(Seq(
+    StructField("q_id", LongType), StructField("vec_id", LongType),
+    StructField("cos_r", DoubleType), StructField("rn", IntegerType, nullable = false)))
 
   /** Bench build step for the cross-arm table: both regimes' graph
     * grid walks + IVF probe-cost tables (their prerequisites —

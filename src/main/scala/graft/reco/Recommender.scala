@@ -5,19 +5,25 @@ import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{IndexToString, StringIndexer, StringIndexerModel}
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
+import graft.ext.IvfPq
 
 /** ALS collaborative-filtering core: the reference's Recommender
   * (utils/recommender.py:64–197) rebuilt M1–M6 with one deliberate
   * change — the per-row Python UDFs that map indexed ids back to
   * originals (recommender.py:164–174, SURVEY §2.10 U1) are replaced
-  * by `IndexToString` transformers, keeping the whole enrichment path
-  * inside codegen with no serialization barrier.
+  * by the indexers' own labels: `IndexToString` on the all-users
+  * batch path, a `labelsArray` lookup on the driver for a served user
+  * subset.
   *
   * Scale posture: ALS itself is MLlib's blocked factorization
-  * (distributed normal-equation solves per user/item block); the
-  * explode + back-map + join enrichment downstream is all native.
+  * (distributed normal-equation solves per user/item block). The
+  * all-users top-k stays MLlib's blocked crossJoin; a bounded user
+  * subset is served by one pass over the item factors with a driver
+  * merge (`recommendAll`).
   */
 object Recommender {
 
@@ -115,36 +121,115 @@ object Recommender {
     cv.fit(ratings).bestModel.asInstanceOf[PipelineModel]
   }
 
-  /** M6 + U1: top-k per user, exploded and mapped back to original
-    * ids with IndexToString (no UDFs — recommender.py:145–174 rebuilt).
+  /** M6 + U1: top-k per user, mapped back to original ids through the
+    * indexers' labels (no UDFs — recommender.py:145–174 rebuilt).
     * Output: userId, itemId, rank (1-based), predicted float.
     *
-    * `userLimit` bounds the scored user set (recommendForUserSubset on
-    * the first N indexed users): recommendForAllUsers is a blocked
-    * users×items cross product, so production at scale batches the
-    * user side rather than scoring the full cross in one job.
+    * Scale contract: `userLimit = None` scores every user, a
+    * corpus-scale user side, so it stays on MLlib's
+    * `recommendForAllUsers` (a blocked users×items crossJoin with the
+    * top-k kept on the executors) and `IndexToString` back-maps.
+    * `userLimit = Some(n)` serves the users indexed below n, a
+    * query-scale side: their factors are collected and broadcast, one
+    * pass over `itemFactors` keeps a bounded top-k per user in each
+    * partition, and the driver merges those and maps indices back
+    * through `labelsArray` — two Spark jobs, and a local frame out.
+    *
+    * The pass scores with the routine `ALSModel.recommendForAll`
+    * calls (JavaBLAS `sgemv`) on MLlib's own item blocks (each
+    * partition in `blockSize` rows, in order), so every `predicted`
+    * equals MLlib's bit for bit. Exact float ties rank the lower item
+    * index first. MLlib has no tie rule to copy: it orders its final
+    * list by (score, item index) descending, but first cuts each item
+    * block to k with Guava's `greatestOf`, which leaves undefined
+    * which of the items tied at the cut survive.
     */
   def recommendAll(model: PipelineModel, k: Int,
       userLimit: Option[Int] = None): DataFrame = {
     val userIdx = model.stages(0).asInstanceOf[StringIndexerModel]
     val itemIdx = model.stages(1).asInstanceOf[StringIndexerModel]
     val als = model.stages(2).asInstanceOf[ALSModel]
-    val recs = userLimit.map { n =>
-      val subset = als.userFactors.select(col("id").cast("double").as("userIndexed"))
-        .filter(col("userIndexed") < n)
-      als.recommendForUserSubset(subset, k)
-    }.getOrElse(als.recommendForAllUsers(k))
-      .select(col("userIndexed"),
-        posexplode(col("recommendations")).as(Seq("pos", "rec")))
-      .select(col("userIndexed").cast("double"),
-        col("rec.itemIndexed").cast("double").as("itemIndexed"),
-        (col("pos") + 1).as("rank"),
-        col("rec.rating").as("predicted"))
-    val backUser = new IndexToString().setInputCol("userIndexed")
-      .setOutputCol("userId").setLabels(userIdx.labelsArray(0))
-    val backItem = new IndexToString().setInputCol("itemIndexed")
-      .setOutputCol("itemId").setLabels(itemIdx.labelsArray(0))
-    backItem.transform(backUser.transform(recs))
-      .select(col("userId"), col("itemId"), col("rank"), col("predicted"))
+    userLimit match {
+      case Some(n) =>
+        recommendSubset(als, k, n, userIdx.labelsArray(0), itemIdx.labelsArray(0))
+      case None =>
+        val recs = als.recommendForAllUsers(k)
+          .select(col("userIndexed"),
+            posexplode(col("recommendations")).as(Seq("pos", "rec")))
+          .select(col("userIndexed").cast("double"),
+            col("rec.itemIndexed").cast("double").as("itemIndexed"),
+            (col("pos") + 1).as("rank"),
+            col("rec.rating").as("predicted"))
+        val backUser = new IndexToString().setInputCol("userIndexed")
+          .setOutputCol("userId").setLabels(userIdx.labelsArray(0))
+        val backItem = new IndexToString().setInputCol("itemIndexed")
+          .setOutputCol("itemId").setLabels(itemIdx.labelsArray(0))
+        backItem.transform(backUser.transform(recs))
+          .select(col("userId"), col("itemId"), col("rank"), col("predicted"))
+    }
   }
+
+  /** (score, item index) by score descending (`Float.compare`), ties
+    * to the lower item index.
+    */
+  private val Best: Ordering[(Float, Int)] = (a, b) => {
+    val c = java.lang.Float.compare(b._1, a._1)
+    if (c != 0) c else Integer.compare(a._2, b._2)
+  }
+
+  /** `recommendAll`'s `userLimit = Some(n)` kernel. */
+  private def recommendSubset(als: ALSModel, k: Int, n: Int,
+      userLabels: Array[String], itemLabels: Array[String]): DataFrame = {
+    val spark = als.itemFactors.sparkSession
+    import spark.implicits._
+    val users = als.userFactors.filter(col("id") < n)
+      .as[(Int, Array[Float])].collect()
+    val rank = als.rank
+    val blockSize = als.getBlockSize
+    val hits: Array[(Int, (Float, Int))] =
+      if (users.isEmpty || k <= 0) Array.empty
+      else {
+        val bc = spark.sparkContext.broadcast(
+          (users.map(_._1), users.flatMap(_._2)))
+        try als.itemFactors.as[(Int, Array[Float])].rdd.mapPartitions { rows =>
+          val (ids, srcMat) = bc.value
+          val blas = dev.ludovic.netlib.blas.JavaBLAS.getInstance
+          val tops = Array.fill(ids.length)(new IvfPq.Shortlist(k, Best))
+          // ALSModel.blockify: the partition in blockSize-row blocks
+          rows.grouped(blockSize).foreach { block =>
+            val dstIds = block.map(_._1).toArray
+            val dstMat = block.flatMap(_._2).toArray
+            val m = dstIds.length
+            val scores = new Array[Float](m)
+            var i = 0
+            while (i < ids.length) {
+              blas.sgemv("T", rank, m, 1f, dstMat, 0, rank, srcMat, i * rank, 1,
+                0f, scores, 0, 1)
+              val top = tops(i)
+              var j = 0
+              while (j < m) {
+                if (top.size < k || java.lang.Float.compare(scores(j), top.worst._1) >= 0)
+                  top.offer((scores(j), dstIds(j)))
+                j += 1
+              }
+              i += 1
+            }
+          }
+          tops.iterator.zipWithIndex.flatMap { case (t, i) => t.hits.map((ids(i), _)) }
+        }.collect()
+        finally bc.destroy()
+      }
+    val rows = hits.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (u, hs) =>
+      hs.map(_._2).sorted(Best).take(k).zipWithIndex.map { case ((score, item), r) =>
+        Row(userLabels(u), itemLabels(item), r + 1, score)
+      }
+    }
+    spark.createDataFrame(rows.asJava, RecSchema)
+  }
+
+  private val RecSchema = StructType(Seq(
+    StructField("userId", StringType),
+    StructField("itemId", StringType),
+    StructField("rank", IntegerType, nullable = false),
+    StructField("predicted", FloatType)))
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.feature.StringIndexerModel
+import org.apache.spark.ml.recommendation.ALSModel
 import org.apache.spark.sql.functions._
 import graft.reco.{RatingSynth, Recommender}
 
@@ -86,5 +88,71 @@ class RecoSpec extends SparkSpec {
     val best = Recommender.trainCV(ratings, cfg)
     val recs = Recommender.recommendAll(best, 3)
     assert(recs.count() > 0)
+  }
+
+  /** (userId, itemId, rank, raw bits of predicted), sorted. */
+  private def recRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getString(0), r.getString(1), r.getInt(2),
+      java.lang.Float.floatToRawIntBits(r.getFloat(3))))
+    .toSeq.sorted
+
+  /** The reference: MLlib's all-users top-k, restricted to the users
+    * indexed below n.
+    */
+  private def mllibSubset(m: PipelineModel, k: Int, n: Int) = {
+    val served = m.stages(0).asInstanceOf[StringIndexerModel]
+      .labelsArray(0).take(n).toSet
+    recRows(Recommender.recommendAll(m, k)).filter(r => served(r._1))
+  }
+
+  test("userLimit serves MLlib's all-users top-k of the users below n, scores bit for bit") {
+    val users = model.stages(0).asInstanceOf[StringIndexerModel].labelsArray(0).length
+    val items = model.stages(1).asInstanceOf[StringIndexerModel].labelsArray(0).length
+    for (k <- Seq(5, items + 3); n <- Seq(0, users / 3, users + 10)) {
+      val served = recRows(Recommender.recommendAll(model, k, userLimit = Some(n)))
+      assert(served === mllibSubset(model, k, n), s"k=$k n=$n")
+      assert(served.size === math.min(n, users) * math.min(k, items), s"k=$k n=$n")
+    }
+  }
+
+  test("userLimit ranks exact score ties by the lower item index") {
+    // items i4 and i5 get the same rating from every user, so ALS
+    // solves the same normal equations for both: equal factors, and an
+    // exact score tie for every user
+    val rs = for (u <- 0 until 12; i <- 0 until 6)
+      yield (s"u$u", s"i$i", (1 + (u * 7 + (if (i == 5) 4 else i) * 3) % 5).toFloat)
+    val tied = Recommender.pipeline(Recommender.Config(rank = 3, maxIter = 4))
+      .fit(spark.createDataFrame(rs).toDF("userId", "itemId", "rating"))
+    val itemLabels = tied.stages(1).asInstanceOf[StringIndexerModel].labelsArray(0)
+    val factors = tied.stages(2).asInstanceOf[ALSModel].itemFactors.collect()
+      .map(r => itemLabels(r.getInt(0)) -> r.getSeq[Float](1)).toMap
+    assert(factors("i4") === factors("i5"), "the fixture must force an exact tie")
+    val lower = Seq("i4", "i5").minBy(itemLabels.indexOf(_))
+    val full = recRows(Recommender.recommendAll(tied, 6, userLimit = Some(100)))
+    full.groupBy(_._1).foreach { case (u, recs) =>
+      val byItem = recs.map(r => r._2 -> r).toMap
+      val (a, b) = (byItem(lower), byItem(Seq("i4", "i5").filterNot(_ == lower).head))
+      assert(a._4 === b._4, s"$u: no tie")
+      assert(a._3 + 1 === b._3, s"$u: ${recs.sortBy(_._3)}")
+    }
+    // every cut keeps the first k of the full ranking
+    (1 to 5).foreach { k =>
+      assert(recRows(Recommender.recommendAll(tied, k, userLimit = Some(100))) ===
+        full.filter(_._3 <= k), s"k=$k")
+    }
+    // and the tied scores are MLlib's, bit for bit
+    assert(full.map(r => (r._1, r._4)).sorted ===
+      mllibSubset(tied, 6, 100).map(r => (r._1, r._4)).sorted)
+  }
+
+  test("q61 serves from a built model in at most 3 Spark jobs, the same on every rep") {
+    val q61 = Registry.byName("q61_als_recommend").fn
+    try {
+      queries.RecoOps.warmAlsModel(spark, sfDir)
+      val jobs = (1 to 3).map(_ => jobsOf(q61(spark, sfDir).collect())._2)
+      info(s"jobs per rep: $jobs")
+      assert(jobs.forall(_ <= 3), s"jobs per rep: $jobs")
+      assert(jobs.distinct.size === 1, s"jobs per rep: $jobs")
+    } finally queries.RecoOps.releaseCaches()
   }
 }

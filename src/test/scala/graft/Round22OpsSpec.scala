@@ -470,4 +470,31 @@ class Round22OpsSpec extends SparkSpec {
     val eng = new GraftEngine(spark, sfDir)
     assert(rowsOf(eng.annTopKArm(queries, 3, 0.0)) === g1)
   }
+
+  test("a graph-arm annTopKArm serve ranks the walk on the driver: the windowed ranking's rows, at most 12 Spark jobs") {
+    import graft.queries.VectorOps
+    import org.apache.spark.sql.expressions.Window
+    val queries = graft.Tables.load(spark, sfDir, "embeddings")
+      .filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    def rowsOf(rs: Array[org.apache.spark.sql.Row]) = rs.toSeq.map(r => (r.getLong(0),
+      r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+    val pick0 = VectorOps.annArmAuto(spark, sfDir, 0.0, "isotropic")
+    assert(pick0.arm === "graph")
+    // the replaced ranking: a row_number window over the walk's top-k
+    val (base, adj) = VectorOps.regimeAdj(spark, sfDir)
+    val (topk, _) = VectorOps.graphWalkGrid(spark, base, adj,
+      queries.select(lit("isotropic").as("__grp"), col("q_id"), col("q_emb")),
+      Seq((pick0.p1, pick0.p2)), hops = 4, finalK = 3)
+    val reference = rowsOf(topk.drop("__gp", "__grp")
+      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("cos_r").desc, col("vec_id"))))
+      .select(col("q_id"), col("vec_id"), col("cos_r"), col("rn"))
+      .orderBy(col("q_id"), col("rn")).collect())
+    val reps = (1 to 3).map(_ =>
+      jobsOf(VectorOps.annTopKArm(spark, sfDir, queries, 3, 0.0).collect()))
+    info(s"jobs per rep: ${reps.map(_._2)}")
+    assert(reps.forall(_._2 <= 12), s"jobs per rep: ${reps.map(_._2)}")
+    reps.foreach(r => assert(rowsOf(r._1) === reference))
+  }
 }
