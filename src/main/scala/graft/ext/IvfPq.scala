@@ -2,7 +2,6 @@ package graft.ext
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.CosineSimilarity
@@ -199,12 +198,12 @@ object IvfPq {
     index.copy(cells = index.cells.unionByName(encode(index, newVectors)))
 
   /** The first `nProbe` cells of the unit query `q`: centroids ranked
-    * by `cosine_sim` as `Descending` orders them.
+    * by `cosine_sim` as `TopK.Descending` orders them.
     */
   private[graft] def probe(index: Index, q: Array[Float], nProbe: Int): Array[Int] =
     index.quantizers.cents.zipWithIndex
       .map { case (c, cell) => (CosineSimilarity.cosine(q, c.map(_.toFloat)), cell.toLong) }
-      .sorted(Descending).take(nProbe).map(_._2.toInt)
+      .sorted(TopK.Descending).take(nProbe).map(_._2.toInt)
 
   /** The code rows of `cells` — a search's one pass over the code
     * table. On a saved index the predicate is a static PartitionFilter,
@@ -213,38 +212,6 @@ object IvfPq {
   private[graft] def candidates(index: Index, cells: Seq[Int]): DataFrame =
     index.cells.filter(col("cell").isin(cells: _*))
       .select(col("vec_id"), col("cell"), col("codes"))
-
-  /** (score, id) pairs by score in Spark's sort order (NaN above every
-    * number, −0.0 = 0.0; `sign` −1 for descending), ties to the lower
-    * id.
-    */
-  private[graft] def byScore(sign: Int): Ordering[(Double, Long)] = (a, b) => {
-    val c = sign * SQLOrderingUtil.compareDoubles(a._1, b._1)
-    if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-  }
-
-  /** The shortlist cut's `orderBy(adc, vec_id)`. */
-  private val Ascending = byScore(1)
-
-  /** The probe's `orderBy(c_sim.desc, cell)` and the re-rank's
-    * `orderBy(cos_r.desc, vec_id)`.
-    */
-  private[graft] val Descending = byScore(-1)
-
-  /** The `cap` least values offered, by `ord` — the rows `row_number()
-    * <= cap` over that order keeps (the shortlist cut: (adc, vec_id) by
-    * `Ascending`). `worst` is the value a new one must precede once
-    * `size` reaches `cap`.
-    */
-  private[graft] final class Shortlist[T](cap: Int, ord: Ordering[T]) {
-    private val heap = new java.util.PriorityQueue[T](ord.reverse)
-    def size: Int = heap.size
-    def worst: T = heap.peek
-    def offer(h: T): Unit =
-      if (heap.size < cap) heap.add(h)
-      else if (cap > 0 && ord.lt(h, heap.peek)) { heap.poll(); heap.add(h) }
-    def hits: Iterator[T] = heap.iterator.asScala
-  }
 
   /** The query-side state of a search, built on the driver: per query,
     * its id, every cell's probe rank (1-based, 0 = not probed) and
@@ -300,37 +267,27 @@ object IvfPq {
     }
     val probed = (0 until index.kCells).filter(c => rank.exists(_(c) > 0))
     // 2. executors: one pass over the probed cells' codes
-    val short: Map[Int, Array[(Double, Long)]] =
-      if (probed.isEmpty) Map.empty
-      else {
-        import spark.implicits._
-        val bc = spark.sparkContext.broadcast(new Probes(qs.map(_._1), rank, tables))
-        val k = q.k
-        val g = grid.length
-        try candidates(index, probed).as[(Long, Int, Array[Int])].rdd
-          .mapPartitions { rows =>
-            val pr = bc.value
-            val lists = Array.fill(pr.qIds.length * g)(new Shortlist(shortlist, Ascending))
-            rows.foreach { case (id, cell, codes) =>
-              var i = 0
-              while (i < pr.qIds.length) {
-                val r = pr.rank(i)(cell)
-                if (r > 0 && !(excludeSelf && pr.qIds(i) == id)) {
-                  val hit = (Quantizer.adc(pr.tables(i)(cell), codes, k), id)
-                  var j = 0
-                  while (j < g) { if (r <= grid(j)) lists(i * g + j).offer(hit); j += 1 }
-                }
-                i += 1
-              }
-            }
-            lists.iterator.zipWithIndex.flatMap { case (l, at) => l.hits.map((at, _)) }
-          }.collect()
-          .groupBy(_._1)
-          .map { case (at, hs) => at -> hs.map(_._2).sorted(Ascending).take(shortlist) }
-        finally bc.destroy()
+    import spark.implicits._
+    val k = q.k
+    val g = grid.length
+    val short = TopK.pass(candidates(index, probed).as[(Long, Int, Array[Int])].rdd,
+        new Probes(qs.map(_._1), rank, tables), qs.length * g,
+        if (probed.isEmpty) 0 else shortlist, TopK.Ascending) { (pr, rows, lists) =>
+      rows.foreach { case (id, cell, codes) =>
+        var i = 0
+        while (i < pr.qIds.length) {
+          val r = pr.rank(i)(cell)
+          if (r > 0 && !(excludeSelf && pr.qIds(i) == id)) {
+            val hit = (Quantizer.adc(pr.tables(i)(cell), codes, k), id)
+            var j = 0
+            while (j < g) { if (r <= grid(j)) lists(i * g + j).offer(hit); j += 1 }
+          }
+          i += 1
+        }
       }
+    }
     // 3. exact re-rank of the shortlists on the driver
-    val ids = short.valuesIterator.flatMap(_.iterator.map(_._2)).toSet
+    val ids = short.iterator.flatMap(_.iterator.map(_._2)).toSet
     val raw: Map[Long, Array[Array[Float]]] =
       if (ids.isEmpty) Map.empty
       else vectors.select(col("vec_id"), col("embedding"))
@@ -341,10 +298,10 @@ object IvfPq {
     val rows = for {
       j <- grid.indices
       i <- byQuery
-      ((cos, id), r) <- short.getOrElse(i * grid.length + j, Array.empty[(Double, Long)])
+      ((cos, id), r) <- short(i * g + j)
         .flatMap { case (_, id) => raw.getOrElse(id, Array.empty[Array[Float]])
           .map(v => (Quantizer.round(CosineSimilarity.cosine(qs(i)._2, v), 6), id)) }
-        .sorted(Descending).take(topK).zipWithIndex
+        .sorted(TopK.Descending).take(topK).zipWithIndex
     } yield Row(grid(j), qs(i)._1, id, cos, r + 1)
     spark.createDataFrame(rows.asJava, GridSchema)
   }

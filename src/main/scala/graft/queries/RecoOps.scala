@@ -59,7 +59,7 @@ object RecoOps {
 
     GraftQuery(
       "q61_als_recommend",
-      "M1–M6+U1 end-to-end: synth ratings → StringIndexer×2 + ALS pipeline (trained once per session via the build:als_model memo — the train/serve accounting split) → top-5 per user for the first 2000 indexed users: their factors broadcast over one pass of the item factors (MLlib's sgemv on MLlib's item blocks, so scores are MLlib's bit for bit; ties to the lower item index), per-partition heaps merged on the driver, ids mapped back through the indexers' labels. Float factorization is seeded but not bit-stable across engines — rows-only check; invariants in scalatest.",
+      "M1–M6+U1 end-to-end: synth ratings → StringIndexer×2 + ALS pipeline (trained once per session via the build:als_model memo — the train/serve accounting split) → top-5 per user for the first 2000 indexed users: their factors broadcast over one pass of the item factors (MLlib's sgemv on MLlib's item blocks, so scores are MLlib's bit for bit; exact ties to the higher item index, as in MLlib's final list), per-partition heaps merged on the driver (TopK.pass), ids mapped back through the indexers' labels. Float factorization is seeded but not bit-stable across engines — rows-only check; invariants in scalatest.",
       (s, d) =>
         Recommender.recommendAll(alsModel(s, d), 5, userLimit = Some(2000))
           .select(col("userId"), col("itemId"), col("rank")),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
-import graft.ext.{IvfPq, Quantizer}
+import graft.ext.{Quantizer, TopK}
 import graft.{GraftQuery, Observed, Tables}
 import graft.Fns._
 
@@ -329,7 +329,7 @@ object TextOps {
     * 0.5)), 6) with `StrictMath.log` (Spark's `Log`), the score is
     * round(Σ idf, 6) — its terms are 6dp values, so the summation order
     * cannot move the rounded sum — and ranks follow (score desc, doc_id)
-    * in Spark's double order (`IvfPq.Descending`). LexicalKernelSpec
+    * in Spark's double order (`TopK.Descending`). LexicalKernelSpec
     * keeps the join/window plan this replaced as the reference.
     */
   private[graft] def lexicalTopK(s: SparkSession, d: String,
@@ -351,36 +351,28 @@ object TextOps {
     val postings = queries.zipWithIndex.flatMap { case ((_, ts), i) =>
       ts.flatMap(tok => idf.get(tok).map(tok -> (i, _)))
     }.groupMap(_._1)(_._2).map { case (tok, ps) => tok -> ps.toArray }
-    val hits: Array[(Int, (Double, Long))] =
-      if (postings.isEmpty) Array.empty
-      else {
-        import s.implicits._
-        val bc = s.sparkContext.broadcast((qIds, postings))
-        try docToks.as[(Long, Array[String])].rdd.mapPartitions { rows =>
-          val (ids, post) = bc.value
-          val tops = Array.fill(ids.length)(new IvfPq.Shortlist(k, IvfPq.Descending))
-          val sums = new Array[Double](ids.length)
-          val hit = new Array[Boolean](ids.length)
-          val touched = scala.collection.mutable.ArrayBuffer.empty[Int]
-          rows.foreach { case (doc, ts) =>
-            ts.foreach(tok => post.get(tok).foreach(_.foreach { case (i, w) =>
-              if (!hit(i)) { hit(i) = true; touched += i }
-              sums(i) += w
-            }))
-            touched.foreach { i =>
-              if (ids(i) != doc) tops(i).offer((Quantizer.round(sums(i), 6), doc))
-              sums(i) = 0.0
-              hit(i) = false
-            }
-            touched.clear()
-          }
-          tops.iterator.zipWithIndex.flatMap { case (t, i) => t.hits.map((i, _)) }
-        }.collect()
-        finally bc.destroy()
+    import s.implicits._
+    val tops = TopK.pass(docToks.as[(Long, Array[String])].rdd, (qIds, postings),
+        qIds.length, if (postings.isEmpty) 0 else k, TopK.Descending) {
+        case ((ids, post), rows, tops) =>
+      val sums = new Array[Double](ids.length)
+      val hit = new Array[Boolean](ids.length)
+      val touched = scala.collection.mutable.ArrayBuffer.empty[Int]
+      rows.foreach { case (doc, ts) =>
+        ts.foreach(tok => post.get(tok).foreach(_.foreach { case (i, w) =>
+          if (!hit(i)) { hit(i) = true; touched += i }
+          sums(i) += w
+        }))
+        touched.foreach { i =>
+          if (ids(i) != doc) tops(i).offer((Quantizer.round(sums(i), 6), doc))
+          sums(i) = 0.0
+          hit(i) = false
+        }
+        touched.clear()
       }
-    hits.groupMap(_._1)(_._2).toSeq.sortBy(p => qIds(p._1)).flatMap { case (i, hs) =>
-      hs.sorted(IvfPq.Descending).take(k).zipWithIndex
-        .map { case ((_, doc), r) => (qIds(i), doc, r + 1) }
+    }
+    qIds.indices.sortBy(qIds(_)).flatMap { i =>
+      tops(i).iterator.zipWithIndex.map { case ((_, doc), r) => (qIds(i), doc, r + 1) }
     }
   }
 
@@ -402,7 +394,7 @@ object TextOps {
     val rows = ranks.toSeq.groupBy(_._1._1).toSeq.sortBy(_._1).flatMap { case (q, ps) =>
       ps.map { case ((_, doc), (l, dn)) =>
         ((Quantizer.round(term(l) + term(dn), 6), doc), (l, dn))
-      }.sortBy(_._1)(IvfPq.Descending).zipWithIndex
+      }.sortBy(_._1)(TopK.Descending).zipWithIndex
         .map { case (((rrf, doc), (l, dn)), r) => Row(q, doc, l, dn, rrf, r + 1) }
     }
     s.createDataFrame(rows.asJava, RrfSchema)
@@ -1925,9 +1917,8 @@ object TextOps {
 
     GraftQuery(
       "q156_hybrid_rrf",
-      "Hybrid retrieval fusion — reciprocal-rank fusion (RRF, Cormack et al. 2009, the k=60 constant every production hybrid search uses) of a LEXICAL ranking and a DENSE ranking for the same query set, the modern two-tower retrieval shape: query docs (doc_id < 5; doc_id = vec_id links the modalities, the q123 convention) rank the corpus (a) lexically by summed Lucene idf over shared distinct tokens (the q141 statistics on set-semantics tokens) and (b) densely by embedding cosine (the q50 kernel), each arm keeping its top-10 (self excluded, rounded scores, doc_id tiebreak); fusion outer-merges the two lists per (query, doc) and scores 1/(60+rank) per arm (0 for an arm that missed the doc — reported as rank 0, so the output also audits ARM DISAGREEMENT, which on this fixture is total: embeddings are independent of text, exactly what q123 exposes). Determinism: idf terms round at 6dp before summing, cosines at 6dp, RRF scores at 6dp from exact integer ranks. Scale: the lexical arm reads the 5 query docs' token arrays, their tokens' df and n_docs to the driver, then scores in one pass over the memoized doc-keyed token table with a bounded heap per query; the dense arm broadcasts 5 query vectors over one corpus pass; fusion merges the two <=10-row-per-query lists on the driver — linear everywhere, the corpus is never pairwise.",
+      "Hybrid retrieval fusion — reciprocal-rank fusion (RRF, Cormack et al. 2009, the k=60 constant every production hybrid search uses) of a LEXICAL ranking and a DENSE ranking for the same query set, the modern two-tower retrieval shape: query docs (doc_id < 5; doc_id = vec_id links the modalities, the q123 convention) rank the corpus (a) lexically by summed Lucene idf over shared distinct tokens (the q141 statistics on set-semantics tokens) and (b) densely by embedding cosine (the q50 kernel), each arm keeping its top-10 (self excluded, rounded scores, doc_id tiebreak); fusion outer-merges the two lists per (query, doc) and scores 1/(60+rank) per arm (0 for an arm that missed the doc — reported as rank 0, so the output also audits ARM DISAGREEMENT, which on this fixture is total: embeddings are independent of text, exactly what q123 exposes). Determinism: idf terms round at 6dp before summing, cosines at 6dp, RRF scores at 6dp from exact integer ranks. Scale: the lexical arm reads the 5 query docs' token arrays, their tokens' df and n_docs to the driver, then scores in one pass over the memoized doc-keyed token table with a bounded heap per query; the dense arm is the q50 kernel: 5 query vectors broadcast over one corpus pass with a bounded heap per query, merged on the driver; fusion merges the two <=10-row-per-query lists on the driver — linear everywhere, the corpus is never pairwise.",
       (s, d) => {
-        graft.functions.CosineSimilarity.ensureRegistered(s)
         // lexical arm through the MEMOIZED corpus stats + the shared
         // lexicalTopK/rrfFuse kernels — the same definitions
         // GraftEngine.hybridTopK serves from, so the registered query
@@ -1937,16 +1928,10 @@ object TextOps {
         val qs = docToks.filter(col("doc_id") < 5).collect().toSeq
           .map(r => (r.getLong(0), r.getSeq[String](1).toArray))
         val lex = lexicalTopK(s, d, qs, 10)
-        val e = Tables.load(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-        val q = e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val dense = e.join(broadcast(q), col("q_id") =!= col("vec_id"))
-          .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
-          .withColumn("dense_rn", row_number().over(
-            Window.partitionBy(col("q_id")).orderBy(col("cos_r").desc, col("vec_id"))))
-          .filter(col("dense_rn") <= 10)
-          .select(col("q_id"), col("vec_id"), col("dense_rn")).collect().toSeq
-          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+        val e = Tables.load(s, d, "embeddings")
+        val dense = VectorOps.exactTopKOf(e, e.filter(col("vec_id") < 5)
+            .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")), 10)
+          .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
         rrfFuse(s, lex, dense)
       },
       Some("WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents), " +

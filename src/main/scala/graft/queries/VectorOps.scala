@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.Fns._
+import graft.ext.{Quantizer, TopK}
 import graft.functions.CosineSimilarity
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
@@ -177,8 +178,7 @@ object VectorOps {
       CosineSimilarity.ensureRegistered(s)
       val e = regimeCorpus(s, d, regime)
       val index = regimeIndex(s, d, regime)
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+      val q = probeQueries(e)
       // the exact answer set is the shared memo (round-17 item 4) —
       // the calibration prices ONLY the probe-grid sweep, and the whole
       // grid is ONE search (IvfPq.searchGrid: one code pass scores every
@@ -331,6 +331,29 @@ object VectorOps {
       .select(col("vec_id"), grp.as("label"), emb.as("embedding"))
   }
 
+  /** Exact cosine top-5 per probe query (vec_id < 10), ONE memoized
+    * corpus pass per (session, dir, regime) — the recall kernels
+    * (q147/q201), both calibrations' exact arms and q210 consume
+    * PREFIXES of this one answer set (before, `build:ann_calibration`
+    * re-paid the exact arm q147/q201 had priced in the same session).
+    * Ordering is the engine-wide deterministic rank: cosine rounded to
+    * 6dp descending, vec_id tiebreak.
+    */
+  private[graft] def exactAnnTop5(s: SparkSession, d: String,
+      regime: String): Seq[(Long, Long, Int)] =
+    served(s, d, s"annexact5_$regime") {
+      val e = regimeCorpus(s, d, regime)
+      exactTopKOf(e, probeQueries(e), 5).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSeq
+    }
+
+  /** `exactAnnTop5`'s prefix-3 as a local (q_id, vec_id) frame. */
+  private def exactAnnTop3(s: SparkSession, d: String, regime: String): DataFrame = {
+    import s.implicits._
+    exactAnnTop5(s, d, regime).filter(_._3 <= 3)
+      .map { case (qid, vid, _) => (qid, vid) }.toDF("q_id", "vec_id")
+  }
+
   /** q147/q201's shared recall@3 kernel (the funnelVerdict sharing
     * rule: one body, two regimes): `e` carries (vec_id, embedding,
     * bucket, cell); queries are vec_id < 10. For each query the exact
@@ -338,32 +361,6 @@ object VectorOps {
     * (IVF) single-probe top-3; recall is an exact integer count over
     * deterministic 6dp-rounded-cosine rankings with vec_id tiebreaks.
     */
-  /** Exact cosine top-5 per probe query (vec_id < 10), ONE memoized
-    * corpus pass per (session, dir, regime) — the recall kernels
-    * (q147/q201) and the nProbe calibration's exact arm all consume
-    * PREFIXES of this one answer set (round-17 item 4: before this,
-    * `build:ann_calibration` re-paid the exact arm q147/q201 had
-    * already priced in the same session). Ordering is the engine-wide
-    * deterministic rank: cosine rounded to 6dp descending, vec_id
-    * tiebreak — so the prefix-3 rows are bit-identical to what the
-    * kernels computed inline before.
-    */
-  private[graft] def exactAnnTop5(s: SparkSession, d: String,
-      regime: String): Seq[(Long, Long, Int)] =
-    served(s, d, s"annexact5_$regime") {
-      CosineSimilarity.ensureRegistered(s)
-      val e = regimeCorpus(s, d, regime)
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_r").desc, col("vec_id"))
-      e.join(broadcast(q), col("q_id") =!= col("vec_id"))
-        .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-        .select(col("q_id"), col("vec_id"), col("rn")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    }
-
   private def annRecallOver(s: SparkSession, d: String, regime: String,
       e: DataFrame): DataFrame = {
     val q = e.filter(col("vec_id") < 10)
@@ -379,12 +376,8 @@ object VectorOps {
         .select(col("q_id"), col("vec_id"))
     }
     // the exact reference is the memoized answer set's prefix-3 — same
-    // ranking expression, same corpus, zero extra corpus passes
-    val exact = {
-      import s.implicits._
-      exactAnnTop5(s, d, regime).filter(_._3 <= 3)
-        .map { case (qid, vid, _) => (qid, vid) }.toDF("q_id", "vec_id")
-    }
+    // ranking, same corpus, zero extra corpus passes
+    val exact = exactAnnTop3(s, d, regime)
     def arm(name: String, cand: DataFrame) =
       exact.join(top3(cand).withColumn("hit", lit(1)),
           Seq("q_id", "vec_id"), "left")
@@ -657,7 +650,7 @@ object VectorOps {
     * of `grid`, run on the driver. Every (point, group, query) walk
     * keeps the candidates it scored as vec_id → cos_r; its beam is the
     * top `beam` of them by (cos_r desc, vec_id) in Spark's sort order
-    * (`IvfPq.Descending`: NaN first — a zero vector scores NaN — and
+    * (`TopK.Descending`: NaN first — a zero vector scores NaN — and
     * −0.0 = 0.0). Each hop fetches, for all walks at once, the
     * adjacency rows of the beams' union and the embeddings of the
     * neighbors some walk has not scored yet, and scores them with the
@@ -737,7 +730,7 @@ object VectorOps {
           scored(id) = graft.ext.Quantizer.round(
             CosineSimilarity.cosine(qEmb, emb), 6)
       def ranked: Seq[(Double, Long)] = scored.toSeq.map(_.swap)
-        .sorted(graft.ext.IvfPq.Descending)
+        .sorted(TopK.Descending)
     }
     val walks = for {
       (b, e) <- grid
@@ -966,23 +959,43 @@ object VectorOps {
     annArmTable(s, d, regime).filter(_.recall >= targetRecall)
       .minBy(_.cost)
 
-  /** Brute-force cosine top-k of an arbitrary query frame (q_id,
-    * q_emb) — q50's kernel over external queries, the exact serving
-    * arm the cross-arm tuner falls back to.
+  /** A corpus's fixture probe queries (vec_id < 10) as (q_id, q_emb). */
+  private def probeQueries(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** Exact cosine top-k (the q50 kernel): per query (q_id, q_emb), the
+    * `topK` vectors of `corpus` (vec_id, embedding) by (round(cosine, 6)
+    * desc, vec_id) in Spark's double order (a zero vector's NaN first),
+    * skipping vec_id = q_id when `excludeSelf` — the rows of the
+    * broadcast-join/window plan ExactKernelSpec keeps as the reference.
+    * One `TopK.pass`, after the query collect (none for a local frame);
+    * a local (q_id, vec_id, cos_r, rn) frame in (q_id, rn) order.
     */
-  private[graft] def exactTopKOf(s: SparkSession, d: String,
-      queries: DataFrame, topK: Int,
-      excludeSelf: Boolean = true): DataFrame = {
-    CosineSimilarity.ensureRegistered(s)
-    val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    val pairs = e.join(broadcast(queries),
-      if (excludeSelf) col("q_id") =!= col("vec_id") else lit(true))
-      .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_r").desc, col("vec_id"))
-    pairs.withColumn("rn", row_number().over(w)).filter(col("rn") <= topK)
-      .select(col("q_id"), col("vec_id"), col("cos_r"), col("rn"))
-      .orderBy(col("q_id"), col("rn"))
+  private[graft] def exactTopKOf(corpus: DataFrame, queries: DataFrame,
+      topK: Int, excludeSelf: Boolean = true): DataFrame = {
+    val s = corpus.sparkSession
+    import s.implicits._
+    val qs = queries.select(col("q_id"), col("q_emb")).as[(Long, Array[Float])].collect()
+    val ids = qs.map(_._1).distinct.sorted
+    // each query row's list: one list per q_id, as the window partitions
+    val at = qs.map(q => java.util.Arrays.binarySearch(ids, q._1))
+    val tops = TopK.pass(corpus.select(col("vec_id"), col("embedding"))
+        .as[(Long, Array[Float])].rdd, (qs, at), ids.length, topK, TopK.Descending) {
+        case ((qs, at), rows, tops) =>
+      rows.foreach { case (id, v) =>
+        var i = 0
+        while (i < qs.length) {
+          if (!(excludeSelf && qs(i)._1 == id))
+            tops(at(i)).offer((Quantizer.round(CosineSimilarity.cosine(qs(i)._2, v), 6), id))
+          i += 1
+        }
+      }
+    }
+    val rows = ids.indices.flatMap { i =>
+      tops(i).iterator.zipWithIndex.map { case ((cos, v), r) => Row(ids(i), v, cos, r + 1) }
+    }
+    s.createDataFrame(rows.asJava, ArmSchema)
   }
 
   /** Recall-targeted serving across ALL arms: serve `queries` from
@@ -1000,7 +1013,7 @@ object VectorOps {
       case "ivfpq" =>
         annTopK(s, d, queries, topK, pick.p1, pick.p2, excludeSelf)
       case "exact" =>
-        exactTopKOf(s, d, queries, topK, excludeSelf)
+        exactTopKOf(t(s, d, "embeddings"), queries, topK, excludeSelf)
       case _ =>
         val (base, adj) = regimeAdj(s, d)
         val qg = queries.select(lit("isotropic").as("__grp"),
@@ -1010,7 +1023,7 @@ object VectorOps {
         // the walk's frame is local: rank it on the driver
         val rows = topk.select(col("q_id"), col("vec_id"), col("cos_r")).collect()
           .groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (q, rs) =>
-            rs.map(r => (r.getDouble(2), r.getLong(1))).sorted(graft.ext.IvfPq.Descending)
+            rs.map(r => (r.getDouble(2), r.getLong(1))).sorted(TopK.Descending)
               .zipWithIndex.map { case ((cos, v), r) => Row(q, v, cos, r + 1) }
           }
         s.createDataFrame(rows.asJava, ArmSchema)
@@ -1170,20 +1183,10 @@ object VectorOps {
 
     GraftQuery(
       "q50_cosine_topk",
-      "Brute-force cosine top-5 for a small query set (vec_id < 10) against the full corpus: broadcast the queries, one pass over the corpus, per-query top-k via row_number window. The exact-ANN baseline.",
+      "Brute-force cosine top-5 for a small query set (vec_id < 10) against the full corpus: broadcast the queries, one pass over the corpus keeping a bounded top-k heap per query in each partition, merged on the driver (the TopK.pass kernel, no shuffle or window). The exact-ANN baseline.",
       (s, d) => {
-        CosineSimilarity.ensureRegistered(s)
-        val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val pairs = e.join(broadcast(q), col("q_id") =!= col("vec_id"))
-          .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_r").desc, col("vec_id"))
-        pairs.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("vec_id"), col("cos_r"), col("rn"))
-          .orderBy(col("q_id"), col("rn"))
+        val e = t(s, d, "embeddings")
+        exactTopKOf(e, probeQueries(e), 5)
       },
       Some(exactTopkSql)),
 
@@ -1315,19 +1318,16 @@ object VectorOps {
 
     GraftQuery(
       "q157_ann_ndcg",
-      "nDCG@10 of the exact dense ranking, relevance = label match — the graded-ranking quality metric (beside q147's flat recall) every retrieval deployment reports: for each query vector (vec_id < 10), the corpus ranks by 6dp-rounded cosine (the q50 kernel, self excluded), top-10 kept, rel(d) = 1 iff label(d) = label(q); DCG discounts by log2(rank+1); the IDEAL DCG uses the query's true relevant-set size (same-label corpus count minus self, from a broadcast label rollup) capped at the cutoff, so a query with only 3 relevant docs is not punished for 7 unfillable slots. Each 1/log2 term rounds at 6dp before summing (the shared ln/log2-ulp rule) and ranks are exact integers, so ndcg hashes bit-stable. The honest number on this isotropic fixture is near-zero — the same calibration story q147 tells for recall, now in the graded metric a dashboard actually plots. Scale: one broadcast-query corpus pass + a 10-key window for the ranking, a label-key rollup for the relevant-set sizes, and a 10-row grid join for IDCG — nothing beyond the q50 shapes.",
+      "nDCG@10 of the exact dense ranking, relevance = label match — the graded-ranking quality metric (beside q147's flat recall) every retrieval deployment reports: for each query vector (vec_id < 10), the corpus ranks by 6dp-rounded cosine (the q50 kernel, self excluded), top-10 kept, rel(d) = 1 iff label(d) = label(q); DCG discounts by log2(rank+1); the IDEAL DCG uses the query's true relevant-set size (same-label corpus count minus self, from a broadcast label rollup) capped at the cutoff, so a query with only 3 relevant docs is not punished for 7 unfillable slots. Each 1/log2 term rounds at 6dp before summing (the shared ln/log2-ulp rule) and ranks are exact integers, so ndcg hashes bit-stable. The honest number on this isotropic fixture is near-zero — the same calibration story q147 tells for recall, now in the graded metric a dashboard actually plots. Scale: the q50 kernel for the ranking (one broadcast-query corpus pass with a bounded heap per query, merged on the driver), a join of its <=100 rows to their labels, a label-key rollup for the relevant-set sizes, and a 10-row grid join for IDCG — nothing beyond the q50 shapes.",
       (s, d) => {
-        CosineSimilarity.ensureRegistered(s)
         val e = t(s, d, "embeddings").select(col("vec_id"), col("label"), col("embedding"))
         val labelN = e.groupBy(col("label")).agg(count(lit(1)).as("n_label"))
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-            col("embedding").as("q_emb"))
-        val top = e.join(broadcast(q), col("q_id") =!= col("vec_id"))
-          .withColumn("cos_r", round(expr("cosine_sim(q_emb, embedding)"), 6))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("q_id")).orderBy(col("cos_r").desc, col("vec_id"))))
-          .filter(col("rn") <= 10)
+        // the kernel's ≤ 100 rows, with the labels of both ends joined on
+        val ranked = exactTopKOf(e, probeQueries(e), 10)
+        val labels = e.select(col("vec_id"), col("label"))
+        val top = ranked.join(labels, Seq("vec_id"))
+          .join(labels.select(col("vec_id").as("q_id"), col("label").as("q_label")),
+            Seq("q_id"))
         val dcg = top
           .withColumn("rel", when(col("label") === col("q_label"), 1.0).otherwise(0.0))
           .groupBy(col("q_id"), col("q_label"))
@@ -2051,8 +2051,9 @@ object VectorOps {
         "entries + hops·beam·degree, independent of corpus size (the " +
         "property that makes graph ANN serve at 100 TB; Round19OpsSpec pins " +
         "candidates-visited ≪ corpus). Recall is measured against the exact " +
-        "q50 kernel on the SAME frames, isotropic (the honest floor — a " +
-        "navigable graph cannot beat geometry with no structure) and " +
+        "q50 kernel on the SAME frames (the shared exact top-5 memo's " +
+        "prefix-3), isotropic (the honest floor — a navigable graph " +
+        "cannot beat geometry with no structure) and " +
         "clustered (where the walk climbs its cluster and recall recovers) " +
         "— the two calibration rows an operator compares against q147/q201 " +
         "before picking a serving arm. ORACLE-CHECKED via the exported-state " +
@@ -2062,18 +2063,9 @@ object VectorOps {
         "arithmetic AND the exact arm are cross-engine, only the walk " +
         "itself is taken from the export.",
       (s, d) => {
-        CosineSimilarity.ensureRegistered(s)
-        graphBeamRegimes(s, d).map { case (regime, e0, topk, _) =>
-          val q = e0.filter(col("vec_id") < 10)
-            .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-          val pairs = e0.join(broadcast(q), col("q_id") =!= col("vec_id"))
-            .withColumn("cos_r",
-              round(expr("cosine_sim(q_emb, embedding)"), 6))
-          val w = Window.partitionBy(col("q_id"))
-            .orderBy(col("cos_r").desc, col("vec_id"))
-          val exact = pairs.withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= 3).select(col("q_id"), col("vec_id"))
-          exact.join(topk.select(col("q_id"), col("vec_id"))
+        graphBeamRegimes(s, d).map { case (regime, _, topk, _) =>
+          // the walk's frames are this regime's corpus (`regimeAdj`)
+          exactAnnTop3(s, d, regime).join(topk.select(col("q_id"), col("vec_id"))
               .withColumn("hit", lit(1)), Seq("q_id", "vec_id"), "left")
             .groupBy(col("q_id"))
             .agg(sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"),

@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
-import graft.ext.IvfPq
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import graft.ext.TopK
 
 /** ALS collaborative-filtering core: the reference's Recommender
   * (utils/recommender.py:64–197) rebuilt M1–M6 with one deliberate
@@ -131,18 +132,19 @@ object Recommender {
     * top-k kept on the executors) and `IndexToString` back-maps.
     * `userLimit = Some(n)` serves the users indexed below n, a
     * query-scale side: their factors are collected and broadcast, one
-    * pass over `itemFactors` keeps a bounded top-k per user in each
-    * partition, and the driver merges those and maps indices back
+    * `TopK.pass` over `itemFactors` keeps a bounded top-k per user in
+    * each partition, and the driver merges those and maps indices back
     * through `labelsArray` — two Spark jobs, and a local frame out.
     *
     * The pass scores with the routine `ALSModel.recommendForAll`
     * calls (JavaBLAS `sgemv`) on MLlib's own item blocks (each
     * partition in `blockSize` rows, in order), so every `predicted`
-    * equals MLlib's bit for bit. Exact float ties rank the lower item
-    * index first. MLlib has no tie rule to copy: it orders its final
-    * list by (score, item index) descending, but first cuts each item
-    * block to k with Guava's `greatestOf`, which leaves undefined
-    * which of the items tied at the cut survive.
+    * equals MLlib's bit for bit, and ranks as MLlib's final
+    * `collect_top_k(struct(rating, item))` does: score descending,
+    * exact float ties to the higher item index. MLlib first cuts each
+    * item block to k with Guava's `greatestOf`, which compares scores
+    * only; on RecoSpec's forced-tie model its cut keeps the same items
+    * as this rule at every k.
     */
   def recommendAll(model: PipelineModel, k: Int,
       userLimit: Option[Int] = None): DataFrame = {
@@ -169,12 +171,14 @@ object Recommender {
     }
   }
 
-  /** (score, item index) by score descending (`Float.compare`), ties
-    * to the lower item index.
+  /** (score, item index) in the order MLlib's `recommendForAll` gives
+    * its final list, `collect_top_k(struct(rating, item))`: score
+    * descending in Spark's float order (NaN above every number, −0.0 =
+    * 0.0), ties to the higher item index.
     */
   private val Best: Ordering[(Float, Int)] = (a, b) => {
-    val c = java.lang.Float.compare(b._1, a._1)
-    if (c != 0) c else Integer.compare(a._2, b._2)
+    val c = SQLOrderingUtil.compareFloats(b._1, a._1)
+    if (c != 0) c else Integer.compare(b._2, a._2)
   }
 
   /** `recommendAll`'s `userLimit = Some(n)` kernel. */
@@ -186,42 +190,33 @@ object Recommender {
       .as[(Int, Array[Float])].collect()
     val rank = als.rank
     val blockSize = als.getBlockSize
-    val hits: Array[(Int, (Float, Int))] =
-      if (users.isEmpty || k <= 0) Array.empty
-      else {
-        val bc = spark.sparkContext.broadcast(
-          (users.map(_._1), users.flatMap(_._2)))
-        try als.itemFactors.as[(Int, Array[Float])].rdd.mapPartitions { rows =>
-          val (ids, srcMat) = bc.value
-          val blas = dev.ludovic.netlib.blas.JavaBLAS.getInstance
-          val tops = Array.fill(ids.length)(new IvfPq.Shortlist(k, Best))
-          // ALSModel.blockify: the partition in blockSize-row blocks
-          rows.grouped(blockSize).foreach { block =>
-            val dstIds = block.map(_._1).toArray
-            val dstMat = block.flatMap(_._2).toArray
-            val m = dstIds.length
-            val scores = new Array[Float](m)
-            var i = 0
-            while (i < ids.length) {
-              blas.sgemv("T", rank, m, 1f, dstMat, 0, rank, srcMat, i * rank, 1,
-                0f, scores, 0, 1)
-              val top = tops(i)
-              var j = 0
-              while (j < m) {
-                if (top.size < k || java.lang.Float.compare(scores(j), top.worst._1) >= 0)
-                  top.offer((scores(j), dstIds(j)))
-                j += 1
-              }
-              i += 1
-            }
+    val tops = TopK.pass(als.itemFactors.as[(Int, Array[Float])].rdd,
+        users.flatMap(_._2), users.length, k, Best) { (srcMat, rows, tops) =>
+      val blas = dev.ludovic.netlib.blas.JavaBLAS.getInstance
+      // ALSModel.blockify: the partition in blockSize-row blocks
+      rows.grouped(blockSize).foreach { block =>
+        val dstIds = block.map(_._1).toArray
+        val dstMat = block.flatMap(_._2).toArray
+        val m = dstIds.length
+        val scores = new Array[Float](m)
+        var i = 0
+        while (i < tops.length) {
+          blas.sgemv("T", rank, m, 1f, dstMat, 0, rank, srcMat, i * rank, 1,
+            0f, scores, 0, 1)
+          val top = tops(i)
+          var j = 0
+          while (j < m) {
+            if (top.size < k || SQLOrderingUtil.compareFloats(scores(j), top.worst._1) >= 0)
+              top.offer((scores(j), dstIds(j)))
+            j += 1
           }
-          tops.iterator.zipWithIndex.flatMap { case (t, i) => t.hits.map((ids(i), _)) }
-        }.collect()
-        finally bc.destroy()
+          i += 1
+        }
       }
-    val rows = hits.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (u, hs) =>
-      hs.map(_._2).sorted(Best).take(k).zipWithIndex.map { case ((score, item), r) =>
-        Row(userLabels(u), itemLabels(item), r + 1, score)
+    }
+    val rows = users.indices.sortBy(users(_)._1).flatMap { i =>
+      tops(i).zipWithIndex.map { case ((score, item), r) =>
+        Row(userLabels(users(i)._1), itemLabels(item), r + 1, score)
       }
     }
     spark.createDataFrame(rows.asJava, RecSchema)

@@ -111,6 +111,16 @@ class LexicalKernelSpec extends SparkSpec {
     finally TextOps.releaseCaches()
   }
 
+  test("a batch whose tokens no document holds gets no rows and no corpus pass") {
+    val q = queryFrame(Seq((0L, "zz yy"), (1L, "qqq")))
+    try {
+      TextOps.warmLexStats(spark, sfDir)
+      val (lex, jobs) = jobsOf(TextOps.lexicalTopK(spark, sfDir, TextOps.queryTokens(q), 10))
+      assert(lex.isEmpty)
+      assert(jobs === 1, "only the df collect runs")
+    } finally TextOps.releaseCaches()
+  }
+
   test("a warm hybridTopK serve of a local batch runs at most 5 Spark jobs, the same on every rep") {
     val engine = new GraftEngine(spark, sfDir)
     try {

@@ -115,7 +115,7 @@ class RecoSpec extends SparkSpec {
     }
   }
 
-  test("userLimit ranks exact score ties by the lower item index") {
+  test("userLimit ranks exact score ties as MLlib's all-users top-k does") {
     // items i4 and i5 get the same rating from every user, so ALS
     // solves the same normal equations for both: equal factors, and an
     // exact score tie for every user
@@ -127,22 +127,20 @@ class RecoSpec extends SparkSpec {
     val factors = tied.stages(2).asInstanceOf[ALSModel].itemFactors.collect()
       .map(r => itemLabels(r.getInt(0)) -> r.getSeq[Float](1)).toMap
     assert(factors("i4") === factors("i5"), "the fixture must force an exact tie")
-    val lower = Seq("i4", "i5").minBy(itemLabels.indexOf(_))
+    // the tie ranks the higher item index first, in adjacent ranks
+    val higher = Seq("i4", "i5").maxBy(itemLabels.indexOf(_))
     val full = recRows(Recommender.recommendAll(tied, 6, userLimit = Some(100)))
     full.groupBy(_._1).foreach { case (u, recs) =>
       val byItem = recs.map(r => r._2 -> r).toMap
-      val (a, b) = (byItem(lower), byItem(Seq("i4", "i5").filterNot(_ == lower).head))
+      val (a, b) = (byItem(higher), byItem(Seq("i4", "i5").filterNot(_ == higher).head))
       assert(a._4 === b._4, s"$u: no tie")
       assert(a._3 + 1 === b._3, s"$u: ${recs.sortBy(_._3)}")
     }
-    // every cut keeps the first k of the full ranking
+    // every cut, ties included, is MLlib's rows bit for bit
     (1 to 5).foreach { k =>
       assert(recRows(Recommender.recommendAll(tied, k, userLimit = Some(100))) ===
-        full.filter(_._3 <= k), s"k=$k")
+        mllibSubset(tied, k, 100), s"k=$k")
     }
-    // and the tied scores are MLlib's, bit for bit
-    assert(full.map(r => (r._1, r._4)).sorted ===
-      mllibSubset(tied, 6, 100).map(r => (r._1, r._4)).sorted)
   }
 
   test("q61 serves from a built model in at most 3 Spark jobs, the same on every rep") {
