@@ -1506,8 +1506,7 @@ object VectorOps {
       (s, d) => {
         val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val index = served(s, d, "ivf") { graft.ext.AnnIndex.build(s, e, k = 16) }
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+        val q = probeQueries(e)
         graft.ext.AnnIndex.search(index, q, topK = 5, nProbe = 8)
           .orderBy(col("q_id"), col("rn"))
       },
@@ -1521,8 +1520,7 @@ object VectorOps {
         // memoized: the codes cache lives for the session and is
         // unpersisted by releaseCaches(), not per invocation
         val index = served(s, d, "pq") { graft.ext.PqIndex.build(s, e, dim = 64) }
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+        val q = probeQueries(e)
         graft.ext.PqIndex.searchReRanked(index, e, q, topK = 5)
           .orderBy(col("q_id"), col("rn"))
       },
@@ -1535,8 +1533,7 @@ object VectorOps {
         // the shared serving entry (memoized index, reused by q139 and
         // GraftEngine.annTopK) at the registered serving configuration
         val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+        val q = probeQueries(e)
         annTopK(s, d, q, topK = 5, nProbe = 12, shortlist = 96)
       },
       None),
@@ -1549,8 +1546,7 @@ object VectorOps {
         val index = served(s, d, "ivfpq") {
           graft.ext.IvfPq.build(s, e, dim = 64, kCells = 16, kCodes = 64)
         }
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+        val q = probeQueries(e)
         // exhaustive shortlist: `srn <= shortlist` only needs an upper
         // bound, so Int.MaxValue covers any corpus without the eager
         // count() job (and without the Long→Int overflow past 2^31
@@ -1912,8 +1908,7 @@ object VectorOps {
       (s, d) => {
         CosineSimilarity.ensureRegistered(s)
         val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+        val q = probeQueries(e)
         val wF = Window.partitionBy(col("q_id"))
           .orderBy(col("cos_full").desc, col("vec_id"))
         val wT = Window.partitionBy(col("q_id"))
