@@ -34,16 +34,13 @@ import graft.functions.CosineSimilarity
   * (IvfPqSpec bounds it at 10 jobs; 4 at the fixture's 500 vectors).
   *
   * Serve posture: query-scale state goes to the driver, corpus-scale
-  * state never does. The quantizers already live there, so the probe
-  * ranking, each query's residual per probed cell and that cell's ADC
-  * table are plain loops over the collected query batch, and the
-  * tables reach the executors as one broadcast variable. The code
-  * table persists PARTITIONED BY CELL, so the one pass over it reads
-  * only the probed cells' files (a static PartitionFilter, which
-  * IvfPqSpec proves); each partition returns only a bounded shortlist
-  * per query, and only the shortlisted ids' raw vectors come back for
-  * the re-rank. A search is at most three Spark jobs for any grid of
-  * nProbe values.
+  * state never does. The probe ranking and each query's ADC table per
+  * probed cell are loops over the collected query batch; the tables
+  * ride one broadcast into the one pass over the code table, which
+  * persists PARTITIONED BY CELL and so reads only the probed cells'
+  * files (a static PartitionFilter, which IvfPqSpec proves). Each
+  * partition returns a bounded shortlist per query, and only the
+  * shortlisted ids' raw vectors come back for the re-rank.
   * Codes quantize PER-CELL RESIDUALS (see `build`) — the full IVFADC
   * layout, not the flat variant — which costs nothing at search time
   * beyond building the small ADC table per (query, probed cell)
@@ -197,11 +194,12 @@ object IvfPq {
   def append(index: Index, newVectors: DataFrame): Index =
     index.copy(cells = index.cells.unionByName(encode(index, newVectors)))
 
-  /** The first `nProbe` cells of the unit query `q`: centroids ranked
-    * by `cosine_sim` as `TopK.Descending` orders them.
+  /** The first `nProbe` cells of `cents` for the query `q` as given:
+    * cells ranked by `cosine_sim` as `TopK.Descending` orders them.
     */
-  private[graft] def probe(index: Index, q: Array[Float], nProbe: Int): Array[Int] =
-    index.quantizers.cents.zipWithIndex
+  private[graft] def probe(cents: Array[Array[Double]], q: Array[Float],
+      nProbe: Int): Array[Int] =
+    cents.zipWithIndex
       .map { case (c, cell) => (CosineSimilarity.cosine(q, c.map(_.toFloat)), cell.toLong) }
       .sorted(TopK.Descending).take(nProbe).map(_._2.toInt)
 
@@ -217,7 +215,7 @@ object IvfPq {
     * its id, every cell's probe rank (1-based, 0 = not probed) and
     * every probed cell's ADC table (`null` elsewhere).
     */
-  private final class Probes(val qIds: Array[Long], val rank: Array[Array[Int]],
+  private[ext] final class Probes(val qIds: Array[Long], val rank: Array[Array[Int]],
       val tables: Array[Array[Array[Double]]]) extends Serializable
 
   /** IVFADC search at every nProbe of `probeGrid`: probe → ADC shortlist
@@ -227,30 +225,21 @@ object IvfPq {
     * vec_id, cos_r, rn) in (p, q_id, rn) order — per p, q50's serving
     * schema, so the approximate path is drop-in for the exact one.
     *
-    * Scale contract: query-scale state goes to the driver, corpus-scale
-    * state never does (see the serve posture above). A search is at
-    * most three Spark jobs: the query collect (none for a local
-    * frame), the one pass over the probed cells' codes, which returns
-    * at most partitions·|queries|·|grid|·shortlist (adc, vec_id) pairs,
-    * and the fetch of the merged shortlists' raw vectors. Roundings and
-    * tie-breaks are Spark's (`round`, `SQLOrderingUtil.compareDoubles`,
-    * vec_id last), so the rows equal those of the windowed plan this
-    * replaced, which IvfPqSpec keeps as the reference.
-    *
-    * `excludeSelf` (default true) drops vec_id == q_id candidates —
-    * the self-search semantics of the registered queries, where query
-    * ids ARE corpus ids. Pass false when query ids come from a
-    * different id space: a numeric collision would otherwise silently
-    * drop a true neighbor (see AnnIndex.search).
+    * A search is at most three Spark jobs for any grid: the query
+    * collect (none for a local frame), the one pass over the probed
+    * cells' codes and the fetch of the shortlists' raw vectors.
+    * Roundings and tie-breaks are Spark's (`round`,
+    * `SQLOrderingUtil.compareDoubles`, vec_id last), so the rows equal
+    * those of the windowed plan IvfPqSpec keeps as the reference.
+    * `excludeSelf` (default true) drops vec_id == q_id candidates
+    * (see AnnIndex.search).
     */
   def searchGrid(index: Index, vectors: DataFrame, queries: DataFrame,
       topK: Int, probeGrid: Seq[Int], shortlist: Int,
       excludeSelf: Boolean = true): DataFrame = {
     val spark = queries.sparkSession
     val grid = probeGrid.distinct.sorted.toArray
-    val maxProbe = grid.max
-    val qs = queries.select(col("q_id"), col("q_emb")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val qs = TopK.queries(queries)
     val q = index.quantizers
     // 1. driver: queries normalize like the index did (see encodeUnit), so
     //    the ADC tables measure L2 in the geometry the codes were
@@ -259,7 +248,7 @@ object IvfPq {
     val tables = Array.fill(qs.length)(new Array[Array[Double]](index.kCells))
     qs.indices.foreach { i =>
       val u = Quantizer.unit(qs(i)._2)
-      probe(index, u, maxProbe).zipWithIndex.foreach { case (cell, r) =>
+      probe(q.cents, u, grid.max).zipWithIndex.foreach { case (cell, r) =>
         rank(i)(cell) = r + 1
         tables(i)(cell) = Quantizer.adcTable(
           if (q.residual) Quantizer.minus(u, q.cents(cell)) else u, q.books, q.m, q.k)
@@ -267,13 +256,32 @@ object IvfPq {
     }
     val probed = (0 until index.kCells).filter(c => rank.exists(_(c) > 0))
     // 2. executors: one pass over the probed cells' codes
-    import spark.implicits._
-    val k = q.k
     val g = grid.length
-    val short = TopK.pass(candidates(index, probed).as[(Long, Int, Array[Int])].rdd,
-        new Probes(qs.map(_._1), rank, tables), qs.length * g,
-        if (probed.isEmpty) 0 else shortlist, TopK.Ascending) { (pr, rows, lists) =>
-      rows.foreach { case (id, cell, codes) =>
+    val short = adcScan(candidates(index, probed), new Probes(qs.map(_._1), rank, tables),
+      grid, q.k, if (probed.isEmpty) 0 else shortlist, excludeSelf)
+    // 3. exact re-rank of the shortlists on the driver
+    val ranked = reRank(vectors, short, topK, TopK.Descending)((l, v) =>
+      Quantizer.round(CosineSimilarity.cosine(qs(l / g)._2, v), 6))
+    val byQuery = qs.indices.sortBy(qs(_)._1)
+    val rows = for {
+      j <- grid.indices
+      i <- byQuery
+      ((cos, id), r) <- ranked(i * g + j).zipWithIndex
+    } yield Row(grid(j), qs(i)._1, id, cos, r + 1)
+    spark.createDataFrame(rows.asJava, GridSchema)
+  }
+
+  /** Step 2, the ADC scan: one `TopK.pass` over `rows` (vec_id, cell,
+    * codes). Query i offers the rows of a cell of probe rank r to list
+    * i·|grid| + j for every `grid(j)` ≥ r; each keeps `shortlist`.
+    */
+  private[ext] def adcScan(rows: DataFrame, pr: Probes, grid: Array[Int], k: Int,
+      shortlist: Int, excludeSelf: Boolean): Array[Array[(Double, Long)]] = {
+    import rows.sparkSession.implicits._
+    val g = grid.length
+    TopK.pass(rows.as[(Long, Int, Array[Int])].rdd, pr, pr.qIds.length * g,
+        shortlist, TopK.Ascending) { (pr, part, lists) =>
+      part.foreach { case (id, cell, codes) =>
         var i = 0
         while (i < pr.qIds.length) {
           val r = pr.rank(i)(cell)
@@ -286,24 +294,25 @@ object IvfPq {
         }
       }
     }
-    // 3. exact re-rank of the shortlists on the driver
+  }
+
+  /** Step 3, the exact re-rank: one collect of the shortlisted ids'
+    * raw `vectors`; list l keeps its `topK` best (score(l, v), vec_id).
+    */
+  private[ext] def reRank(vectors: DataFrame, short: Array[Array[(Double, Long)]],
+      topK: Int, ord: Ordering[(Double, Long)])(
+      score: (Int, Array[Float]) => Double): Array[Array[(Double, Long)]] = {
     val ids = short.iterator.flatMap(_.iterator.map(_._2)).toSet
-    val raw: Map[Long, Array[Array[Float]]] =
-      if (ids.isEmpty) Map.empty
+    val raw = if (ids.isEmpty) Map.empty[Long, Array[Array[Float]]]
       else vectors.select(col("vec_id"), col("embedding"))
         .filter(col("vec_id").isin(ids.toSeq: _*)).collect()
         .groupBy(_.getLong(0))
         .map { case (id, rs) => id -> rs.map(_.getSeq[Float](1).toArray) }
-    val byQuery = qs.indices.sortBy(qs(_)._1)
-    val rows = for {
-      j <- grid.indices
-      i <- byQuery
-      ((cos, id), r) <- short(i * g + j)
-        .flatMap { case (_, id) => raw.getOrElse(id, Array.empty[Array[Float]])
-          .map(v => (Quantizer.round(CosineSimilarity.cosine(qs(i)._2, v), 6), id)) }
-        .sorted(TopK.Descending).take(topK).zipWithIndex
-    } yield Row(grid(j), qs(i)._1, id, cos, r + 1)
-    spark.createDataFrame(rows.asJava, GridSchema)
+    short.zipWithIndex.map { case (list, l) =>
+      list.flatMap { case (_, id) =>
+        raw.getOrElse(id, Array.empty[Array[Float]]).map(v => (score(l, v), id))
+      }.sorted(ord).take(topK)
+    }
   }
 
   private val GridSchema = StructType(Seq(

@@ -152,7 +152,8 @@ object Quantizer {
     centers
   }
 
-  private def dist(v: Array[Float], off: Int, c: Array[Double]): Double = {
+  /** Squared L2 of `v(off until off + c.length)` − `c`, in double. */
+  private[ext] def dist(v: Array[Float], off: Int, c: Array[Double]): Double = {
     var d = 0.0
     var i = 0
     while (i < c.length) {

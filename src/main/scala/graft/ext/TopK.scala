@@ -3,13 +3,17 @@ package graft.ext
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.functions.CosineSimilarity
 
-/** Top-k per list in one pass — the IVF-PQ code scan, q61, the lexical
-  * arm and the exact cosine top-k: REPOSE's (ICDE 2021) per-partition
-  * local top-k with a global merge. Query-scale state is broadcast,
-  * corpus-scale state never reaches the driver, which merges at most
-  * partitions·lists·cap values.
+/** Top-k per list in one pass — the IVF-PQ and PQ code scans, q61, the
+  * lexical arm and the exact cosine top-k (q50, IVF): REPOSE's (ICDE
+  * 2021) per-partition local top-k with a global merge. Query-scale
+  * state is broadcast, corpus-scale state never reaches the driver,
+  * which merges at most partitions·lists·cap values.
   */
 object TopK {
 
@@ -64,4 +68,52 @@ object TopK {
         merged.map(_.hits.toArray.sorted(ord))
       } finally bc.destroy()
     }
+
+  /** A (q_id, q_emb) query frame, collected. */
+  private[graft] def queries(df: DataFrame): Array[(Long, Array[Float])] = {
+    import df.sparkSession.implicits._
+    df.select(col("q_id"), col("q_emb")).as[(Long, Array[Float])].collect()
+  }
+
+  /** Exact cosine top-k (the q50 kernel): one `pass` keeps, per q_id
+    * of `qs`, the `topK` rows of `corpus` (vec_id, embedding[, cell]) by
+    * (round(cosine, 6) desc, vec_id), skipping vec_id = q_id when
+    * `excludeSelf` and, with `admits`, cells c where `!admits(i)(c)`
+    * for query i. A local (q_id, vec_id, cos_r, rn) frame.
+    */
+  private[graft] def cosine(corpus: DataFrame, qs: Array[(Long, Array[Float])],
+      topK: Int, excludeSelf: Boolean,
+      admits: Option[Array[Array[Boolean]]] = None): DataFrame = {
+    import corpus.sparkSession.implicits._
+    val ids = qs.map(_._1).distinct.sorted
+    val at = qs.map(q => java.util.Arrays.binarySearch(ids, q._1))
+    val rows = corpus.select(col("vec_id"), col("embedding"),
+      if (admits.isEmpty) lit(0).as("cell") else col("cell"))
+    val tops = pass(rows.as[(Long, Array[Float], Int)].rdd,
+        (qs, at, admits.orNull), ids.length, topK, Descending) {
+        case ((qs, at, adm), part, tops) =>
+      part.foreach { case (id, v, cell) =>
+        var i = 0
+        while (i < qs.length) {
+          if (!(excludeSelf && qs(i)._1 == id) && (adm == null || adm(i)(cell)))
+            tops(at(i)).offer((Quantizer.round(CosineSimilarity.cosine(qs(i)._2, v), 6), id))
+          i += 1
+        }
+      }
+    }
+    frame(corpus.sparkSession, ids, tops)
+  }
+
+  /** Ranked lists as a local (q_id, vec_id, `score`, rn) frame in list
+    * order: list i holds `ids(i)`'s hits, best first.
+    */
+  private[graft] def frame(spark: SparkSession, ids: Seq[Long],
+      tops: Seq[Array[(Double, Long)]], score: String = "cos_r"): DataFrame = {
+    val rows = ids.indices.flatMap { i =>
+      tops(i).iterator.zipWithIndex.map { case ((d, v), r) => Row(ids(i), v, d, r + 1) }
+    }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("q_id", LongType), StructField("vec_id", LongType),
+      StructField(score, DoubleType), StructField("rn", IntegerType, nullable = false))))
+  }
 }

@@ -109,8 +109,7 @@ object EventOps {
     * serving join's window of exposure. Named build
     * `incident_intervals` under the bench accounting rule (the
     * warmPairKernel pattern), so the q167 row is deterministically
-    * join-only. 20 checkpointed rows — memory-free for all practical
-    * purposes; cleared by releaseCaches().
+    * join-only. 20 checkpointed rows, unpinned by releaseCaches().
     */
   private val incidentMemo =
     new graft.KeyedMemo[(SparkSession, String), DataFrame]
@@ -132,7 +131,9 @@ object EventOps {
     incidentIntervals(s, d); ()
   }
 
-  def releaseCaches(): Unit = incidentMemo.clear()
+  // drain, not clear: no racing build is missed, no block left to GC
+  def releaseCaches(): Unit =
+    incidentMemo.drain().foreach(graft.GraftEngine.unpinCheckpoints)
 
   val queries: Seq[GraftQuery] = Seq(
 

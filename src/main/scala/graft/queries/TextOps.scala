@@ -1310,7 +1310,7 @@ object TextOps {
         val ev = sh.filter(col("doc_id") % 20 === 0).select(col("sk")).distinct()
         // Both driver actions run on the EVAL side only — a benchmark
         // set is metadata-sized next to the corpus (the same posture as
-        // AnnIndex's k-row centroid count); the corpus is never counted
+        // AnnIndex's k-row centroid collect); the corpus is never counted
         // or collected.
         val nEval = math.max(ev.count(), 1L)
         val bytes = graft.functions.BloomMightContain.toBytes(

@@ -6,9 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.Fns._
-import graft.ext.{Quantizer, TopK}
+import graft.ext.TopK
 import graft.functions.CosineSimilarity
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Similarity search over the embeddings fixture (Array[Float], 64-d).
   *
@@ -63,7 +62,7 @@ object VectorOps {
       case i: graft.ext.IvfPq.Index => i.close()
       case i: graft.ext.PqIndex.Index => i.close()
       case df: DataFrame => df.unpersist(blocking = false) // knn graph
-      case _ => () // AnnIndex pins no cache; gbeam walks release below
+      case _ => () // AnnIndex pins no cache
     }
     // every checkpoint the graph adjacency builds made (base and adj)
     walkPinned.synchronized {
@@ -912,7 +911,7 @@ object VectorOps {
         .agg(count(lit(1)).as("cn")).collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       ProbeGrid.map { p =>
-        p -> qs.map(q => graft.ext.IvfPq.probe(index, q, p)
+        p -> qs.map(q => graft.ext.IvfPq.probe(index.quantizers.cents, q, p)
           .map(sizes.getOrElse(_, 0L)).sum).sum / qs.length.toDouble
       }.toMap
     }
@@ -964,39 +963,13 @@ object VectorOps {
     e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
 
-  /** Exact cosine top-k (the q50 kernel): per query (q_id, q_emb), the
-    * `topK` vectors of `corpus` (vec_id, embedding) by (round(cosine, 6)
-    * desc, vec_id) in Spark's double order (a zero vector's NaN first),
-    * skipping vec_id = q_id when `excludeSelf` — the rows of the
-    * broadcast-join/window plan ExactKernelSpec keeps as the reference.
-    * One `TopK.pass`, after the query collect (none for a local frame);
-    * a local (q_id, vec_id, cos_r, rn) frame in (q_id, rn) order.
+  /** Exact cosine top-k (the q50 kernel) of `queries` (q_id, q_emb)
+    * over `corpus`: `TopK.cosine` after the query collect (none for a
+    * local frame).
     */
   private[graft] def exactTopKOf(corpus: DataFrame, queries: DataFrame,
-      topK: Int, excludeSelf: Boolean = true): DataFrame = {
-    val s = corpus.sparkSession
-    import s.implicits._
-    val qs = queries.select(col("q_id"), col("q_emb")).as[(Long, Array[Float])].collect()
-    val ids = qs.map(_._1).distinct.sorted
-    // each query row's list: one list per q_id, as the window partitions
-    val at = qs.map(q => java.util.Arrays.binarySearch(ids, q._1))
-    val tops = TopK.pass(corpus.select(col("vec_id"), col("embedding"))
-        .as[(Long, Array[Float])].rdd, (qs, at), ids.length, topK, TopK.Descending) {
-        case ((qs, at), rows, tops) =>
-      rows.foreach { case (id, v) =>
-        var i = 0
-        while (i < qs.length) {
-          if (!(excludeSelf && qs(i)._1 == id))
-            tops(at(i)).offer((Quantizer.round(CosineSimilarity.cosine(qs(i)._2, v), 6), id))
-          i += 1
-        }
-      }
-    }
-    val rows = ids.indices.flatMap { i =>
-      tops(i).iterator.zipWithIndex.map { case ((cos, v), r) => Row(ids(i), v, cos, r + 1) }
-    }
-    s.createDataFrame(rows.asJava, ArmSchema)
-  }
+      topK: Int, excludeSelf: Boolean = true): DataFrame =
+    TopK.cosine(corpus, TopK.queries(queries), topK, excludeSelf)
 
   /** Recall-targeted serving across ALL arms: serve `queries` from
     * whichever measured operating point `annArmAuto` picked on the
@@ -1021,18 +994,12 @@ object VectorOps {
         val (topk, _) = graphWalkGrid(s, base, adj, qg,
           Seq((pick.p1, pick.p2)), hops = 4, finalK = topK)
         // the walk's frame is local: rank it on the driver
-        val rows = topk.select(col("q_id"), col("vec_id"), col("cos_r")).collect()
-          .groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (q, rs) =>
-            rs.map(r => (r.getDouble(2), r.getLong(1))).sorted(TopK.Descending)
-              .zipWithIndex.map { case ((cos, v), r) => Row(q, v, cos, r + 1) }
-          }
-        s.createDataFrame(rows.asJava, ArmSchema)
+        val byQ = topk.select(col("q_id"), col("vec_id"), col("cos_r")).collect()
+          .groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+        TopK.frame(s, byQ.map(_._1), byQ.map(_._2
+          .map(r => (r.getDouble(2), r.getLong(1))).sorted(TopK.Descending)))
     }
   }
-
-  private val ArmSchema = StructType(Seq(
-    StructField("q_id", LongType), StructField("vec_id", LongType),
-    StructField("cos_r", DoubleType), StructField("rn", IntegerType, nullable = false)))
 
   /** Bench build step for the cross-arm table: both regimes' graph
     * grid walks + IVF probe-cost tables (their prerequisites —
@@ -1502,13 +1469,12 @@ object VectorOps {
 
     GraftQuery(
       "q79_ivf_topk",
-      "Trained-IVF ANN serving query (ext.AnnIndex): 16 seeded k-means centroids (k-means++ then Lloyd, trained on the driver from a sample of at most 256 vectors per centroid) partition the corpus into cells; each query (vec_id < 10) probes only its nProbe most-similar cells and ranks candidates exactly. The 100 TB ANN path: centroids broadcast, a probe touches ~nProbe/k of the corpus, and cell-partitioned persistence prunes files. No SQL oracle — k-means cell boundaries aren't SQL-expressible — so the driver records rows-only; AnnIndexSpec pins exact-equivalence at full probe and a recall floor vs the q50 brute-force baseline (recall@5 at nProbe=8 observed 0.80 at sf0.001, 0.78 at sf0.01).",
+      "Trained-IVF ANN serving query (ext.AnnIndex): 16 seeded k-means centroids (k-means++ then Lloyd, trained on the driver from a sample of at most 256 vectors per centroid) partition the corpus into cells; each query (vec_id < 10) probes only its nProbe most-similar cells and ranks candidates exactly. The 100 TB ANN path: centroids stay on the driver, a probe touches ~nProbe/k of the corpus, and cell-partitioned persistence prunes files. No SQL oracle — k-means cell boundaries aren't SQL-expressible — so the driver records rows-only; AnnIndexSpec pins exact-equivalence at full probe and a recall floor vs the q50 brute-force baseline (recall@5 at nProbe=8 observed 0.80 at sf0.001, 0.78 at sf0.01).",
       (s, d) => {
         val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val index = served(s, d, "ivf") { graft.ext.AnnIndex.build(s, e, k = 16) }
         val q = probeQueries(e)
         graft.ext.AnnIndex.search(index, q, topK = 5, nProbe = 8)
-          .orderBy(col("q_id"), col("rn"))
       },
       None),
 
@@ -1522,7 +1488,6 @@ object VectorOps {
         val index = served(s, d, "pq") { graft.ext.PqIndex.build(s, e, dim = 64) }
         val q = probeQueries(e)
         graft.ext.PqIndex.searchReRanked(index, e, q, topK = 5)
-          .orderBy(col("q_id"), col("rn"))
       },
       None),
 

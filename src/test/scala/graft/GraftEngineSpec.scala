@@ -31,6 +31,21 @@ class GraftEngineSpec extends SparkSpec {
     engine.releaseCaches()
   }
 
+  test("releaseCaches unpins the incident table's checkpoint blocks") {
+    val incidents = queries.EventOps.incidentIntervals(spark, sfDir)
+    val ids = incidents.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    val sc = spark.sparkContext
+    def held = ids.map(org.apache.spark.graft.RddBlocks.count(sc, _)).sum
+    assert(ids.nonEmpty && held > 0, s"no checkpoint blocks for rdds $ids")
+    queries.EventOps.releaseCaches()
+    // the unpin is asynchronous: wait for the removal to land
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (held > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(held === 0, s"checkpoint blocks of rdds $ids outlive releaseCaches()")
+  }
+
   test("native functions are registered through the facade") {
     val r = engine.table("embeddings").limit(5)
       .select(expr("cosine_sim(embedding, embedding)").as("c")).collect()

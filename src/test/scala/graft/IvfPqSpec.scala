@@ -77,7 +77,7 @@ class IvfPqSpec extends SparkSpec {
     // at nProbe = 3 of 8 probes a strict subset of the cells.
     val q0 = queries.filter(col("q_id") === 0).collect()
       .map(_.getSeq[Float](1).toArray).head
-    val cells = IvfPq.probe(loaded, Quantizer.unit(q0), 3).toSeq.sorted
+    val cells = IvfPq.probe(loaded.quantizers.cents, Quantizer.unit(q0), 3).toSeq.sorted
     assert(cells.length === 3)
     val scan = IvfPq.candidates(loaded, cells).queryExecution.sparkPlan
       .collectFirst { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }

@@ -11,8 +11,8 @@ trait SparkSpec extends AnyFunSuite {
   // under heap pressure shut the shared SparkContext down in the
   // round-17 driver gate and every LATER suite died with "SparkContext
   // has been shutdown") now costs at most the suite that hit it — the
-  // next suite's access rebuilds the session.
-  lazy val spark: SparkSession = SparkSpec.session
+  // next suite's access rebuilds the session, naming itself.
+  lazy val spark: SparkSession = SparkSpec.session(suiteName)
   val sfDir = "/root/testdata/sf0.001"
 
   /** Plan-shape assertions need AQE off: `AdaptiveSparkPlanExec` is a
@@ -64,19 +64,27 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   @volatile private var cached: SparkSession = _
+  @volatile private var rebuilds = 0
+
+  // a context death must not pass silently: the run's tail says how
+  // many times the session was rebuilt
+  sys.addShutdownHook(System.err.println(s"[SparkSpec] session rebuilds: $rebuilds"))
 
   /** The shared suite session, rebuilt if the previous one's context
     * was stopped (fail-fast recovery instead of cascading every later
     * suite's assertions into "SparkContext has been shutdown"). Memo
     * entries keyed on the dead session are simply never hit again —
-    * their blocks died with the old context's BlockManager.
+    * their blocks died with the old context's BlockManager. `suite`
+    * names the suite that found the context stopped.
     */
-  def session: SparkSession = synchronized {
+  def session(suite: String): SparkSession = synchronized {
     if (cached == null || cached.sparkContext.isStopped) {
-      if (cached != null)
+      if (cached != null) {
+        rebuilds += 1
         System.err.println("[SparkSpec] shared SparkContext was stopped — " +
-          "rebuilding the suite session (state memoized on the dead " +
-          "session is dropped)")
+          s"rebuilding the suite session for $suite (state memoized on " +
+          "the dead session is dropped)")
+      }
       cached = build()
     }
     cached
@@ -89,6 +97,17 @@ object SparkSpec {
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // every deliberate checkpoint unpin logs "RDD n was locally
+    // checkpointed, its lineage has been truncated …" at WARN under the
+    // concrete RDD class's logger: deny that one message, keep the rest
+    import org.apache.logging.log4j.core.{Filter, LoggerContext}
+    val logs = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext]
+    logs.getConfiguration.getRootLogger.addFilter(
+      org.apache.logging.log4j.core.filter.StringMatchFilter.newBuilder()
+        .setMatchString("was locally checkpointed, its lineage has been truncated")
+        .setOnMatch(Filter.Result.DENY).setOnMismatch(Filter.Result.NEUTRAL).build())
+    logs.updateLoggers()
     // Deep-iteration ALS (reference config: maxIter 40) checkpoints its
     // factor RDDs every 10 iters to truncate lineage — without a
     // checkpoint dir the lineage grows unbounded and task
